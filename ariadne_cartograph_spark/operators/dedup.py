@@ -35,28 +35,12 @@ _LIVE_CACHES: list[DataFrame] = []
 
 
 def _track_persist(df: DataFrame) -> DataFrame:
-    import os
-
     from pyspark import StorageLevel
 
     # Shingle frames are hot but small relative to executor memory;
     # deserialized memory-only avoids paying disk-spill serialization
-    # for frames cheap to recompute. Overridable for profiling.
-    level_name = os.environ.get("SPARK_GRAFT_PERSIST_LEVEL", "MEMORY_ONLY")
-    if level_name == "NONE":
-        return df
-    level = getattr(StorageLevel, level_name, None)
-    if not isinstance(level, StorageLevel):
-        import warnings
-
-        warnings.warn(
-            f"SPARK_GRAFT_PERSIST_LEVEL={level_name!r} is not a pyspark "
-            "StorageLevel (e.g. MEMORY_ONLY, MEMORY_AND_DISK, DISK_ONLY, "
-            "or NONE to disable); falling back to MEMORY_ONLY",
-            stacklevel=2,
-        )
-        level = StorageLevel.MEMORY_ONLY
-    cached = df.persist(level)
+    # for frames cheap to recompute.
+    cached = df.persist(StorageLevel.MEMORY_ONLY)
     _LIVE_CACHES.append(cached)
     return cached
 
@@ -613,30 +597,21 @@ def _ngram_rep_pairs(
     never be emitted — see _expand_collapsed_pairs)."""
     df, member = _exact_dup_collapse(df, id_col, text_col)
     sh = _shingle_frame(df, id_col, text_col, shingle_size)
-    # Skew stats are measured POST-collapse (so the rule sees real
-    # shingle skew, not duplication inflation) and memoized by the
-    # routing frame's plan hash: a warm call (bench's min-of-3 loop,
-    # the parity harness) routes with ZERO probe jobs, and on the
-    # count route the frequency table is then never built at all.
-    skey = _plan_key(df, text_col, shingle_size)
-    stats = _SHINGLE_STATS_CACHE.get(skey) if skey is not None else None
-    freq = None
-    if stats is None:
-        exploded = sh.select(F.col(id_col), "n_sh", F.explode("sh").alias("g"))
-        # persisted: the df table feeds BOTH the stats action below and
-        # the prefix path's rank join — without it the explode+groupBy
-        # runs twice
-        freq = _track_persist(
-            exploded.groupBy("g").agg(F.count(F.lit(1)).alias("df_g"))
-        )
-        row = freq.agg(
-            F.max("df_g").alias("max_df"),
-            F.sum("df_g").alias("total"),
-            F.sum(F.col("df_g") * F.col("df_g")).alias("sum_sq"),
-        ).first()
-        stats = ((row["max_df"] or 0), (row["total"] or 0), (row["sum_sq"] or 0))
-        _cache_put(_SHINGLE_STATS_CACHE, skey, stats)
-    max_df, total, sum_sq = stats
+    # Skew stats are measured POST-collapse, so the rule sees real
+    # shingle skew, not duplication inflation: one probe job per call.
+    exploded = sh.select(F.col(id_col), "n_sh", F.explode("sh").alias("g"))
+    # persisted: the df table feeds BOTH the stats action below and
+    # the prefix path's rank join — without it the explode+groupBy
+    # runs twice
+    freq = _track_persist(
+        exploded.groupBy("g").agg(F.count(F.lit(1)).alias("df_g"))
+    )
+    row = freq.agg(
+        F.max("df_g").alias("max_df"),
+        F.sum("df_g").alias("total"),
+        F.sum(F.col("df_g") * F.col("df_g")).alias("sum_sq"),
+    ).first()
+    max_df, total, sum_sq = (row["max_df"] or 0), (row["total"] or 0), (row["sum_sq"] or 0)
     if ngram_join_strategy(max_df, total, sum_sq) == "prefix":
         rep_pairs = ngram_jaccard_pairs_prefix(
             df, id_col, text_col, shingle_size, threshold, _sh=sh, _freq=freq
@@ -711,8 +686,8 @@ def ngram_jaccard_join_two_tables(
     collapse, so every expanded pair's jaccard equals its rep pair's).
     Lossless: dup-free sides skip both the collapse and the expansion.
     """
-    # Both sides' gate probes run as ONE combined job on a cold call
-    # (and zero jobs on a warm plan-hash hit — see _dup_gate_stats).
+    # Both sides' gate probes run as ONE combined job per call (see
+    # _dup_gate_stats).
     gate_l, gate_r = _dup_gate_stats([(left, text_col), (right, text_col)])
     left_r, member_l = _exact_dup_collapse(left, left_id, text_col, _stats=gate_l)
     right_r, member_r = _exact_dup_collapse(right, right_id, text_col, _stats=gate_r)
@@ -918,36 +893,6 @@ def simhash_md5(df: DataFrame, text_col: str, out_col: str = "sim_bits") -> Data
 # 2.77→3.80 s from an unconditional collapse on a dup-free corpus).
 _COLLAPSE_MIN_DUP_RATIO = 0.02
 
-# Probe-statistics memos, same contract as similarity._PAIR_COUNT_CACHE
-# (the r11 verdict asked for that pattern here): the measured stats only
-# PICK between lossless physical plans — collapse vs no collapse, prefix
-# vs count join — so a cached (or in the worst case stale) entry can
-# never change results, only the plan shape. Keyed on the input plan's
-# semanticHash, so repeated calls on the same logical plan (bench's
-# min-of-3 loop, the parity harness, multi-stage pipelines reusing a
-# corpus) route with ZERO extra Spark jobs.
-_DUP_GATE_CACHE: dict[tuple, tuple[int, int]] = {}
-_SHINGLE_STATS_CACHE: dict[tuple, tuple[int, int, int]] = {}
-_STATS_CACHE_MAX = 256
-
-
-def _plan_key(df: DataFrame, *extra):
-    """semanticHash-based memo key; None when the plan refuses to hash
-    (then the probe job just runs)."""
-    try:
-        return (df.semanticHash(), *extra)
-    except Exception:
-        return None
-
-
-def _cache_put(cache: dict, key, value) -> None:
-    if key is None:
-        return
-    if len(cache) >= _STATS_CACHE_MAX:
-        cache.pop(next(iter(cache)))
-    cache[key] = value
-
-
 def _dup_gate_agg(df: DataFrame, text_col: str, suffix: str = ""):
     """The 1-row duplication-gate aggregate: (count, countDistinct) of
     the corpus' xxhash64 text fingerprints. xxhash64 is cheaper than
@@ -964,31 +909,18 @@ def _dup_gate_agg(df: DataFrame, text_col: str, suffix: str = ""):
 def _dup_gate_stats(
     frames: list[tuple[DataFrame, str]],
 ) -> list[tuple[int, int]]:
-    """(n rows, n distinct text fingerprints) for each (df, text_col),
-    memoized by semantic plan hash. All cache misses run as ONE
-    combined Spark job (1-row aggregates crossJoined), so the
-    two-sided decontamination join pays one probe, not two, and bench
-    repeats pay none."""
-    out: list = [None] * len(frames)
-    misses: list[int] = []
+    """(n rows, n distinct text fingerprints) for each (df, text_col).
+    All frames run as ONE combined Spark job (1-row aggregates
+    crossJoined): one probe job per call, so the two-sided
+    decontamination join pays one probe, not two."""
+    probe = None
     for i, (df, text_col) in enumerate(frames):
-        key = _plan_key(df, text_col)
-        hit = _DUP_GATE_CACHE.get(key) if key is not None else None
-        if hit is not None:
-            out[i] = hit
-        else:
-            misses.append(i)
-    if misses:
-        probe = None
-        for i in misses:
-            agg = _dup_gate_agg(frames[i][0], frames[i][1], suffix=f"_{i}")
-            probe = agg if probe is None else probe.crossJoin(agg)
-        row = probe.first()
-        for i in misses:
-            stats = ((row[f"n_{i}"] or 0), (row[f"n_fp_{i}"] or 0))
-            out[i] = stats
-            _cache_put(_DUP_GATE_CACHE, _plan_key(frames[i][0], frames[i][1]), stats)
-    return out
+        agg = _dup_gate_agg(df, text_col, suffix=f"_{i}")
+        probe = agg if probe is None else probe.crossJoin(agg)
+    row = probe.first()
+    return [
+        ((row[f"n_{i}"] or 0), (row[f"n_fp_{i}"] or 0)) for i in range(len(frames))
+    ]
 
 
 def _exact_dup_collapse(
@@ -1017,9 +949,9 @@ def _exact_dup_collapse(
 
     ``_stats``: precomputed (n, n_fp) gate statistics — callers that
     fold the gate probe into a larger combined job (the auto router,
-    the two-table join) pass them in; otherwise the memoized probe
-    runs (~0.3 s cold at sf0.1, zero jobs on a plan-hash hit, vs ~1 s
-    of collapse + expansion joins it saves on dup-free corpora).
+    the two-table join) pass them in; otherwise one probe job per call
+    runs (~0.3 s at sf0.1, vs ~1 s of collapse + expansion joins it
+    saves on dup-free corpora).
     """
     if _stats is None:
         (_stats,) = _dup_gate_stats([(df, text_col)])
@@ -1417,7 +1349,7 @@ def remove_repeated_spans(
     O(#repeated-starts·16), independent of token text size.
 
     GATED exact-duplicate doc collapse (the family's standard gate —
-    ``_exact_dup_collapse`` pattern, measured + memoized probe): on
+    ``_exact_dup_collapse`` pattern, one probe job per call): on
     duplicated corpora (crawl data; the 10× sf1 replica is the
     by-construction worst case) every copy of a text re-pays the window
     explode, the gram groupBy and the md5 rebuild. When the probe

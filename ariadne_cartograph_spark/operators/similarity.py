@@ -15,6 +15,9 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import re
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -57,8 +60,8 @@ def cosine_topk(
     with column math (best for small pair counts); ``"blocked"`` runs
     the blocked-GEMM kernel (see :func:`_cosine_topk_blocked`);
     ``"auto"`` (default) routes at BLOCKED_TOPK_MIN_PAIRS pairs from
-    parquet-footer statistics where they decide, else one memoized
-    count job — both plans are exact and (under the f32 policy)
+    parquet-footer statistics where they decide, else one probe job
+    per call — both plans are exact and (under the f32 policy)
     hash-identical, so the choice is physical only. The blocked path
     needs integral ids; non-integral ids always take the crossjoin
     path.
@@ -117,39 +120,12 @@ _ROW_PRESERVING_NODES = {
 }
 
 
-# Footer-statistics memo, same contract as _PAIR_COUNT_CACHE: row
-# counts only pick between two exact plans, so a stale entry can never
-# change results. Saves the per-call footer reads + plan stringification
-# when the same logical plan routes repeatedly.
-_FOOTER_CACHE: dict[int, tuple[int | None, int | None]] = {}
-_FOOTER_CACHE_MAX = 256
-
-
 def _footer_rows(df: DataFrame) -> tuple[int | None, int | None]:
     """(exact, upper) row counts from local parquet footers — the
     ANALYZE-statistics answer, ZERO Spark jobs. Exact when the
     optimized plan is a bare file relation; an upper bound when only
     row-reducing nodes sit on top; (None, None) for any other plan
-    shape, non-parquet or non-local files. Memoized by semantic plan
-    hash."""
-    import re
-    from urllib.parse import unquote, urlparse
-
-    try:
-        key = df.semanticHash()
-    except Exception:
-        key = None
-    if key is not None and key in _FOOTER_CACHE:
-        return _FOOTER_CACHE[key]
-    out = _footer_rows_uncached(df, re, unquote, urlparse)
-    if key is not None:
-        if len(_FOOTER_CACHE) >= _FOOTER_CACHE_MAX:
-            _FOOTER_CACHE.pop(next(iter(_FOOTER_CACHE)))
-        _FOOTER_CACHE[key] = out
-    return out
-
-
-def _footer_rows_uncached(df, re, unquote, urlparse):
+    shape, non-parquet or non-local files."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         names: set[str] = set()
@@ -186,7 +162,7 @@ def _route_topk(
     hash-identical — this is a plan decision only). Order of cheapness:
     a caller cardinality hint plus footer statistics, footer statistics
     alone (exact counts, or upper bounds that cannot reach the blocked
-    zone) — both jobless — otherwise ONE combined, memoized count job
+    zone) — both jobless — otherwise one probe job per call
     (:func:`_pair_counts`)."""
     c_exact, c_ub = _footer_rows(corpus)
     q_exact, q_ub = _footer_rows(queries)
@@ -202,39 +178,16 @@ def _route_topk(
     return "blocked" if n_c * n_q >= threshold else "crossjoin"
 
 
-# Gate-count memo keyed on the two plans' semanticHash: the auto router
-# only needs row counts to PICK a physical strategy (both routes are
-# exact and hash-identical), so a cached — or in the worst case stale —
-# count can never change results, only the plan shape. This mirrors
-# Spark's own CBO statistics caching and makes repeated calls on the
-# same logical plans (bench loops, multi-stage pipelines reusing a
-# corpus) route with ZERO extra Spark jobs.
-_PAIR_COUNT_CACHE: dict[tuple[int, int], tuple[int, int]] = {}
-_PAIR_COUNT_CACHE_MAX = 256
-
-
 def _pair_counts(corpus: DataFrame, queries: DataFrame) -> tuple[int, int]:
     """Row counts of both sides in ONE Spark job (two 1-row aggregates
-    cross-joined) instead of two `.count()` actions, memoized by
-    semantic plan hash — the r6 verdict's fence-creep item: the auto
-    gate was costing two scheduler round-trips per call."""
-    try:
-        key = (corpus.semanticHash(), queries.semanticHash())
-    except Exception:  # plans that refuse to hash: just run the job
-        key = None
-    if key is not None and key in _PAIR_COUNT_CACHE:
-        return _PAIR_COUNT_CACHE[key]
+    cross-joined) instead of two `.count()` actions: one probe job per
+    call, not two scheduler round-trips."""
     row = (
         corpus.agg(F.count(F.lit(1)).alias("__n_c"))
         .crossJoin(queries.agg(F.count(F.lit(1)).alias("__n_q")))
         .collect()[0]
     )
-    out = (row["__n_c"], row["__n_q"])
-    if key is not None:
-        if len(_PAIR_COUNT_CACHE) >= _PAIR_COUNT_CACHE_MAX:
-            _PAIR_COUNT_CACHE.pop(next(iter(_PAIR_COUNT_CACHE)))
-        _PAIR_COUNT_CACHE[key] = out
-    return out
+    return (row["__n_c"], row["__n_q"])
 
 
 def _is_integral_id(df: DataFrame, col: str) -> bool:
@@ -866,13 +819,6 @@ def embedding_near_dup_pairs(
 _VEC_COLLAPSE_MIN_DUP_RATIO = 0.02
 _VEC_COLLAPSE_MAX_THRESHOLD = 0.99
 
-# Memoized (n_rows, n_reps) per corpus plan — same contract as
-# _PAIR_COUNT_CACHE: the stats only pick between lossless physical
-# plans. Also supplies the row count the block-grid sizing used to pay
-# a separate corpus.count() action for.
-_VEC_STATS_CACHE: dict[tuple, tuple[int, int]] = {}
-_VEC_STATS_CACHE_MAX = 256
-
 
 def _vec_collapse_cols(id_col: str, vec_col: str):
     """(__nz, __fp) grouping columns for the vector collapse. Non-zero
@@ -895,25 +841,14 @@ def _vec_collapse_cols(id_col: str, vec_col: str):
 
 
 def _vec_dup_stats(corpus: DataFrame, id_col: str, vec_col: str) -> tuple[int, int]:
-    """(row count, distinct-vector/rep count) in ONE 1-row Spark job,
-    memoized by semantic plan hash."""
-    try:
-        key = (corpus.semanticHash(), id_col, vec_col)
-    except Exception:
-        key = None
-    if key is not None and key in _VEC_STATS_CACHE:
-        return _VEC_STATS_CACHE[key]
+    """(row count, distinct-vector/rep count): one 1-row probe job per
+    call. The row count also sizes the block grid."""
     nz, fp = _vec_collapse_cols(id_col, vec_col)
     row = corpus.select(nz, fp).agg(
         F.count(F.lit(1)).alias("__n"),
         F.countDistinct("__nz", "__fp").alias("__n_reps"),
     ).first()
-    out = (row["__n"], row["__n_reps"])
-    if key is not None:
-        if len(_VEC_STATS_CACHE) >= _VEC_STATS_CACHE_MAX:
-            _VEC_STATS_CACHE.pop(next(iter(_VEC_STATS_CACHE)))
-        _VEC_STATS_CACHE[key] = out
-    return out
+    return (row["__n"], row["__n_reps"])
 
 
 def semantic_dedup(
@@ -966,7 +901,7 @@ def semantic_dedup(
     cents = [[float(x) for x in r[vec_col]] for r in cent_rows]
 
     # Exact-duplicate vector collapse, gated on MEASURED duplication
-    # (one memoized 1-row job — overlapped with the centroid take
+    # (one probe job per call — overlapped with the centroid take
     # above — that also supplies the block-grid row count below). On
     # k-fold-replicated corpora every duplicate inflates the dominant
     # cell's block count, and every block's vector list ships once per

@@ -157,16 +157,11 @@ PIP_BROADCAST_MAX_POLYGONS = 25_000
 # ~100 KB of cell structs per row at worst.
 PIP_MAX_CELLS_PER_POLYGON = 4_096
 
-# Row-count memo for the routing gate, same contract as
-# similarity._PAIR_COUNT_CACHE: a stale count can only mis-pick between
-# two exact plans, never change results.
-_PIP_COUNT_CACHE: dict[int, int] = {}
-
 
 def _polygon_rows(polygons: DataFrame, hint: int | None) -> int:
     """Polygon-side cardinality for routing: caller hint, else parquet
     footer statistics (zero jobs — the cosine_topk footer-stats gate),
-    else ONE memoized count job."""
+    else one probe job per call (a count)."""
     from .similarity import _footer_rows
 
     if hint is not None:
@@ -176,18 +171,7 @@ def _polygon_rows(polygons: DataFrame, hint: int | None) -> int:
         return exact
     if upper is not None and upper <= PIP_BROADCAST_MAX_POLYGONS:
         return upper  # even the pessimistic bound fits the broadcast
-    try:
-        key = polygons.semanticHash()
-    except Exception:
-        key = None
-    if key is not None and key in _PIP_COUNT_CACHE:
-        return _PIP_COUNT_CACHE[key]
-    n = polygons.count()
-    if key is not None:
-        if len(_PIP_COUNT_CACHE) >= 256:
-            _PIP_COUNT_CACHE.pop(next(iter(_PIP_COUNT_CACHE)))
-        _PIP_COUNT_CACHE[key] = n
-    return n
+    return polygons.count()
 
 
 def _pip_filtered(cand: DataFrame, lng: str, lat: str) -> DataFrame:
@@ -227,7 +211,7 @@ def points_in_polygons(
     sides into grid cells — the billion-polygon regime (census blocks,
     land parcels) where no broadcast fits; ``"auto"`` (default) routes
     at PIP_BROADCAST_MAX_POLYGONS from a caller hint or parquet-footer
-    statistics (zero jobs), else one memoized count job. Both routes
+    statistics (zero jobs), else one probe job per call. Both routes
     produce identical rows (route equality test-pinned); the choice is
     physical only.
 

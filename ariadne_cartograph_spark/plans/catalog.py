@@ -71,496 +71,22 @@ def _load_all() -> None:
 # window), not redundant capability.
 DRIVER_WINDOW = 50
 
-# r9 rotation (the big sweep): after r1-r8 the cumulative set of
-# entries that have EVER received a driver hash stood at 91 of 158.
-# This window keeps only the 9 "anchor" entries that are the sole
-# oracled carriers of their tags (A2/A3 + J2/P7/S2/S3 →
-# ways_enrichment_pipeline, A4 → q1, P1 → q6, J5 → merge_upsert_metadata,
-# T3 → events_stream_batch_parity, T6 → docs_incremental_dedup_parity,
-# P3 → scalar_json_extract, W5 → set_union_all_counts, S7 →
-# osm_ingest_feature_tables) and fills the other 41 slots with entries
-# that have never been driver-hashed — including geo_line_simplify,
-# the only P2 carrier, red in test_catalog_window since r7. The 26
-# never-hashed entries still outside (text/corpus/embedding family)
-# rotate in at r10, completing the 158/158 cumulative sweep.
-# (Retired: kept as the r9 record; the live binding is the
-# `WINDOW_ORDER = WINDOW_ORDER_R10` assignment below.)
-WINDOW_ORDER_R9: list[str] = [
-    # anchors: sole oracled carriers of their §2 tags (see above)
-    "q1_pricing_summary",
-    "q6_forecast_revenue",
-    "ways_enrichment_pipeline",
-    "merge_upsert_metadata",
-    "events_stream_batch_parity",
-    "docs_incremental_dedup_parity",
-    "scalar_json_extract",
-    "set_union_all_counts",
-    "osm_ingest_feature_tables",
-    # P2's only carrier — first driver hash ever (r7/r8 verdict item 1)
-    "geo_line_simplify",
-    # the 14 TPC-H shapes that never rotated in (J6/A5/W1/W4/P14)
-    "q2_min_cost_supplier",
-    "q4_order_priority",
-    "q7_nation_volume",
-    "q8_market_share",
-    "q9_product_profit",
-    "q11_important_parts",
-    "q12_late_by_priority",
-    "q13_order_count_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_revenue",
-    "q20_promotion_suppliers",
-    "q21_waiting_supplier",
-    "q22_wealthy_inactive",
-    # iterative / routing graph algorithms (J6/A5, S8)
-    "graph_pagerank_trading",
-    "osm_route_cost_matrix",
-    "osm_route_bfs_reach",
-    # streaming parity entries never hash-checked by the driver
-    # (T1/T2/T4/T5/S11/J6/U3)
-    "events_stream_enrich_parity",
-    "events_stream_interval_join_parity",
-    "docs_stream_topk_parity",
-    # event analytics (A5/W3/T2, A1/U3 exact quantiles)
-    "events_funnel_conversion",
-    "events_cohort_retention",
-    "events_exact_quantiles",
-    # OSM / geo surface never hash-checked (S6/P12/E1/P5/P6/S10/J4/P13/P14)
-    "osm_style_feature_tables",
-    "osm_route_members",
-    "osm_ways_enrichment_fixture",
-    "geo_zorder_key",
-    "geo_point_in_polygon",
-    "osm_polygon_way_area",
-    "osm_tag_key_frequency",
-    # MERGE sink variants (S4/J1/J6/A5): CDC change feed, snapshot
-    # diff, metadata-only stats maintenance
-    "merge_change_feed",
-    "snapshot_change_feed",
-    # S9-substitute evidence (tag-key presence index) — its S4/A5
-    # alternative merge_stats_metadata_only moved to the r10 window
-    "scan_tag_index_pruned",
-    # aggregate surface probes (A5/T2)
-    "agg_grouping_structures",
-    "agg_approx_percentile",
-    "agg_hll_sketch_union",
-    # LLM-pipeline entries never hash-checked (W6/U4, U5/W3)
-    "decontamination_overlap",
-    "corpus_sequence_pack",
-]
-
-
-# Round-10 window, PRE-STAGED (r9 insurance against an empty round:
-# next round's rotation is `WINDOW_ORDER = WINDOW_ORDER_R10`, one
-# line). Same 9 anchors; the 27 entries that will then be the only
-# ones never driver-hashed (cumulative r1-r9 union = 132 of 161);
-# geo_line_simplify / osm_poi_nearest_edge / events_stream_dedup_parity
-# carry P2/J4/T4 (whose never-hashed carriers run out); the tail picks
-# hashed-exactly-once window/subquery/join/topk shapes. Invariants
-# (size, tag coverage, oracles) are asserted by
-# tests/test_catalog_window.py for THIS list too, so the swap cannot
-# break the suite. After r10 the cumulative driver-hashed union is
-# 161/161.
-WINDOW_ORDER_R10: list[str] = [
-    "q1_pricing_summary",
-    "q6_forecast_revenue",
-    "ways_enrichment_pipeline",
-    "merge_upsert_metadata",
-    "events_stream_batch_parity",
-    "docs_incremental_dedup_parity",
-    "scalar_json_extract",
-    "set_union_all_counts",
-    "osm_ingest_feature_tables",
-    "ngram_containment_pairs",
-    "similarity_ann_ivf_trained",
-    "embedding_pq_encode",
-    "embedding_pq_adc_topk",
-    "embedding_label_norms",
-    "text_tfidf_probe_terms",
-    "text_token_shards",
-    "text_chunking",
-    "embedding_int8_quantize",
-    "corpus_domain_mixture_sample",
-    "corpus_hash_split",
-    "corpus_stratified_sample",
-    "text_normalized_exact_dedup",
-    "text_chunk_dedup",
-    "embedding_knn_label_vote",
-    "text_vocab_coverage",
-    "corpus_leakage_safe_split",
-    "text_token_topk_sketch",
-    "corpus_importance_resample",
-    "text_bpe_corpus_encode",
-    "text_repetition_profile",
-    "text_unigram_logprob",
-    "text_repeated_spans",
-    "corpus_multimodal_curation",
-    "corpus_domain_cap",
-    "text_quality_logreg",
-    "osm_topology_mapconfig",
-    "geo_line_simplify",
-    "osm_poi_nearest_edge",
-    "events_stream_dedup_parity",
-    "window_range_frame",
-    "window_rank_variants",
-    "window_topn_per_group",
-    "subquery_above_avg_orders",
-    "subquery_correlated_max_item",
-    "subquery_exists_waiting_orders",
-    "join_anti_customers_without_orders",
-    "join_outer_customer_order_stats",
-    "merge_stats_metadata_only",
-    "scan_tag_index_pruned",
-    # r9 addition, never hashed: the OsmChange incremental diff path
-    # (its W4-carrying alternative topk_orders_by_price is hashed once
-    # already and W4 rides text_token_topk_sketch in this window)
-    "osm_diff_incremental_parity",
-]
-
-# Round 10: the pre-staged rotation went live and the full window was
-# driver-hashed green (CORRECTNESS_r10.json 50/50).
-
-# Round-11 window, PRE-STAGED (same insurance pattern as r9→r10):
-# with the cumulative sweep complete after r10, rotation switches to
-# EVIDENCE REFRESH — same 9 anchors, then the entries whose only
-# driver hash is oldest (the 30-entry r1 cohort + r3/r5/r6 + part of
-# the r8 cohort, computed from CORRECTNESS_r0*.json), plus the 7
-# entries that must re-appear because they are the only oracled
-# carriers of their tags (P2/S8/S9/T4/U3/W1 + J4's r8 carrier).
-# Invariants asserted by tests/test_catalog_window.py for this list
-# too. Amended at r11 start per the r10 verdict: the brand-new
-# osm_replication_pipeline_parity (the only entry never driver-hashed)
-# joins the window; scalar_case_when drops to stay at 50 (its P14 tag
-# remains triple-covered in-window by scalar_json_extract /
-# scalar_date_funcs / scalar_string_funcs).
-WINDOW_ORDER_R11: list[str] = [
-    "q1_pricing_summary",
-    "q6_forecast_revenue",
-    "ways_enrichment_pipeline",
-    "merge_upsert_metadata",
-    "events_stream_batch_parity",
-    "docs_incremental_dedup_parity",
-    "scalar_json_extract",
-    "set_union_all_counts",
-    "osm_ingest_feature_tables",
-    # the r1 cohort — hashed exactly once, nine rounds ago
-    "agg_cube_lineitem",
-    "agg_distinct_counts",
-    "agg_filtered",
-    "agg_grouping_sets",
-    "agg_ordered_string_concat",
-    "agg_pivot_priority_by_status",
-    "agg_rollup_orders",
-    "events_sliding_hourly",
-    "events_tumbling_hourly",
-    "explode_priority_words",
-    "join_cross_region_pairs",
-    "join_range_price_band",
-    "join_semi_orders_with_big_items",
-    "q14_promo_revenue",
-    "scalar_date_funcs",
-    "scalar_string_funcs",
-    "set_except_nations",
-    "set_intersect_nations",
-    "topk_orders_by_price",
-    "window_lag_lead_events",
-    "window_running_total",
-    # r3/r5/r6 cohorts
-    "agg_approx_distinct",
-    "text_winnow_fingerprint_md5",
-    "sessionize_user_stats",
-    "agg_salted_revenue",
-    "embedding_near_dup",
-    "geo_haversine_user_path",
-    "ngram_jaccard_near_dup",
-    "q10_returned_items",
-    "similarity_ann_lsh",
-    "text_quality_metrics",
-    "text_token_stats",
-    # oldest of the r8 cohort
-    "events_stream_session_parity",
-    "geo_grid_cell_density",
-    # sole oracled carriers of P2/S8/S9/T4/U3/W1 (also in the r10
-    # window — no out-of-window carrier exists for these tags)
-    "geo_line_simplify",
-    "osm_topology_mapconfig",
-    "scan_tag_index_pruned",
-    "events_stream_dedup_parity",
-    "text_token_topk_sketch",
-    "corpus_domain_mixture_sample",
-    # r10 addition, never driver-hashed: the full -a append/replication
-    # pipeline census (reference README.md:19). Its inclusion completes
-    # cumulative driver evidence at 162/162.
-    "osm_replication_pipeline_parity",
-]
-
-# Round 11: the evidence-refresh rotation goes live (amended, see above).
-# (kept for tests/test_catalog_window.py invariants; R12 live below)
-
-# Round-12 window, PRE-STAGED (the standing insurance pattern):
-# generated from CORRECTNESS_r01..r10 last-hash ages with r11 = the
-# live window above. After r11 lands, the only r1-stale entry is
-# scalar_case_when (dropped from R11 to fit the replication entry) and
-# the oldest cohort is the 37-entry r8 window — so R12 = the 9 anchors
-# + scalar_case_when + the r8 cohort + the oldest r9 entries, with
-# sole-carrier tag repairs (geo_line_simplify / scan_tag_index_pruned
-# re-enter because no out-of-window entry carries P2 / S9).
-# Invariants asserted by tests/test_catalog_window.py; swap with
-# `WINDOW_ORDER = WINDOW_ORDER_R12` at r12 start and re-validate at
-# sf0.01 before committing.
-WINDOW_ORDER_R12: list[str] = [
-    "q1_pricing_summary",
-    "q6_forecast_revenue",
-    "ways_enrichment_pipeline",
-    "merge_upsert_metadata",
-    "events_stream_batch_parity",
-    "docs_incremental_dedup_parity",
-    "scalar_json_extract",
-    "set_union_all_counts",
-    "osm_ingest_feature_tables",
-    "scalar_case_when",
-    # the r8 cohort — oldest driver hashes after r11
-    "dedup_cluster_resolution",
-    "dedup_keep_best_quality",
-    "embedding_semantic_dedup",
-    # (events_click_purchase_interval, q3_shipping_priority and
-    # q5_region_revenue — all r11-driver-hashed with rich cumulative
-    # evidence — rotated out mid-r12 for the three NEW entries at the
-    # window's end; tag coverage re-asserted, 50-entry unit
-    # re-hash-validated at sf0.01 before the amendment landed.)
-    "events_median_normalize",
-    "geo_tile_projection",
-    "merge_optimize_pruned_scan",
-    "merge_upsert_bucketed",
-    "minhash_lsh_near_dup",
-    "multimodal_audio_stats",
-    "multimodal_image_stats",
-    "multimodal_resize_pipeline",
-    "ngram_jaccard_skewed_corpus",
-    "osm_ingest_pbf_parity",
-    "osm_topology_edges",
-    "osm_turn_restrictions",
-    "simhash_near_dup",
-    "similarity_ann_ivf",
-    "similarity_ann_ivfpq",
-    "similarity_topk_cosine",
-    "text_bigram_lm_quality",
-    "text_bpe_merge_train",
-    "text_fingerprint_exact_dedup",
-    "text_gopher_quality_filters",
-    "text_hybrid_retrieval_rrf",
-    "text_lang_id",
-    "text_pii_redact",
-    "text_rolling_fingerprint",
-    "trajectory_jaccard_pairs",
-    "trajectory_topk_similar",
-    # oldest r9 entries
-    "geo_point_in_polygon",
-    "docs_stream_topk_parity",
-    "q21_waiting_supplier",
-    # sole oracled carriers of P2 / S9 (also in the r11 window)
-    "geo_line_simplify",
-    "scan_tag_index_pruned",
-    # new in (continued) r12 — never driver-hashed: repeated-span
-    # REMOVAL (the Lee-et-al rewrite half), UNPIVOT/Expand, bit-exact
-    # distributed-PCA projection, the PassJoin edit-distance join, and
-    # the run-length LOCF gap-fill (sessionize_bounds / text_bm25_topk
-    # rotated out — r8+r11 driver evidence, tags still carried)
-    "text_repeated_span_removal",
-    "agg_unpivot_lineitem_measures",
-    "embedding_pca_project",
-    "fuzzy_join_part_names",
-    "events_gapfill_locf",
-    # streaming-Gram PCA twin (multimodal_frame_means rotated out —
-    # r8-hashed, U3 tag carried by its three multimodal siblings here)
-    "embedding_stream_pca_parity",
-]
-
-
-# Round-13 window, PRE-STAGED (the standing insurance pattern):
-# generated from CORRECTNESS_r01..r11 last-hash ages with r12 = the
-# live (amended) window above assumed hashed. Leads with the seven
-# r8-stale entries (incl. the five rotated out mid-r12 for the new
-# operators), then the r9 cohort, then coverage repairs
-# (osm_poi_nearest_edge / stream-dedup / session / replication /
-# set_except carry J4/T4/T2/S7-census/W5) and the seven sole-carrier
-# anchors. Invariants asserted by tests/test_catalog_window.py; swap
-# with `WINDOW_ORDER = WINDOW_ORDER_R13` at r13 start and re-validate
-# the 50-entry unit at sf0.01 BEFORE committing (the rounds-7/8
-# lesson). Pre-validated once at sf0.01 when staged this round.
-WINDOW_ORDER_R13: list[str] = [
-    "asof_purchase_after_signup",
-    "corpus_curation_funnel",
-    "events_click_purchase_interval",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "sessionize_bounds",
-    "text_bm25_topk",
-    "decontamination_overlap",
-    "events_exact_quantiles",
-    "events_funnel_conversion",
-    "events_stream_enrich_parity",
-    "events_stream_interval_join_parity",
-    "geo_zorder_key",
-    "graph_pagerank_trading",
-    "merge_change_feed",
-    "osm_polygon_way_area",
-    "osm_route_bfs_reach",
-    "osm_route_cost_matrix",
-    "osm_route_members",
-    "osm_style_feature_tables",
-    "osm_tag_key_frequency",
-    "osm_ways_enrichment_fixture",
-    "q11_important_parts",
-    "q12_late_by_priority",
-    "q13_order_count_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_revenue",
-    "q20_promotion_suppliers",
-    "q2_min_cost_supplier",
-    # (q4_order_priority / q7_nation_volume / q8_market_share /
-    # q22_wealthy_inactive — r9-driver-hashed, pure A5/J6 tags carried
-    # by 14+ other window entries — displaced at r13 start for the four
-    # r12-continuation entries at the window's end, per the r12
-    # verdict's task #1; the amended 50-entry unit re-hash-validated at
-    # sf0.01 before the swap landed.)
-    "q9_product_profit",
-    "snapshot_change_feed",
-    "osm_poi_nearest_edge",
-    "events_stream_dedup_parity",
-    "events_stream_session_parity",
-    "osm_replication_pipeline_parity",
-    "set_except_nations",
-    "geo_line_simplify",
-    "merge_upsert_metadata",
-    "q1_pricing_summary",
-    "q6_forecast_revenue",
-    "scalar_json_extract",
-    "scan_tag_index_pruned",
-    "ways_enrichment_pipeline",
-    # r12-continuation entries that shipped without a driver-window
-    # slot (sweep + sf1-rehearsal green since r12, never driver-hashed
-    # — r12 verdict task #1): array/HOF scalar surface, interpolated
-    # percentiles, TIME-valued RANGE frame, length-bucketed batch
-    # assembly.
-    "scalar_array_funcs",
-    "events_quantile_cont",
-    "window_time_range_frame",
-    "corpus_length_bucket_batches",
-]
-
-# Round-14 window, PRE-STAGED (the standing insurance pattern):
-# greedy tag-cover construction from CORRECTNESS_r01..r12 last-hash
-# ages with r13 = the live window above assumed hashed. Leads with the
-# five r13 additions (never driver-hashed: triangle count, MAD
-# outliers, dim correlation, nearest as-of, SCD2 history), then the
-# minimal stalest tag-cover anchors, then the stalest r8–r10 cohort.
-# Invariants asserted by tests/test_catalog_window.py; swap with
-# `WINDOW_ORDER = WINDOW_ORDER_R14` at r14 start and re-validate the
-# 50-entry unit at sf0.01 BEFORE committing (the rounds-7/8 lesson).
-# Pre-validated once at sf0.01 when staged this round.
-WINDOW_ORDER_R14: list[str] = [
-    "graph_triangle_count",
-    "events_mad_outliers",
-    "embedding_dim_correlation",
-    "asof_nearest_purchase",
-    "merge_scd2_history",
-    # tag-cover anchors (greedy stalest-first set cover)
-    "ways_enrichment_pipeline",
-    "events_stream_batch_parity",
-    "osm_ingest_feature_tables",
-    "docs_stream_topk_parity",
-    "corpus_domain_cap",
-    "geo_point_in_polygon",
-    "q1_pricing_summary",
-    "osm_topology_mapconfig",
-    "set_intersect_nations",
-    "docs_incremental_dedup_parity",
-    "geo_line_simplify",
-    "merge_upsert_metadata",
-    "q6_forecast_revenue",
-    "scalar_json_extract",
-    "scan_tag_index_pruned",
-    # stalest driver evidence (r8–r10 cohort)
-    "multimodal_frame_means",
-    "agg_approx_percentile",
-    "agg_grouping_structures",
-    "agg_hll_sketch_union",
-    "corpus_sequence_pack",
-    "events_cohort_retention",
-    # (q22_wealthy_inactive / q7_nation_volume / q8_market_share —
-    # r9-hashed, pure A5/J6 tags carried by many window entries —
-    # displaced when the post-close r13 additions landed, so never-
-    # driven entries don't wait for r15; amended unit re-hash-validated
-    # at sf0.01 before the commit.)
-    "q4_order_priority",
-    "corpus_hash_split",
-    "corpus_importance_resample",
-    "corpus_leakage_safe_split",
-    "corpus_multimodal_curation",
-    "corpus_stratified_sample",
-    "embedding_int8_quantize",
-    "embedding_knn_label_vote",
-    "embedding_label_norms",
-    "embedding_pq_adc_topk",
-    "embedding_pq_encode",
-    "join_anti_customers_without_orders",
-    "join_outer_customer_order_stats",
-    "merge_stats_metadata_only",
-    "ngram_containment_pairs",
-    "osm_diff_incremental_parity",
-    "similarity_ann_ivf_trained",
-    "subquery_above_avg_orders",
-    "subquery_correlated_max_item",
-    "subquery_exists_waiting_orders",
-    "text_bpe_corpus_encode",
-    # post-close r13 additions, never driver-hashed
-    "events_markov_transitions",
-    "events_equidepth_histogram",
-    "text_zipf_vocab_stats",
-]
-
-# Round-15 window, PRE-STAGED (the standing insurance pattern):
-# greedy stalest-first tag cover from CORRECTNESS_r01..r13 last-hash
-# ages with r14 = the live window above assumed hashed. Leads with the
-# round's never-driver-hashed addition (geo_point_in_polygon_grid —
-# the r13 verdict's grid-route evidence ask), then the stalest
-# tag-cover anchors (r9-r14), then the stalest fill cohort (the
-# r9-r11 TPC-H/text/agg entries whose evidence ages out next).
-# Invariants asserted by tests/test_catalog_window.py; swap with
-# `WINDOW_ORDER = WINDOW_ORDER_R15` at r15 start and re-validate the
-# 50-entry unit at sf0.01 BEFORE committing (the rounds-7/8 lesson).
-WINDOW_ORDER_R15: list[str] = [
+# The live window. A rotation is staged as a second list and checked by
+# tests/test_catalog_window.py before it replaces this one.
+WINDOW_ORDER: list[str] = [
     "geo_point_in_polygon_grid",
-    # r14-optimization rewrites whose new plans the driver has never
-    # hashed (r14 verdict item 7): implied-pushdown q4 twin q17's semi
-    # prefilter, q21's min!=max, the keeper-census dedup, the bigram-LM
-    # derivation, the semantic-dedup window collapse, and the
-    # shuffle_hash verify join on the skewed corpus.
+    # r14 plan rewrites
     "q17_small_quantity_revenue",
     "q21_waiting_supplier",
     "text_fingerprint_exact_dedup",
     "text_bigram_lm_quality",
     "embedding_semantic_dedup",
     "ngram_jaccard_skewed_corpus",
-    # r14 additions, never driver-hashed (amended in the same round
-    # they landed — the standing "never wait two rounds" rule):
-    # chi-squared term selection, bigram lift collocations, sliding
-    # distinct-user windows, degree assortativity.
+    # r14 additions
     "text_chi2_discriminative_terms",
     "text_bigram_lift_collocations",
     "window_sliding_distinct_users",
     "graph_degree_assortativity",
-    # r14 continuation additions, also never driver-hashed: retrieval
-    # eval (MRR/hits@10, exact-integer checksums), cross-source vocab
-    # overlap, shuffle-free Simpson diversity, clustering coefficient,
-    # event-volume Gini via the scalable global-rank rewrite.
     "retrieval_eval_mrr",
     "corpus_source_overlap",
     "text_simpson_diversity",
@@ -569,7 +95,7 @@ WINDOW_ORDER_R15: list[str] = [
     "ann_recall_eval",
     "corpus_quality_prune_per_source",
     "events_session_paths",
-    # tag-cover anchors (greedy stalest-first set cover)
+    # tag-cover anchors
     "q22_wealthy_inactive",
     "text_chunk_dedup",
     "text_chunking",
@@ -587,22 +113,14 @@ WINDOW_ORDER_R15: list[str] = [
     "osm_polygon_way_area",
     "osm_replication_pipeline_parity",
     "ways_enrichment_pipeline",
-    # sole tag-cover anchors — cannot rotate out (A4/J5/P1/P2/P3/S9
-    # have no other carrier in the catalog)
+    # sole carriers of tags A4/J5/P1/P2/P3/S9: cannot rotate out
     "geo_line_simplify",
     "merge_upsert_metadata",
     "q1_pricing_summary",
     "q6_forecast_revenue",
     "scalar_json_extract",
     "scan_tag_index_pruned",
-    # (embedding_stream_pca_parity / events_median_normalize /
-    # geo_tile_projection / merge_optimize_pruned_scan — r12-hashed —
-    # and osm_route_members / osm_ways_enrichment_fixture — r13-hashed
-    # — displaced when the six r14-rewrite entries above rotated in;
-    # joint tag cover re-verified: S6 keeps osm_ingest_pbf_parity, E1
-    # keeps ways_enrichment_pipeline, T6/U3/U4 and A1-A3 keep their
-    # other carriers.)
-    # stalest driver evidence (r9-r11 cohort)
+    # stalest hash evidence
     "q7_nation_volume",
     "q8_market_share",
     "text_normalized_exact_dedup",
@@ -611,25 +129,7 @@ WINDOW_ORDER_R15: list[str] = [
     "text_repetition_profile",
     "text_tfidf_probe_terms",
     "text_unigram_logprob",
-    # (agg_filtered / agg_grouping_sets / agg_pivot_priority_by_status /
-    # agg_rollup_orders — r11-hashed pure-A5 fills — displaced when the
-    # four r14 additions rotated in; window_range_frame /
-    # window_rank_variants / agg_approx_distinct / agg_cube_lineitem /
-    # agg_distinct_counts / agg_ordered_string_concat /
-    # window_topn_per_group / events_sliding_hourly — r10-13-hashed
-    # A5/W1/W3/T2 fills — displaced when the eight r14-continuation
-    # additions rotated in (W1 keeps a window carrier via
-    # graph_clustering_coefficient, T2 via events_session_paths and
-    # the stream-parity entries); amended unit re-hash-validated at
-    # sf0.01 before each commit.)
 ]
-
-# Round 15: the r15 rotation goes live (leads with the six
-# r14-optimization rewrites the driver has never hashed, per the r14
-# verdict item 7, then the r14 additions) — the 50-entry unit
-# re-hash-validated at sf0.01 on the r15 tree before this assignment
-# landed (the standing rounds-7/8 rule).
-WINDOW_ORDER = WINDOW_ORDER_R15
 
 
 def _ordered() -> dict[str, CatalogEntry]:

@@ -435,7 +435,7 @@ def test_trajectory_pairs_empty_and_singleton_corpus(spark):
     D.release_caches()
 
 
-def test_two_table_join_collapse_row_identical(spark, monkeypatch):
+def test_two_table_join_collapse_row_identical(spark, monkeypatch, spark_jobs):
     """ngram_jaccard_join_two_tables' per-side collapse (the
     decontamination shape) must be row-identical to the naive plan on
     corpora where BOTH sides carry exact duplicates — including
@@ -456,6 +456,14 @@ def test_two_table_join_collapse_row_identical(spark, monkeypatch):
         bench_rows.append((1000 + nid, "tiny")); nid += 1
     corpus = spark.createDataFrame(corpus_rows, "corpus_id long, text string")
     bench = spark.createDataFrame(bench_rows, "bench_id long, text string")
+
+    # both sides' duplication gates run as ONE combined probe job
+    with spark_jobs() as probe:
+        gates = D._dup_gate_stats([(corpus, "text"), (bench, "text")])
+    assert probe.actions == 1
+    assert gates == [
+        (len(rows), len({t for _, t in rows})) for rows in (corpus_rows, bench_rows)
+    ]
 
     def pairs():
         return {

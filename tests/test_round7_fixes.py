@@ -1,8 +1,8 @@
 """Round-7 regression pins (VERDICT r6 "next round" items):
 
-- cosine_topk's auto gate runs ONE combined count job and memoizes it
-  by semantic plan hash — repeated calls on the same logical plans
-  route with no extra Spark jobs (the r6 fence-creep item).
+- cosine_topk's auto gate runs ONE combined count probe per call, and
+  none when footer statistics or a caller hint decide (the r6
+  fence-creep item).
 """
 
 from __future__ import annotations
@@ -22,22 +22,12 @@ def emb(spark):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-def test_pair_counts_single_job_and_memo(spark, emb):
-    S._PAIR_COUNT_CACHE.clear()
+def test_pair_counts_single_job(spark, emb, spark_jobs):
     q = emb.filter(F.col("vec_id") < 3)
-    assert S._pair_counts(emb, q) == (40, 3)
-    assert len(S._PAIR_COUNT_CACHE) == 1
-    # second call with SEMANTICALLY identical (rebuilt) plans must hit
-    # the memo: poison the cached value and observe it coming back
-    key = next(iter(S._PAIR_COUNT_CACHE))
-    S._PAIR_COUNT_CACHE[key] = (123, 456)
-    q2 = emb.filter(F.col("vec_id") < 3)
-    assert S._pair_counts(emb, q2) == (123, 456)
-    S._PAIR_COUNT_CACHE.clear()
-    # a semantically different query plan is a different key
-    q3 = emb.filter(F.col("vec_id") < 5)
-    assert S._pair_counts(emb, q3) == (40, 5)
-    S._PAIR_COUNT_CACHE.clear()
+    with spark_jobs() as probe:
+        assert S._pair_counts(emb, q) == (40, 3)
+    assert probe.actions == 1  # both counts in one job, not two
+    assert S._pair_counts(emb, emb.filter(F.col("vec_id") < 5)) == (40, 5)
 
 
 def test_merge_table_concurrent_writers_lose_no_update(spark, tmp_path):
@@ -180,7 +170,7 @@ def test_footer_rows_statistics(spark):
     assert S._footer_rows(joined) == (None, None)  # cardinality-changing
 
 
-def test_route_topk_footer_fast_paths(spark):
+def test_route_topk_footer_fast_paths(spark, spark_jobs):
     """The router decides from footer statistics without a count job
     when it can: exact×exact above/below threshold, and small upper
     bounds that cannot reach the blocked zone."""
@@ -188,19 +178,18 @@ def test_route_topk_footer_fast_paths(spark):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     n = emb.count()
-    S._PAIR_COUNT_CACHE.clear()
-    # exact×exact: decide either way with no job (cache stays empty)
-    assert S._route_topk(emb, emb, n * n + 1) == "crossjoin"
-    assert S._route_topk(emb, emb, n * n) == "blocked"
-    assert len(S._PAIR_COUNT_CACHE) == 0
-    # ub×ub below threshold: filter side has only a bound, still no job
     filt = emb.filter(F.col("vec_id") < 5)
-    assert S._route_topk(emb, filt, n * n + 1) == "crossjoin"
-    assert len(S._PAIR_COUNT_CACHE) == 0
-    # ambiguous (bound straddles): falls back to the memoized count job
-    assert S._route_topk(emb, filt, n * 5 + 1) == "crossjoin"
-    assert len(S._PAIR_COUNT_CACHE) == 1
-    S._PAIR_COUNT_CACHE.clear()
+    with spark_jobs() as probe:
+        # exact×exact: decide either way
+        assert S._route_topk(emb, emb, n * n + 1) == "crossjoin"
+        assert S._route_topk(emb, emb, n * n) == "blocked"
+        # ub×ub below threshold: the filter side has only a bound
+        assert S._route_topk(emb, filt, n * n + 1) == "crossjoin"
+    assert probe.jobs == []
+    # ambiguous (bound straddles): falls back to one count job
+    with spark_jobs() as probe:
+        assert S._route_topk(emb, filt, n * 5 + 1) == "crossjoin"
+    assert probe.actions == 1
 
 
 @pytest.mark.slow
@@ -259,7 +248,7 @@ def test_rolling_fingerprint_md5_matches_python(spark):
         assert got[i] == py_fp(t), i
 
 
-def test_queries_count_hint_jobless_and_exact(spark):
+def test_queries_count_hint_jobless_and_exact(spark, spark_jobs):
     """The F.broadcast-style cardinality hint: with queries_count_hint
     a filtered (footer-opaque) query side routes with ZERO probe jobs,
     and the result is identical to the explicit-strategy plan. A wrong
@@ -268,12 +257,13 @@ def test_queries_count_hint_jobless_and_exact(spark):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     q = emb.filter(F.col("vec_id") == 0)
-    S._PAIR_COUNT_CACHE.clear()
-    hinted = S.cosine_topk(
-        emb, q, "vec_id", "embedding", k=5, query_id_col=None,
-        queries_count_hint=1,
-    ).collect()
-    assert len(S._PAIR_COUNT_CACHE) == 0  # no probe job ran
+    with spark_jobs() as probe:
+        hinted_df = S.cosine_topk(
+            emb, q, "vec_id", "embedding", k=5, query_id_col=None,
+            queries_count_hint=1,
+        )
+    assert probe.jobs == []  # routed without a probe job
+    hinted = hinted_df.collect()
     explicit = S.cosine_topk(
         emb, q, "vec_id", "embedding", k=5, query_id_col=None,
         strategy="crossjoin",
@@ -285,20 +275,17 @@ def test_queries_count_hint_jobless_and_exact(spark):
         queries_count_hint=10**9,
     ).collect()
     assert sorted(map(tuple, wrong)) == sorted(map(tuple, explicit))
-    S._PAIR_COUNT_CACHE.clear()
 
 
-def test_auto_route_unchanged_by_memo(spark, emb):
-    """The gate still routes exactly as before: below threshold →
-    crossjoin result identical to the explicit-strategy run."""
-    S._PAIR_COUNT_CACHE.clear()
+def test_auto_route_matches_explicit_crossjoin(spark, emb):
+    """Below threshold the gate routes to crossjoin: result identical
+    to the explicit-strategy run."""
     q = emb.filter(F.col("vec_id") == 0)
     auto = S.cosine_topk(emb, q, "vec_id", "embedding", k=5).collect()
     explicit = S.cosine_topk(
         emb, q, "vec_id", "embedding", k=5, strategy="crossjoin"
     ).collect()
     assert sorted(map(tuple, auto)) == sorted(map(tuple, explicit))
-    S._PAIR_COUNT_CACHE.clear()
 
 
 def test_rolling_fingerprint_fold_edges_match_python(spark):

@@ -74,7 +74,6 @@ def test_collapse_equals_naive(dup_corpus, monkeypatch, threshold, centroids):
         )
         # ratio=1.0 -> gate never fires -> genuine uncollapsed plan
         monkeypatch.setattr(S, "_VEC_COLLAPSE_MIN_DUP_RATIO", 1.0)
-        S._VEC_STATS_CACHE.clear()
         naive = _collect(
             S.semantic_dedup(
                 dup_corpus, "vec_id", "embedding",
@@ -85,7 +84,6 @@ def test_collapse_equals_naive(dup_corpus, monkeypatch, threshold, centroids):
         assert len(collapsed) == 28  # one row per corpus vector
     finally:
         release_caches()
-        S._VEC_STATS_CACHE.clear()
 
 
 def test_zero_vectors_never_collapse_or_drop(spark, monkeypatch):
@@ -107,7 +105,6 @@ def test_zero_vectors_never_collapse_or_drop(spark, monkeypatch):
             assert out[i] is True   # every other exact dup dropped
     finally:
         release_caches()
-        S._VEC_STATS_CACHE.clear()
 
 
 def test_high_threshold_disables_collapse(dup_corpus, monkeypatch):
@@ -125,7 +122,6 @@ def test_high_threshold_disables_collapse(dup_corpus, monkeypatch):
         plan = bypass_df._jdf.queryExecution().optimizedPlan().toString()
         assert "__rep" not in plan  # gate bypassed: no collapse
         assert len(bypass_df.collect()) == 28
-        S._VEC_STATS_CACHE.clear()
         collapsed_df = S.semantic_dedup(
             dup_corpus, "vec_id", "embedding",
             threshold=0.35, n_centroids=4, centroids="first",
@@ -135,4 +131,3 @@ def test_high_threshold_disables_collapse(dup_corpus, monkeypatch):
         assert len(collapsed_df.collect()) == 28
     finally:
         release_caches()
-        S._VEC_STATS_CACHE.clear()
