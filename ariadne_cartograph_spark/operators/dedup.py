@@ -224,30 +224,18 @@ def lsh_candidate_pairs(
 
 
 def jaccard_verify(
-    candidates: DataFrame,
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_size: int = 3,
-    threshold: float = 0.6,
-    shingles: DataFrame | None = None,
+    candidates: DataFrame, sh: DataFrame, id_col: str, threshold: float = 0.6
 ) -> DataFrame:
-    """Exact word-shingle Jaccard on candidate pairs only. Emits
-    (id_a, id_b, jaccard) for pairs ≥ threshold. Shingle sets are
-    compared as hashes (hashed_word_shingles) — same sets, 8-byte
-    elements. Pass ``shingles`` (id_col, sh) to reuse an
-    already-materialized shingle frame instead of re-deriving it."""
-    sh = (
-        shingles
-        if shingles is not None
-        else df.select(
-            F.col(id_col), hashed_word_shingles(text_col, n=shingle_size).alias("sh")
-        )
-    )
-    # shuffle_hash on the array-carrying side, as in the prefix route's
-    # verify: the default plan broadcasts or sort-merges the shingle
-    # relation, paying the array payload through the build/sort; the
-    # hash join streams it through one id-keyed exchange (r14 A/B).
+    """Exact Jaccard on candidate pairs only, over the materialized set
+    frame ``sh`` (id_col, sh: array<long>) — the verify of both
+    candidate routes (MinHash-LSH bands, the AllPairs prefix kernel).
+    Emits (id_a, id_b, jaccard) for pairs ≥ threshold."""
+    # shuffle_hash on the array-carrying side: the default plan
+    # broadcasts or sort-merges the shingle relation, paying the array
+    # payload through the build/sort; the hash join streams it through
+    # one id-keyed exchange (r14 isolated A/B at sf0.1 on the prefix
+    # route: verify stage 2.93 → 2.05 s min-of-3; broadcast measured
+    # 2.91 — the driver-side build of the array relation eats the win).
     out = (
         candidates.join(
             sh.withColumnRenamed("sh", "sh_a").hint("shuffle_hash"),
@@ -311,9 +299,7 @@ def minhash_near_dup_pairs(
         F.col(id_col), _minhash_from_shingles(F.col("sh"), n_hashes).alias("mh_sig")
     )
     cands = lsh_candidate_pairs(sigs, id_col, n_hashes, bands, max_bucket_size)
-    rep_pairs = jaccard_verify(
-        cands, df, id_col, text_col, shingle_size, threshold, shingles=sh
-    )
+    rep_pairs = jaccard_verify(cands, sh, id_col, threshold)
     empty_reps = sh.filter(F.size("sh") == 0).select(F.col(id_col).alias("__rep"))
     return _expand_collapsed_pairs(
         rep_pairs, member, id_col, "jaccard", F.lit(1.0),
@@ -333,26 +319,15 @@ def _shingle_frame(
     )
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_size: int = 3,
-    threshold: float = 0.6,
-    _sh: DataFrame | None = None,
+def _count_join(
+    sh: DataFrame, id_col: str, threshold: float, metric: str = "jaccard"
 ) -> DataFrame:
-    """Exhaustive (non-approximate) n-gram Jaccard similarity join:
-    explode distinct hashed shingles → self-equi-join on shingle →
-    count intersections per pair → Jaccard ≥ threshold.
-
-    Shingles travel as xxhash64 longs, so the shuffle carries 8-byte
-    keys. The explode join is Σ df(g)² pairs — fine when shingle
-    doc-frequencies are uniform (measured max df ≈ 25 on the test
-    corpus). For corpora with HOT shingles (boilerplate), use
-    ngram_jaccard_pairs_prefix, which bounds the blowup, or
-    ngram_jaccard_pairs_auto, which picks per-corpus on measured df.
-    """
-    sh = _sh if _sh is not None else _shingle_frame(df, id_col, text_col, shingle_size)
+    """Count kernel of the exact set-similarity join (shingles and
+    trajectory cells) over a persisted set frame (id_col, sh:
+    array<long>, n_sh): explode → equi-self-join on the element →
+    per-pair intersection count → both sizes → ``metric`` ("jaccard"
+    or "containment", |A∩B| / min(|A|,|B|)) ≥ threshold. Emits
+    (id_a, id_b, <metric>), id_a < id_b; Σ df(g)² candidate rows."""
     exploded = sh.select(F.col(id_col), F.explode("sh").alias("g"))
     a = exploded.alias("a")
     # shuffle_hash: SF-scaling self-join — see lsh_candidate_pairs.
@@ -364,116 +339,34 @@ def ngram_jaccard_pairs(
     )
     sa = sh.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
     sb = sh.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
+    denominator = {
+        "jaccard": F.col("n_a") + F.col("n_b") - F.col("n_inter"),
+        "containment": F.least("n_a", "n_b"),
+    }[metric]
     return (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .withColumn(metric, F.col("n_inter").cast("double") / denominator.cast("double"))
+        .filter(F.col(metric) >= threshold)
+        .select("id_a", "id_b", metric)
     )
 
 
-def ngram_containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_size: int = 3,
-    threshold: float = 0.8,
-    _sh: DataFrame | None = None,
+def _prefix_join(
+    sh: DataFrame, id_col: str, threshold: float, freq: DataFrame | None = None
 ) -> DataFrame:
-    """Exact n-gram CONTAINMENT join: C(a,b) = |A∩B| / min(|A|,|B|).
-
-    Jaccard misses partial copies — a paragraph quoted inside a much
-    longer document has high containment but low Jaccard because the
-    union is dominated by the longer side. Containment normalizes by
-    the smaller set, so it flags quote/excerpt-style duplication
-    (the signal used for "document A is substantially inside B"
-    decisions in crawl curation).
-
-    Same physical shape as ngram_jaccard_pairs: 8-byte hashed-shingle
-    equi-self-join → per-pair intersection count → size lookups. The
-    Σ df² candidate bound and its skew remedies apply identically
-    (route hot-shingle corpora through the prefix/auto variants first
-    to produce the candidate set, then score containment on it).
-
-    Exact duplicates collapse/re-expand behind the same measured-
-    duplication gate as the Jaccard family (duplicates share their
-    rep's size, so cross-cluster pairs inherit the rep containment
-    exactly; intra pairs are 1.0; empty-shingle clusters excluded —
-    0/0 containment is NULL in the naive plan). On the k-fold
-    replica rehearsal this is the k² candidate cut that kept the
-    entry from scaling.
-    """
-    if _sh is None:
-        df, member = _exact_dup_collapse(df, id_col, text_col)
-    else:
-        member = None
-    sh = _sh if _sh is not None else _shingle_frame(df, id_col, text_col, shingle_size)
-    exploded = sh.select(F.col(id_col), F.explode("sh").alias("g"))
-    a = exploded.alias("a")
-    # shuffle_hash: SF-scaling self-join — see lsh_candidate_pairs.
-    b = exploded.hint("shuffle_hash").alias("b")
-    inter = (
-        a.join(b, (F.col("a.g") == F.col("b.g")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sh.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sh.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"))
-    rep_pairs = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "containment",
-            F.col("n_inter").cast("double") / F.least("n_a", "n_b").cast("double"),
-        )
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
-    )
-    empty_reps = sh.filter(F.size("sh") == 0).select(F.col(id_col).alias("__rep"))
-    return _expand_collapsed_pairs(
-        rep_pairs, member, id_col, "containment", F.lit(1.0),
-        exclude_intra_reps=empty_reps,
-    )
-
-
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_size: int = 3,
-    threshold: float = 0.6,
-    _sh: DataFrame | None = None,
-    _freq: DataFrame | None = None,
-) -> DataFrame:
-    """Prefix-filtered exact Jaccard join with positional pruning
-    (AllPairs, Bayardo et al. 2007 + the PPJoin positional filter, Xiao
-    et al. 2008 — both public, both lossless): under one global total
-    order of shingles — rarest first, by (doc-frequency, shingle) — any
-    pair with Jaccard ≥ t must share a shingle inside each doc's first
-    (n − ⌈t·n⌉ + 1) shingles. Only prefixes enter the self-join, so HOT
-    shingles (the Σ df² quadratic blowup of ngram_jaccard_pairs at
-    100 TB) sort to the end and almost never into a prefix. The
-    positional bound then drops matches that cannot reach the required
-    overlap α = ⌈t/(1+t)·(n_a+n_b)⌉ given how deep in each prefix the
-    shared shingle sits — on a measured skewed corpus this prunes ~97%
-    of candidate rows before the distinct (261k → 8k) while the output
-    is bit-identical. Pays an extra frequency pass + per-doc rank, so
-    on uniform corpora the plain count-based form is faster.
-    """
+    """Prefix kernel of the exact Jaccard join over the same set frame:
+    AllPairs (Bayardo et al. 2007) + the PPJoin positional filter (Xiao
+    et al. 2008) — both public, both lossless — then
+    :func:`jaccard_verify`. Under one global total order, rarest first
+    by (df, element), a pair with Jaccard ≥ t must share an element in
+    each set's first (n − ⌈t·n⌉ + 1) elements, so hot elements sort
+    out of every prefix. ``freq``: the caller's (g, df_g) table."""
     from pyspark.sql.window import Window as W
 
-    sh = _sh if _sh is not None else _shingle_frame(df, id_col, text_col, shingle_size)
     exploded = sh.select(F.col(id_col), "n_sh", F.explode("sh").alias("g"))
-    freq = (
-        _freq
-        if _freq is not None
-        else exploded.groupBy("g").agg(F.count(F.lit(1)).alias("df_g"))
-    )
+    if freq is None:
+        freq = exploded.groupBy("g").agg(F.count(F.lit(1)).alias("df_g"))
     rnk = F.row_number().over(W.partitionBy(id_col).orderBy("df_g", "g"))
     prefix = (
         exploded.join(freq, "g")
@@ -485,7 +378,7 @@ def ngram_jaccard_pairs_prefix(
     # shuffle_hash: SF-scaling self-join — see lsh_candidate_pairs.
     b = prefix.hint("shuffle_hash").alias("b")
     # Jaccard ≥ t ⇔ overlap ≥ t/(1+t)·(n_a+n_b); a match at prefix
-    # ranks (ra, rb) leaves at most min(n_a−ra, n_b−rb)+1 shingles of
+    # ranks (ra, rb) leaves at most min(n_a−ra, n_b−rb)+1 elements of
     # possible overlap (suffixes after the match, plus the match
     # itself, under the shared total order).
     alpha = F.ceil(
@@ -511,31 +404,85 @@ def ngram_jaccard_pairs_prefix(
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
     )
-    # Exact verification on the (small) candidate set only.
-    # shuffle_hash on the array-carrying side: the default plan sorts
-    # BOTH sides (SMJ) to join 8-byte ids, paying two sorts of rows
-    # whose payload is the full shingle array — hash-joining on the id
-    # skips the sorts (r14 isolated A/B at sf0.1: verify stage 2.93 →
-    # 2.05 s min-of-3; broadcast measured 2.91 — the driver-side build
-    # of the array relation eats the win). Same SF-scaling posture as
-    # the candidate self-join hints: both sides are id-partitioned
-    # row streams, the per-partition build side is the doc-count-bounded
-    # shingle frame slice.
-    sh_a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")).hint(
-        "shuffle_hash"
+    return jaccard_verify(cands, sh, id_col, threshold)
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_size: int = 3,
+    threshold: float = 0.6,
+) -> DataFrame:
+    """Exhaustive (non-approximate) n-gram Jaccard similarity join —
+    the count kernel (:func:`_count_join`) over hashed shingles.
+
+    Shingles travel as xxhash64 longs, so the shuffle carries 8-byte
+    keys. The explode join is Σ df(g)² pairs — fine when shingle
+    doc-frequencies are uniform (measured max df ≈ 25 on the test
+    corpus). For corpora with HOT shingles (boilerplate), use
+    ngram_jaccard_pairs_prefix, which bounds the blowup, or
+    ngram_jaccard_pairs_auto, which picks per-corpus on measured df.
+    """
+    return _count_join(_shingle_frame(df, id_col, text_col, shingle_size), id_col, threshold)
+
+
+def ngram_containment_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_size: int = 3,
+    threshold: float = 0.8,
+) -> DataFrame:
+    """Exact n-gram CONTAINMENT join: C(a,b) = |A∩B| / min(|A|,|B|).
+
+    Jaccard misses partial copies — a paragraph quoted inside a much
+    longer document has high containment but low Jaccard because the
+    union is dominated by the longer side. Containment normalizes by
+    the smaller set, so it flags quote/excerpt-style duplication
+    (the signal used for "document A is substantially inside B"
+    decisions in crawl curation).
+
+    Same physical shape as ngram_jaccard_pairs — the count kernel
+    (:func:`_count_join`) with the containment metric. The Σ df²
+    candidate bound and its skew remedies apply identically (route
+    hot-shingle corpora through the prefix/auto variants first to
+    produce the candidate set, then score containment on it).
+
+    Exact duplicates collapse/re-expand behind the same measured-
+    duplication gate as the Jaccard family (duplicates share their
+    rep's size, so cross-cluster pairs inherit the rep containment
+    exactly; intra pairs are 1.0; empty-shingle clusters excluded —
+    0/0 containment is NULL in the naive plan). On the k-fold
+    replica rehearsal this is the k² candidate cut that kept the
+    entry from scaling.
+    """
+    df, member = _exact_dup_collapse(df, id_col, text_col)
+    sh = _shingle_frame(df, id_col, text_col, shingle_size)
+    rep_pairs = _count_join(sh, id_col, threshold, metric="containment")
+    empty_reps = sh.filter(F.size("sh") == 0).select(F.col(id_col).alias("__rep"))
+    return _expand_collapsed_pairs(
+        rep_pairs, member, id_col, "containment", F.lit(1.0),
+        exclude_intra_reps=empty_reps,
     )
-    sh_b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")).hint(
-        "shuffle_hash"
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    return (
-        cands.join(sh_a, "id_a")
-        .join(sh_b, "id_b")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+
+
+def ngram_jaccard_pairs_prefix(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_size: int = 3,
+    threshold: float = 0.6,
+) -> DataFrame:
+    """Prefix-filtered exact Jaccard join with positional pruning (the
+    prefix kernel, :func:`_prefix_join`): HOT shingles (the Σ df²
+    blowup of ngram_jaccard_pairs at 100 TB) sort out of every prefix,
+    and the positional bound α = ⌈t/(1+t)·(n_a+n_b)⌉ prunes ~97% of
+    candidate rows on a measured skewed corpus (261k → 8k) with
+    bit-identical output. Pays an extra frequency pass + per-doc rank,
+    so on uniform corpora the count-based form is faster.
+    """
+    return _prefix_join(_shingle_frame(df, id_col, text_col, shingle_size), id_col, threshold)
 
 
 def ngram_jaccard_pairs_auto(
@@ -613,13 +560,9 @@ def _ngram_rep_pairs(
     ).first()
     max_df, total, sum_sq = (row["max_df"] or 0), (row["total"] or 0), (row["sum_sq"] or 0)
     if ngram_join_strategy(max_df, total, sum_sq) == "prefix":
-        rep_pairs = ngram_jaccard_pairs_prefix(
-            df, id_col, text_col, shingle_size, threshold, _sh=sh, _freq=freq
-        )
+        rep_pairs = _prefix_join(sh, id_col, threshold, freq)
     else:
-        rep_pairs = ngram_jaccard_pairs(
-            df, id_col, text_col, shingle_size, threshold, _sh=sh
-        )
+        rep_pairs = _count_join(sh, id_col, threshold)
     empty_reps = sh.filter(F.size("sh") == 0).select(F.col(id_col).alias("__rep"))
     return rep_pairs, member, empty_reps
 
@@ -691,16 +634,8 @@ def ngram_jaccard_join_two_tables(
     gate_l, gate_r = _dup_gate_stats([(left, text_col), (right, text_col)])
     left_r, member_l = _exact_dup_collapse(left, left_id, text_col, _stats=gate_l)
     right_r, member_r = _exact_dup_collapse(right, right_id, text_col, _stats=gate_r)
-    sh_l = _track_persist(
-        left_r.select(
-            F.col(left_id), hashed_word_shingles(text_col, n=shingle_size).alias("sh")
-        ).withColumn("n_sh", F.size("sh"))
-    )
-    sh_r = _track_persist(
-        right_r.select(
-            F.col(right_id), hashed_word_shingles(text_col, n=shingle_size).alias("sh")
-        ).withColumn("n_sh", F.size("sh"))
-    )
+    sh_l = _shingle_frame(left_r, left_id, text_col, shingle_size)
+    sh_r = _shingle_frame(right_r, right_id, text_col, shingle_size)
     ex_l = sh_l.select(F.col(left_id), F.explode("sh").alias("g"))
     ex_r = sh_r.select(F.col(right_id), F.explode("sh").alias("g"))
     inter = (

@@ -1,19 +1,22 @@
 """Trajectory similarity (PAPERS.md: REPOSE-style distributed top-k
 trajectory similarity): trajectories are reduced to grid-cell
 signature SETS (the local-reference-point idea — a coarse spatial
-vocabulary), so trajectory similarity becomes set similarity and rides
-the same count-based / AllPairs-prefix machinery as document dedup.
+vocabulary), so trajectory similarity becomes set similarity and runs
+on document dedup's exact set-similarity join: the signature frame is
+a (traj, sh, n_sh) set frame handed to dedup's count kernel
+(``_count_join``) or prefix kernel (``_prefix_join``).
 
 Scale design: the cell explode-join is the document-shingle join with
 cells as the vocabulary — Σ df(cell)² bounded by cell coarseness.
 Hotspot cells (downtown cells everyone visits) are the skew case:
-:func:`trajectory_jaccard_pairs` measures cell-frequency skew with the
-same 1-row stats aggregate as ngram_jaccard_pairs_auto and auto-routes
-to an AllPairs prefix-filter plan (rarest-cell-first prefixes keep hot
-cells out of the candidate join) when the hottest cell alone would
-dominate the candidate volume. Cell ids are pure integer arithmetic
-(floor(coord/cell_deg)) — deterministic across engines, hence
-DuckDB-oracle-checkable, unlike hash-based shingles.
+:func:`trajectory_jaccard_pairs` measures cell-frequency skew with a
+1-row stats aggregate like ngram_jaccard_pairs_auto's and auto-routes
+to the prefix kernel (rarest-cell-first prefixes keep hot cells out of
+the candidate join) when the hottest cell alone would dominate the
+candidate volume; a small dense cell universe takes the bitmask
+all-pairs route, which only trajectories use. Cell ids are pure
+integer arithmetic (floor(coord/cell_deg)) — deterministic across
+engines, hence DuckDB-oracle-checkable, unlike hash-based shingles.
 """
 
 from __future__ import annotations
@@ -24,7 +27,9 @@ from pyspark.sql import functions as F
 from ..functions.geo import grid_cell
 from .dedup import (
     _COLLAPSE_MIN_DUP_RATIO,
+    _count_join,
     _expand_collapsed_pairs,
+    _prefix_join,
     _track_persist,
     ngram_join_strategy,
 )
@@ -63,106 +68,6 @@ def trajectory_cells(
     ).dropDuplicates()
 
 
-def _count_pairs(
-    exploded: DataFrame, sizes: DataFrame, traj_col: str, threshold: float
-) -> DataFrame:
-    """Count-based exhaustive path: cell equi-self-join → per-pair
-    intersection count → Jaccard. Σ df(cell)² candidates — cheapest on
-    uniform cell frequencies."""
-    a = exploded.alias("a")
-    # shuffle_hash: SF-scaling cell self-join (see dedup.lsh_candidate_pairs).
-    b = exploded.hint("shuffle_hash").alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col(f"a.{traj_col}") < F.col(f"b.{traj_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{traj_col}").alias("id_a"), F.col(f"b.{traj_col}").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col(traj_col).alias("id_a"), F.col("n_cells").alias("n_a"))
-    sb = sizes.select(F.col(traj_col).alias("id_b"), F.col("n_cells").alias("n_b"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
-def _prefix_pairs(
-    exploded: DataFrame,
-    freq: DataFrame,
-    sig: DataFrame,
-    traj_col: str,
-    threshold: float,
-) -> DataFrame:
-    """AllPairs prefix-filter + PPJoin positional-prune path over cell
-    signatures — the hot-cell escape (same lossless scheme as
-    dedup.ngram_jaccard_pairs_prefix; Bayardo 2007 / Xiao 2008): under
-    the rarest-first total order (df, cell), a Jaccard ≥ t pair must
-    share a cell in each side's first (n − ⌈t·n⌉ + 1) cells, so hot
-    cells sort out of every prefix and never enter the self-join."""
-    from pyspark.sql.window import Window as W
-
-    rnk = F.row_number().over(W.partitionBy(traj_col).orderBy("df_c", "cell"))
-    prefix = (
-        exploded.join(freq, "cell")
-        .withColumn("__rnk", rnk)
-        .filter(
-            F.col("__rnk")
-            <= F.col("n_cells") - F.ceil(F.lit(threshold) * F.col("n_cells")) + 1
-        )
-        .select(traj_col, "n_cells", "cell", "__rnk")
-    )
-    a = prefix.alias("a")
-    # shuffle_hash: SF-scaling self-join — see dedup.lsh_candidate_pairs.
-    b = prefix.hint("shuffle_hash").alias("b")
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("a.n_cells") + F.col("b.n_cells"))
-    )
-    remaining = (
-        F.least(
-            F.col("a.n_cells") - F.col("a.__rnk"),
-            F.col("b.n_cells") - F.col("b.__rnk"),
-        )
-        + 1
-    )
-    cands = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col(f"a.{traj_col}") < F.col(f"b.{traj_col}"))
-            & (F.col("b.n_cells") >= F.lit(threshold) * F.col("a.n_cells"))
-            & (F.col("a.n_cells") >= F.lit(threshold) * F.col("b.n_cells"))
-            & (remaining >= alpha),
-        )
-        .select(
-            F.col(f"a.{traj_col}").alias("id_a"), F.col(f"b.{traj_col}").alias("id_b")
-        )
-        .distinct()
-    )
-    arr_a = sig.select(F.col(traj_col).alias("id_a"), F.col("__arr").alias("arr_a"))
-    arr_b = sig.select(F.col(traj_col).alias("id_b"), F.col("__arr").alias("arr_b"))
-    inter = F.size(F.array_intersect("arr_a", "arr_b")).cast("double")
-    union = (F.size("arr_a") + F.size("arr_b")).cast("double") - inter
-    return (
-        cands.join(arr_a, "id_a")
-        .join(arr_b, "id_b")
-        .withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
 def _bitmask_allpairs(
     exploded: DataFrame,
     freq: DataFrame,
@@ -179,7 +84,9 @@ def _bitmask_allpairs(
     verify is popcount(AND) over a broadcast nested-loop all-pairs —
     zero shuffle, zero distinct, whole-stage-codegen arithmetic. Exact
     and lossless (bit positions are a dense rank of the observed
-    cells), so it returns byte-identical results to the other routes.
+    cells), so it returns byte-identical results to dedup's count and
+    prefix kernels (``_count_join`` / ``_prefix_join``), the other two
+    routes.
     Only entered under the measured gate in
     :func:`trajectory_jaccard_pairs`: reps broadcastable AND all-pairs
     volume no worse than what the count/prefix joins would shuffle."""
@@ -189,9 +96,9 @@ def _bitmask_allpairs(
     # dense bit position per observed cell: a 94-row (universe-sized)
     # window, then broadcast-joined onto the exploded relation
     pos_tbl = freq.select(
-        "cell", (F.row_number().over(W.orderBy("cell")) - 1).alias("__pos")
+        "g", (F.row_number().over(W.orderBy("g")) - 1).alias("__pos")
     )
-    bits = exploded.join(F.broadcast(pos_tbl), "cell").select(
+    bits = exploded.join(F.broadcast(pos_tbl), "g").select(
         F.col(traj_col),
         (F.col("__pos") / 64).cast("int").alias("__w"),
         F.expr("shiftleft(CAST(1 AS BIGINT), CAST(__pos % 64 AS INT))").alias("__bit"),
@@ -263,26 +170,29 @@ def trajectory_jaccard_pairs(
        clears the gate: on dup-free corpora the collapse + expansion
        joins are pure overhead and are skipped.
     2. join-strategy rule (dedup.ngram_join_strategy on cell
-       doc-frequencies): uniform cell frequencies → count-based
-       exhaustive join (no rank window, no frequency join); a hotspot
-       cell (max_df² ≥ Σ df) or aggregate blowup (Σ df² ≥ 32·Σ df) →
-       the AllPairs prefix plan, which keeps the candidate count
-       bounded because hot cells sort out of every prefix.
+       doc-frequencies) when the bitmask gate (_bitmask_allpairs)
+       declines:
+       uniform cell frequencies → dedup's count kernel (no rank
+       window, no frequency join); a hotspot cell (max_df² ≥ Σ df) or
+       aggregate blowup (Σ df² ≥ 32·Σ df) → dedup's AllPairs prefix
+       kernel, which keeps the candidate count bounded because hot
+       cells sort out of every prefix.
 
     Signature equality uses xxhash64 of the sorted cell array (2^-64
     collision class, like every hashed scheme here).
     """
     cells = trajectory_cells(pts, traj_col, lng_col, lat_col, cell_deg)
     # Persisted: feeds the collapse stats, the frequency table, and the
-    # chosen join path — one scan of the point data, not three.
+    # chosen join path — one scan of the point data, not three. Its
+    # (traj, sh, n_sh) columns are dedup's set-frame shape.
     sig = _track_persist(
         cells.groupBy(traj_col)
-        .agg(F.sort_array(F.collect_list("cell")).alias("__arr"))
+        .agg(F.sort_array(F.collect_list("cell")).alias("sh"))
         .select(
             F.col(traj_col),
-            F.col("__arr"),
-            F.size("__arr").alias("n_cells"),
-            F.xxhash64("__arr").alias("__fp"),
+            F.col("sh"),
+            F.size("sh").alias("n_sh"),
+            F.xxhash64("sh").alias("__fp"),
         )
     )
     dstats = sig.agg(
@@ -301,13 +211,13 @@ def trajectory_jaccard_pairs(
         rep_sig = _track_persist(
             sig.join(reps.select(F.col("__rep").alias(traj_col)), traj_col, "left_semi")
         )
-    exploded = rep_sig.select(traj_col, "n_cells", F.explode("__arr").alias("cell"))
-    freq = _track_persist(exploded.groupBy("cell").agg(F.count(F.lit(1)).alias("df_c")))
+    exploded = rep_sig.select(traj_col, F.explode("sh").alias("g"))
+    freq = _track_persist(exploded.groupBy("g").agg(F.count(F.lit(1)).alias("df_g")))
     fstats = freq.agg(
         F.count(F.lit(1)).alias("universe"),
-        F.max("df_c").alias("max_df"),
-        F.sum("df_c").alias("total"),
-        F.sum(F.col("df_c") * F.col("df_c")).alias("sum_sq"),
+        F.max("df_g").alias("max_df"),
+        F.sum("df_g").alias("total"),
+        F.sum(F.col("df_g") * F.col("df_g")).alias("sum_sq"),
     ).first()
     universe = fstats["universe"] or 0
     max_df, total = (fstats["max_df"] or 0), (fstats["total"] or 0)
@@ -326,10 +236,9 @@ def trajectory_jaccard_pairs(
             exploded, freq, traj_col, threshold, universe
         )
     elif ngram_join_strategy(max_df, total, sum_sq) == "prefix":
-        rep_pairs = _prefix_pairs(exploded, freq, rep_sig, traj_col, threshold)
+        rep_pairs = _prefix_join(rep_sig, traj_col, threshold, freq)
     else:
-        sizes = rep_sig.select(traj_col, "n_cells")
-        rep_pairs = _count_pairs(exploded, sizes, traj_col, threshold)
+        rep_pairs = _count_join(rep_sig, traj_col, threshold)
     # Intra-cluster emission is unconditional: every trajectory has ≥ 1
     # cell (a point always maps to a cell), so the empty-set Jaccard
     # case of the text twins cannot arise.

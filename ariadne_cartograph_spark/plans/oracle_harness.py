@@ -172,7 +172,14 @@ def run_catalog_parity(
                 continue
             if entry.oracle is None:
                 continue
-            reports.append(compare(name, entry.fn(spark, sf_dir), entry.oracle, sf_dir, con=con))
+            try:
+                df = entry.fn(spark, sf_dir)
+            except Exception as e:  # an entry that raises while planning is one failure
+                reports.append(ParityReport(
+                    name, False, -1, -1, [], [], error=f"{type(e).__name__}: {e}"
+                ))
+            else:
+                reports.append(compare(name, df, entry.oracle, sf_dir, con=con))
             # near-dup builders persist shingle frames; release between
             # queries so a 78-entry sweep doesn't accumulate caches
             release_caches()

@@ -47,28 +47,6 @@ REGRESSION_FACTOR = 2.0
 # other sf skip the fence comparison and say so in the JSON.
 FENCE_SF = 0.1
 
-# sf1 (10x replica) engine-side fences for tools/scale_rehearsal.py, in
-# seconds (engine collect or digest time only, oracle excluded).
-SF1_ENGINE_FENCES: dict[str, float] = {
-    "agg_approx_distinct": 5.2,  # loaded-run value; idle 5.0
-    "text_repeated_span_removal": 6.0,  # r13: gated exact-dup doc collapse
-    "window_time_range_frame": 7.5,  # r14: digest clock
-    "corpus_multimodal_curation": 8.8,  # r12: persisted fingerprints + vector collapse
-    "docs_incremental_dedup_parity": 8.5,  # r14: one unified shingle store per micro-batch
-    "geo_line_simplify": 9.1,  # r14: digest clock
-    "ngram_jaccard_near_dup": 4.5,  # r11: measured auto-router with exact-dup collapse
-    "simhash_near_dup": 4.5,  # r12: popcount-packed Hamming verify
-    "similarity_ann_ivfpq": 5.5,  # loaded-run value; idle 4.9
-    "text_rolling_fingerprint": 9.6,  # loaded-run value; idle 7.0
-    "text_winnow_fingerprint_md5": 4.7,  # loaded-run value; idle 2.5
-    "trajectory_jaccard_pairs": 6.0,  # r11: bitmask all-pairs route
-    "ways_enrichment_pipeline": 11.0,  # r13: digest clock
-    "window_running_total": 8.0,  # r14: digest clock
-    "window_rank_variants": 9.0,  # r14 first pin (digest clock)
-    "scalar_array_funcs": 9.0,  # r14 first pin (digest clock)
-    "window_range_frame": 7.0,  # r14 first pin (digest clock)
-}
-
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -478,42 +478,74 @@ def test_collapse_expansion_matches_naive_pair_join(spark):
     assert any(h == 0 for _, _, h in got)
 
 
-def test_trajectory_collapse_matches_naive(spark):
-    """trajectory_jaccard_pairs' signature collapse: duplicate
-    trajectories (same points, new ids) must yield the identical pair
-    set a brute-force jaccard over cell signatures produces."""
-    import itertools
+def _traj_corpus(kind):
+    """(points, cell_deg, route) for the trajectory brute-force test.
+
+    - "coarse": 6 trajectories × 4 exact replicas on a 30° grid — a
+      tiny dense cell universe, so the bitmask all-pairs route runs.
+    - "sparse": 160 trajectories of 28 random points on a 0.01° grid
+      (> 4096 cells, df ≤ 2: n_reps²/2 > Σdf² and no hot cell) plus
+      near replicas (3 of 28 points moved) and a few exact replicas —
+      the count kernel runs.
+    - "sparse_hot": the same plus one cell every trajectory visits
+      (max_df² ≥ Σdf) — the prefix kernel runs."""
     import random
 
-    from ariadne_cartograph_spark.operators.trajectory import (
-        cell_id as _cell,  # noqa: F401  (docs the dependency)
-        trajectory_jaccard_pairs,
-    )
-
     rng = random.Random(9)
-    pts = []
-    base_traj = {
-        t: [(rng.uniform(-170, 170), rng.uniform(-80, 80)) for _ in range(8)]
-        for t in range(6)
-    }
-    for rep in range(4):
-        for t, coords in base_traj.items():
-            for lng, lat in coords:
-                pts.append((rep * 10 + t, lng, lat))
-    df = spark.createDataFrame(pts, "traj long, lng double, lat double").repartition(5)
 
+    def pt():
+        return (rng.uniform(-170, 170), rng.uniform(-80, 80))
+
+    if kind == "coarse":
+        base = {t: [pt() for _ in range(8)] for t in range(6)}
+        trajs = {rep * 10 + t: c for rep in range(4) for t, c in base.items()}
+        return trajs, 30.0, "bitmask"
+    base = {t: [pt() for _ in range(28)] for t in range(160)}
+    trajs = dict(base)
+    for t in range(20):  # near replicas: Jaccard 25/31
+        trajs[1000 + t] = base[t][:25] + [pt() for _ in range(3)]
+    for t in range(6):  # exact replicas: clears the collapse gate
+        trajs[2000 + t] = list(base[t])
+    if kind == "sparse_hot":
+        trajs = {t: c + [(0.005, 0.005)] for t, c in trajs.items()}
+        return trajs, 0.01, "prefix"
+    return trajs, 0.01, "count"
+
+
+@pytest.mark.parametrize("kind", ["coarse", "sparse", "sparse_hot"])
+def test_trajectory_collapse_matches_naive(spark, monkeypatch, kind):
+    """trajectory_jaccard_pairs on each of its three routes: duplicate
+    trajectories (same points, new ids) and near replicas must yield
+    the identical pair set a brute-force jaccard over cell signatures
+    produces; every corpus reaches its route through the real gates."""
+    import math
+
+    from ariadne_cartograph_spark.operators import trajectory as TJ
+
+    trajs, cell_deg, route = _traj_corpus(kind)
+    pts = [(t, lng, lat) for t, coords in trajs.items() for lng, lat in coords]
+    df = spark.createDataFrame(pts, "traj long, lng double, lat double").repartition(5)
+    strategies = []
+    real = TJ.ngram_join_strategy
+
+    def spy(*args):
+        strategies.append(real(*args))
+        return strategies[-1]
+
+    monkeypatch.setattr(TJ, "ngram_join_strategy", spy)
     got = {
         (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-        for r in trajectory_jaccard_pairs(
-            df, "traj", "lng", "lat", cell_deg=30.0, threshold=0.3
+        for r in TJ.trajectory_jaccard_pairs(
+            df, "traj", "lng", "lat", cell_deg=cell_deg, threshold=0.3
         ).collect()
     }
+    D.release_caches()
+    assert strategies == ([] if route == "bitmask" else [route])
     sig = {}
     for tid, lng, lat in pts:
-        import math
-
-        cx, cy = math.floor(lng / 30.0), math.floor(lat / 30.0)
-        sig.setdefault(tid, set()).add((cx, cy))
+        sig.setdefault(tid, set()).add(
+            (math.floor(lng / cell_deg), math.floor(lat / cell_deg))
+        )
     want = set()
     for x, y in itertools.combinations(sorted(sig), 2):
         j = len(sig[x] & sig[y]) / len(sig[x] | sig[y])
@@ -521,3 +553,5 @@ def test_trajectory_collapse_matches_naive(spark):
             want.add((x, y, round(j, 9)))
     assert got == want
     assert any(j == 1.0 for _, _, j in got)
+    if route != "bitmask":
+        assert any(j < 1.0 for _, _, j in got)  # pairs the route itself found

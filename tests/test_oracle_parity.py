@@ -90,3 +90,26 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert set(se.oracle_sql()) <= set(se.queries())
+
+
+def test_catalog_sweep_survives_a_raising_entry(spark, sf_dir, monkeypatch):
+    """An entry that raises at plan time (e.g. a missing fixture file)
+    is one failing report naming the error; the sweep goes on."""
+    from ariadne_cartograph_spark.plans import catalog
+    from ariadne_cartograph_spark.plans.catalog import CatalogEntry
+    from ariadne_cartograph_spark.plans.oracle_harness import run_catalog_parity
+
+    def _raises(_spark, _sf_dir):
+        raise FileNotFoundError("no such fixture: example.osm")
+
+    monkeypatch.setattr(catalog, "REGISTRY", {
+        "a_raises": CatalogEntry("a_raises", _raises, "SELECT 1 AS x"),
+        "b_passes": CatalogEntry(
+            "b_passes", lambda s, _d: s.sql("SELECT 1 AS x"), "SELECT 1 AS x"
+        ),
+    })
+    monkeypatch.setattr(catalog, "get_queries", lambda: {})
+    first, second = run_catalog_parity(spark, sf_dir)
+    assert (first.name, first.ok) == ("a_raises", False)
+    assert first.error == "FileNotFoundError: no such fixture: example.osm"
+    assert (second.name, second.ok, second.error) == ("b_passes", True, None)

@@ -10,14 +10,34 @@ evidence artifact (plans/r14/<query>_before.txt / _after.txt).
 Planning only: no job is executed (streaming-parity entries that drain
 sources at build time still run their drain, which is what the bench
 measures anyway).
+
+Expression ids (``name#123``) are renumbered in order of first
+appearance, so two dumps of the same plan from two commits diff clean
+while ids within one plan still tell same-named columns apart; the
+session-global exchange ids (``plan_id=123``) are renumbered the same
+way.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
+
+
+def renumber_ids(plan: str) -> str:
+    """``#123`` → ``#1``, ``#2``, ... in order of first appearance; the
+    session-global exchange ids (``plan_id=123``) likewise."""
+    for prefix in ("#", "plan_id="):
+        ids: dict[str, str] = {}
+        plan = re.sub(
+            re.escape(prefix) + r"(\d+)",
+            lambda m: prefix + ids.setdefault(m[1], str(len(ids) + 1)),
+            plan,
+        )
+    return plan
 
 
 def main() -> int:
@@ -44,9 +64,9 @@ def main() -> int:
             continue
         try:
             df = REGISTRY[name].fn(spark, sf_dir)
-            plan = spark._jvm.PythonSQLUtils.explainString(
+            plan = renumber_ids(spark._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
-            )
+            ))
         except Exception as exc:  # keep going: one bad entry, one bad file
             plan = f"ERROR building plan: {type(exc).__name__}: {exc}"
             rc = 1

@@ -1,8 +1,8 @@
-"""Print the SF1_ENGINE_FENCES dict for bench.py from a rehearsal
-artifact: the top-N entries by ENGINE-side seconds (oracle clock
-excluded — the r8 advice item), values as measured. Paste the output
-into bench.py; tools/scale_rehearsal.py flags >2x engine regressions
-against them on the next run.
+"""Print the SF1_ENGINE_FENCES dict for tools/scale_rehearsal.py from a
+rehearsal artifact: the top-N entries by ENGINE-side seconds (oracle
+clock excluded — the r8 advice item), values as measured. Paste the
+output into tools/scale_rehearsal.py, which flags >2x engine
+regressions against them on the next run.
 
 Usage: python tools/pin_sf1_fences.py [SCALE_REHEARSAL_sf1.json] [N]
 """
@@ -25,6 +25,7 @@ def main() -> int:
         ),
         key=lambda kv: -kv[1],
     )[:top_n]
+    print("# paste into tools/scale_rehearsal.py")
     print("SF1_ENGINE_FENCES: dict[str, float] = {")
     for name, sec in sorted(ranked):
         print(f'    "{name}": {sec},')

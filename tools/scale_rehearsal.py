@@ -24,6 +24,31 @@ import time
 
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
+from bench import REGRESSION_FACTOR  # noqa: E402
+
+# sf1 (10x replica) engine-side fences, in seconds (engine collect or
+# digest time only, oracle excluded); tools/pin_sf1_fences.py prints a
+# replacement from a rehearsal artifact.
+SF1_ENGINE_FENCES: dict[str, float] = {
+    "agg_approx_distinct": 5.2,  # loaded-run value; idle 5.0
+    "text_repeated_span_removal": 6.0,  # r13: gated exact-dup doc collapse
+    "window_time_range_frame": 7.5,  # r14: digest clock
+    "corpus_multimodal_curation": 8.8,  # r12: persisted fingerprints + vector collapse
+    "docs_incremental_dedup_parity": 8.5,  # r14: one unified shingle store per micro-batch
+    "geo_line_simplify": 9.1,  # r14: digest clock
+    "ngram_jaccard_near_dup": 4.5,  # r11: measured auto-router with exact-dup collapse
+    "simhash_near_dup": 4.5,  # r12: popcount-packed Hamming verify
+    "similarity_ann_ivfpq": 5.5,  # loaded-run value; idle 4.9
+    "text_rolling_fingerprint": 9.6,  # loaded-run value; idle 7.0
+    "text_winnow_fingerprint_md5": 4.7,  # loaded-run value; idle 2.5
+    "trajectory_jaccard_pairs": 6.0,  # r11: bitmask all-pairs route
+    "ways_enrichment_pipeline": 11.0,  # r13: digest clock
+    "window_running_total": 8.0,  # r14: digest clock
+    "window_rank_variants": 9.0,  # r14 first pin (digest clock)
+    "scalar_array_funcs": 9.0,  # r14 first pin (digest clock)
+    "window_range_frame": 7.0,  # r14 first pin (digest clock)
+}
+
 # Exact all-pairs oracles: cost ~ sum over shingles of df^2. The 10x
 # replica set multiplies every df by 10 (100x candidates), and the
 # boilerplate entry's hot shingles reach df = n_docs (10^9+ pairs per
@@ -285,14 +310,10 @@ def main() -> int:
             file=sys.stderr,
         )
 
-    # sf1 engine-side fences (pinned in bench.py next to the sf0.1
-    # fences): flag any entry whose ENGINE clock blows past 2x its
-    # pinned minimum — oracle-side drift (DuckDB recursive CTEs etc.)
-    # can't hide an engine regression anymore.
-    try:
-        from bench import SF1_ENGINE_FENCES, REGRESSION_FACTOR
-    except ImportError:
-        SF1_ENGINE_FENCES, REGRESSION_FACTOR = {}, 2.0
+    # sf1 engine-side fences (SF1_ENGINE_FENCES above, same factor as
+    # bench.py's sf0.1 fences): flag any entry whose ENGINE clock blows
+    # past 2x its pinned minimum — oracle-side drift (DuckDB recursive
+    # CTEs etc.) can't hide an engine regression anymore.
     regressions = {
         name: {"engine_sec": r["engine_sec"], "fence_sec": SF1_ENGINE_FENCES[name]}
         for name, r in results.items()
