@@ -28,7 +28,7 @@ def norm(a: Column | str) -> Column:
 def cosine(a: Column | str, b: Column | str) -> Column:
     """Cosine similarity; a zero vector scores 0.0 instead of raising
     ANSI divide-by-zero. The 0.0 convention matches the blocked numpy
-    kernels (operators/similarity unpack() clamps zero norms to 1, so
+    kernels (operators/similarity._unit_rows clamps zero norms to 1, so
     a zero vector's scores are exactly 0.0) — the column and GEMM
     paths must agree for the strategy-equivalence contract. Testdata
     has no zero vectors, so DuckDB oracles (which would yield NaN)
@@ -106,61 +106,5 @@ def literal_plane_sign_bits(vec: Column | str, planes: list[list[float]]) -> Col
                 F.lit(0).cast("long")
             )
         return out
-
-    return _bind(as_double(vec), body)
-
-
-def hyperplane_sign_bits(vec: Column | str, n_planes: int, seed: int = 42) -> Column:
-    """Random-hyperplane LSH signature as a BIGINT bit-pack.
-
-    Plane components are deterministic pseudo-randoms derived from
-    xxhash64(seed, plane, dim) — reproducible across runs/executors
-    with no side data to ship. Sign of dot(vec, plane) → bit.
-    (component_d = hash mapped to {-1,+1}: cheap Rademacher planes —
-    public SRP-LSH variant, Achlioptas-style sparse projection.)
-
-    Shape: let-bound vector + one nested transform over plane indices +
-    mask-array packing — the unrolled per-plane form re-evaluated the
-    cast array per plane and compiled ~3× slower (same fix as
-    minhash/simhash in operators/dedup.py).
-    """
-    from .text import _bind
-
-    if n_planes > 64:
-        raise ValueError(f"n_planes must be <= 64 to pack into one BIGINT, got {n_planes}")
-    # Plane 63's mask is Long.MIN_VALUE (1<<63 overflows LongType) —
-    # same sign-bit trick as the simhash masks in operators/dedup.py.
-    masks = F.array(
-        *[
-            F.lit(-(1 << 63)).cast("long") if p == 63 else F.lit(1 << p).cast("long")
-            for p in range(n_planes)
-        ]
-    )
-
-    def body(vv: Column) -> Column:
-        signs = F.transform(
-            F.sequence(F.lit(0), F.lit(n_planes - 1)),
-            lambda p: F.aggregate(
-                F.zip_with(
-                    vv,
-                    F.sequence(F.lit(0), F.size(vv) - 1),
-                    lambda x, d: x
-                    * F.when(
-                        F.pmod(F.xxhash64(F.lit(seed), p, d), F.lit(2)) == 0, 1.0
-                    ).otherwise(-1.0),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-        return F.aggregate(
-            F.zip_with(
-                signs,
-                masks,
-                lambda s, m: F.when(s >= 0, m).otherwise(F.lit(0).cast("long")),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
 
     return _bind(as_double(vec), body)

@@ -151,19 +151,18 @@ class ParquetMergeTable:
 
     @property
     def _log(self) -> str:
-        """Append-only commit log (one ``<version> <dirname>`` line per
+        """Append-only commit log (one ``<version> <manifest>`` line per
         committed transition, O_APPEND-atomic). The pointer file is the
-        atomic 'current' resolution; the log is the version→dir history
-        that time travel and vacuum read. A crashed loser's abandoned
-        candidate dir is never logged, so it can't masquerade as a
-        committed version."""
+        atomic 'current' resolution; the log is the version→manifest
+        history that time travel and vacuum read. A crashed loser's
+        abandoned candidate manifest is never logged, so it can't
+        masquerade as a committed version."""
         return os.path.join(self.path, "_LOG")
 
     def _current(self) -> tuple[int, str | None]:
         """(version, manifest path) of the visible snapshot; (0, None)
-        when the table is empty. The pointer target is a manifest JSON
-        (or, for tables written by the pre-manifest layout, a data dir
-        — ``_read_manifest`` adapts either)."""
+        when the table is empty. The pointer names a manifest
+        ``m_<version>_<uid>.json``."""
         if not os.path.exists(self._pointer):
             return 0, None
         with open(self._pointer) as f:
@@ -171,17 +170,13 @@ class ParquetMergeTable:
         d = os.path.join(self.path, name)
         if not os.path.exists(d):
             return 0, None
-        try:
-            version = int(name.split("_")[1])
-        except (IndexError, ValueError):
-            version = 1  # pre-versioning layout: treat as v1
-        return version, d
+        return int(name.split("_")[1]), d
 
     def _read_manifest(self, ref: str | None) -> dict:
         """Normalize a snapshot reference to
         ``{version, n_buckets, data: [relpaths], buckets: {id: rel},
-        txn: {app: ver}}``. ``ref`` may be a manifest JSON, a legacy
-        single-dir snapshot, or None (empty table)."""
+        txn: {app: ver}}``. ``ref`` is a manifest JSON path, or None
+        (empty table)."""
         import json as _json
 
         if ref is None:
@@ -191,25 +186,6 @@ class ParquetMergeTable:
                 "data": [],
                 "buckets": {},
                 "txn": {},
-                "stats": {},
-            }
-        if os.path.isdir(ref):  # pre-manifest layout: one dir = snapshot
-            txn_file = os.path.join(ref, "_txn.json")
-            txn = {}
-            if os.path.exists(txn_file):
-                with open(txn_file) as f:
-                    txn = {k: int(v) for k, v in _json.load(f).items()}
-            name = os.path.basename(ref)
-            try:
-                version = int(name.split("_")[1])
-            except (IndexError, ValueError):
-                version = 1
-            return {
-                "version": version,
-                "n_buckets": None,
-                "data": [name],
-                "buckets": {},
-                "txn": txn,
                 "stats": {},
             }
         with open(ref) as f:
@@ -299,8 +275,8 @@ class ParquetMergeTable:
         return out
 
     def _logged(self) -> dict[int, str]:
-        """version → dirname for every logged commit whose dir still
-        exists (vacuumed versions drop out), plus the current pointer
+        """version → manifest name for every logged commit whose manifest
+        still exists (vacuumed versions drop out), plus the current pointer
         (covers a winner that crashed between flip and log append)."""
         out: dict[int, str] = {}
         if os.path.exists(self._log):
@@ -921,8 +897,7 @@ class ParquetMergeTable:
         cur_v, cur_ref = self._current()
         now = time.time()
         removed: list[int] = []
-        # pass 1: retire manifests (legacy dir snapshots: the dir IS
-        # the manifest — removing it removes the data too)
+        # pass 1: retire manifests
         for v, name in self._logged().items():
             p = os.path.join(self.path, name)
             if p == cur_ref or v > cur_v - retain:
@@ -932,13 +907,10 @@ class ParquetMergeTable:
                     continue
             except OSError:
                 continue
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-            else:
-                try:
-                    os.remove(p)
-                except OSError:
-                    continue
+            try:
+                os.remove(p)
+            except OSError:
+                continue
             removed.append(v)
             marker = os.path.join(self.path, f"_COMMIT.v{v:09d}")
             if os.path.exists(marker):
@@ -968,7 +940,7 @@ class ParquetMergeTable:
                 except OSError:
                     pass
                 continue
-            if not (name.startswith(("d_", "v_")) and os.path.isdir(p)):
+            if not (name.startswith("d_") and os.path.isdir(p)):
                 continue
             if name in live_data:
                 continue  # whole-dir snapshot still referenced

@@ -6,15 +6,20 @@ Scale design (100 TB):
 - brute-force top-k against a FIXED query set: broadcast the queries,
   one pass over the corpus, per-partition top-k via
   TakeOrderedAndProject / window — O(corpus × queries) but zero
-  shuffle of the corpus;
-- ANN: random-hyperplane LSH buckets (signature computed row-local from
-  seeded hashes — no model state), equi-join on bucket → exact rerank
-  inside buckets. Corpus shuffles once on bucket id;
+  shuffle of the corpus; above BLOCKED_TOPK_MIN_PAIRS the same exact
+  top-k runs on the blocked-GEMM kernel (:func:`_vector_blocks` +
+  :func:`_unit_rows`), which also scores the threshold pair joins
+  (:func:`_blocked_pairs`);
+- ANN: random-hyperplane LSH buckets (literal ±1 Rademacher planes
+  seeded per table, so a DuckDB oracle replays the same buckets),
+  equi-join on bucket → exact rerank inside buckets. Corpus shuffles
+  once on bucket id, carrying ids only (:func:`_lsh_buckets`);
 - embedding near-dup: same bucket join with a distance threshold.
 """
 
 from __future__ import annotations
 
+import math
 import re
 from urllib.parse import unquote, urlparse
 
@@ -22,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..functions.vector import cosine, hyperplane_sign_bits
+from ..functions.vector import cosine, literal_plane_sign_bits, rademacher_planes
 
 
 # Below this many (corpus × query) score pairs the broadcast-crossjoin
@@ -72,21 +77,24 @@ def cosine_topk(
     the hint an ambiguous shape costs one probe job; a caller that
     knows its query-set size (a point lookup, a fixed probe list)
     passes it and routing is jobless. A wrong hint can only mis-pick
-    between two exact plans, never change results.
+    between two exact plans (or mis-size the blocked grid), never
+    change results.
     """
     qid = query_id_col or ("q_" + id_col)
     q_src = query_id_col if query_id_col is not None else id_col
+    sizes = None
     if strategy == "auto":
         integral = _is_integral_id(corpus, id_col) and _is_integral_id(queries, q_src)
         if integral:
-            strategy = _route_topk(
+            strategy, sizes = _route_topk(
                 corpus, queries, BLOCKED_TOPK_MIN_PAIRS, q_rows=queries_count_hint
             )
         else:
             strategy = "crossjoin"
     if strategy == "blocked":
         return _cosine_topk_blocked(
-            corpus, queries, id_col, vec_col, k, qid, q_src, block_rows
+            corpus, queries, id_col, vec_col, k, qid, q_src, block_rows,
+            sizes or _pair_counts(corpus, queries),
         )
     q = queries.select(
         F.col(id_col).alias(qid) if query_id_col is None else F.col(query_id_col),
@@ -157,25 +165,28 @@ def _route_topk(
     queries: DataFrame,
     threshold: int,
     q_rows: int | None = None,
-) -> str:
+) -> tuple[str, tuple[int, int] | None]:
     """Pick the physical top-k strategy (both are exact and
-    hash-identical — this is a plan decision only). Order of cheapness:
-    a caller cardinality hint plus footer statistics, footer statistics
-    alone (exact counts, or upper bounds that cannot reach the blocked
-    zone) — both jobless — otherwise one probe job per call
-    (:func:`_pair_counts`)."""
+    hash-identical — this is a plan decision only) and return it with
+    the (corpus, queries) row counts that decided it, or None when
+    only upper bounds did; "blocked" always comes with counts, which
+    size its block grid. Order of cheapness: a caller cardinality hint
+    plus footer statistics, footer statistics alone (exact counts, or
+    upper bounds that cannot reach the blocked zone) — both jobless —
+    otherwise one probe job per call (:func:`_pair_counts`)."""
     c_exact, c_ub = _footer_rows(corpus)
     q_exact, q_ub = _footer_rows(queries)
     if q_rows is not None:
         q_exact = q_ub = q_rows
     if c_exact is not None and q_exact is not None:
-        return "blocked" if c_exact * q_exact >= threshold else "crossjoin"
-    if c_ub is not None and q_ub is not None and c_ub * q_ub < threshold:
-        return "crossjoin"  # even pessimistic bounds can't reach blocked
-    n_c, n_q = _pair_counts(corpus, queries)
-    if q_rows is not None:
-        n_q = q_rows
-    return "blocked" if n_c * n_q >= threshold else "crossjoin"
+        n_c, n_q = c_exact, q_exact
+    elif c_ub is not None and q_ub is not None and c_ub * q_ub < threshold:
+        return "crossjoin", None  # even pessimistic bounds can't reach blocked
+    else:
+        n_c, n_q = _pair_counts(corpus, queries)
+        if q_rows is not None:
+            n_q = q_rows
+    return ("blocked" if n_c * n_q >= threshold else "crossjoin"), (n_c, n_q)
 
 
 def _pair_counts(corpus: DataFrame, queries: DataFrame) -> tuple[int, int]:
@@ -198,6 +209,45 @@ def _is_integral_id(df: DataFrame, col: str) -> bool:
     )
 
 
+def _vector_blocks(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_rows: int,
+    block_rows: int,
+    *keys: str,
+) -> DataFrame:
+    """(keys…, b, rows array<struct<id, v>>): the block frame every
+    blocked-GEMM kernel scores. Ids hash into ceil(n_rows / block_rows)
+    blocks within each key group, and each block's vectors pack into
+    ONE row, so a block pair is one numpy matmul. ``n_rows`` only sizes
+    the grid: a wrong count changes the block count, never a result."""
+    n_blocks = max(1, math.ceil(n_rows / block_rows))
+    return (
+        df.select(
+            *keys,
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("b"),
+            F.col(id_col).alias("id"),
+            F.col(vec_col).alias("v"),
+        )
+        .groupBy(*keys, "b")
+        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
+    )
+
+
+def _unit_rows(rows):
+    """(int64 ids, L2-normalized float64 matrix) of one packed block,
+    executor-side. A zero vector keeps norm 1, so it scores exactly 0.0
+    against everything — the column cosine()'s convention."""
+    import numpy as np
+
+    ids = np.array([r["id"] for r in rows], dtype=np.int64)
+    mat = np.array([r["v"] for r in rows], dtype=np.float64)
+    nrm = np.sqrt((mat * mat).sum(axis=1))
+    nrm[nrm == 0.0] = 1.0
+    return ids, mat / nrm[:, None]
+
+
 def _cosine_topk_blocked(
     corpus: DataFrame,
     queries: DataFrame,
@@ -207,10 +257,12 @@ def _cosine_topk_blocked(
     qid: str,
     q_src: str,
     block_rows: int,
+    sizes: tuple[int, int],
 ) -> DataFrame:
     """Blocked-GEMM exact top-k (the exact_cosine_pairs_blocked kernel
     pointed at the top-k shape): hash corpus AND queries into
-    ~n/block_rows groups of packed rows, cross the group frames, score
+    ~n/block_rows groups of packed rows (``sizes`` = the two row counts
+    that size the grids), cross the group frames, score
     each (query-block × corpus-block) with ONE numpy matmul, emit each
     block's local top-(k+1) candidates per query (k+1 because the
     query's own corpus row may occupy one slot; any global top-k item
@@ -222,51 +274,25 @@ def _cosine_topk_blocked(
     ordering uses a stable argsort on (-cosine_f32) over id-ascending
     columns, exactly the (cosine DESC, id ASC) global convention, so
     boundary ties select the same candidates the full sort would."""
-    import math
-
-    n_c = corpus.count()
-    n_q = queries.count()
-    ncb = max(1, math.ceil(n_c / block_rows))
-    nqb = max(1, math.ceil(n_q / block_rows))
-    cb = (
-        corpus.select(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(ncb)).alias("cb"),
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("cv"),
-        )
-        .groupBy("cb")
-        .agg(F.collect_list(F.struct("cid", "cv")).alias("crows"))
+    n_c, n_q = sizes
+    cb = _vector_blocks(corpus, id_col, vec_col, n_c, block_rows)
+    qb = _vector_blocks(queries, q_src, vec_col, n_q, block_rows)
+    pairs = cb.select(F.col("rows").alias("crows")).crossJoin(
+        qb.select(F.col("rows").alias("qrows"))
     )
-    qb = (
-        queries.select(
-            F.pmod(F.xxhash64(F.col(q_src)), F.lit(nqb)).alias("qb"),
-            F.col(q_src).alias("qid"),
-            F.col(vec_col).alias("qv"),
-        )
-        .groupBy("qb")
-        .agg(F.collect_list(F.struct("qid", "qv")).alias("qrows"))
-    )
-    pairs = cb.crossJoin(qb)
     kk = k + 1  # one extra slot: the query's own corpus row
 
     def score(batches):
         import numpy as np
         import pandas as pd
 
-        def unpack(rows, idf, vf):
-            ids = np.array([r[idf] for r in rows], dtype=np.int64)
-            mat = np.array([r[vf] for r in rows], dtype=np.float64)
-            nrm = np.sqrt((mat * mat).sum(axis=1))
-            nrm[nrm == 0.0] = 1.0
-            return ids, mat / nrm[:, None]
-
         for pdf in batches:
             out_q, out_c, out_s = [], [], []
             for crows, qrows in zip(pdf["crows"], pdf["qrows"]):
-                ids_c, mc = unpack(crows, "cid", "cv")
+                ids_c, mc = _unit_rows(crows)
                 order = np.argsort(ids_c)  # id-asc columns for stable ties
                 ids_c, mc = ids_c[order], mc[order]
-                ids_q, mq = unpack(qrows, "qid", "qv")
+                ids_q, mq = _unit_rows(qrows)
                 s32 = (mq @ mc.T).astype(np.float32)
                 top = np.argsort(-s32, axis=1, kind="stable")[:, : min(kk, len(ids_c))]
                 cand_c = ids_c[top]
@@ -299,6 +325,35 @@ def _cosine_topk_blocked(
     )
 
 
+def _lsh_sigs(
+    df: DataFrame, vec_col: str, n_planes: int, n_tables: int, seed: int
+) -> list:
+    """One bucket-key column per LSH table: the sign bits of ``vec_col``
+    against ``n_planes`` literal ±1 Rademacher planes seeded per table
+    (functions/vector.rademacher_planes), so a DuckDB oracle can replay
+    the exact bucketing. The plane width is read from the first row; an
+    empty frame has no row to bucket, so any width gives its (empty)
+    result."""
+    row = df.select(vec_col).first()
+    dim = len(row[0]) if row is not None else 1
+    return [
+        literal_plane_sign_bits(
+            vec_col, rademacher_planes(n_planes, dim, seed=seed + 1000 * t)
+        )
+        for t in range(n_tables)
+    ]
+
+
+def _lsh_buckets(df: DataFrame, id_col: str, sigs: list) -> DataFrame:
+    """(id, tbl, bucket): one row per LSH table. ONLY ids ride the
+    bucket-join exchange — duplicating embedding arrays n_tables-fold
+    across it would be a wide shuffle at 100 TB; callers re-fetch
+    vectors by id after the candidate pairs are deduped."""
+    return df.select(
+        F.col(id_col), F.posexplode(F.array(*sigs)).alias("tbl", "bucket")
+    )
+
+
 def ann_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -317,30 +372,11 @@ def ann_lsh_topk(
     candidate set. Recall grows with n_tables; cost is the bucket-join
     fan-in instead of |corpus| × |queries|.
     """
-    # Bucket frames carry ONLY (id, tbl, bucket) — the n_tables-way
-    # posexplode and the bucket equi-join must never duplicate embedding
-    # arrays across the exchange (at 100 TB that is a wide shuffle of
-    # n_tables copies of every vector). Vectors are re-fetched by id
-    # AFTER the candidate pairs are deduped.
-    def with_buckets(df: DataFrame, prefix: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.posexplode(
-                F.array(
-                    *[
-                        hyperplane_sign_bits(vec_col, n_planes, seed=seed + 1000 * t)
-                        for t in range(n_tables)
-                    ]
-                )
-            ).alias(f"{prefix}_tbl", f"{prefix}_bucket"),
-        )
-
+    sigs = _lsh_sigs(corpus, vec_col, n_planes, n_tables, seed)
+    c = _lsh_buckets(corpus, id_col, sigs).withColumnRenamed(id_col, "c_id")
+    q = _lsh_buckets(queries, id_col, sigs).withColumnRenamed(id_col, "q_id")
     pair_ids = (
-        with_buckets(corpus, "c")
-        .join(
-            with_buckets(queries, "q"),
-            (F.col("c_tbl") == F.col("q_tbl")) & (F.col("c_bucket") == F.col("q_bucket")),
-        )
+        c.join(q, ["tbl", "bucket"])
         .filter(F.col("c_id") != F.col("q_id"))
         .select("q_id", "c_id")
         .distinct()
@@ -374,58 +410,6 @@ def _rerank_pairs(
             F.col("c_id").alias(id_col),
             cosine("c_vec", "q_vec").cast("float").alias("cosine"),
         )
-    )
-
-
-def ann_lsh_topk_literal(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 10,
-    n_planes: int = 12,
-    n_tables: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """ann_lsh_topk twin whose hyperplanes are literal ±1 Rademacher
-    components (functions/vector.rademacher_planes) instead of
-    executor-side xxhash64 draws. Identical algorithm and plan shape;
-    the literal planes exist so a DuckDB oracle can recompute the SAME
-    buckets and therefore hash-check the full approximate pipeline —
-    see plans/text_queries.similarity_ann_lsh. The xxhash64 variant
-    stays the 100 TB path (no literal shipping, planes derived
-    executor-side)."""
-    from ..functions.vector import literal_plane_sign_bits, rademacher_planes
-
-    dim = len(corpus.select(vec_col).first()[0])
-    tables = [
-        rademacher_planes(n_planes, dim, seed=seed + 1000 * t) for t in range(n_tables)
-    ]
-
-    # Same id-only bucket-join discipline as ann_lsh_topk: no vectors on
-    # the exchange, re-fetch by id after the pair dedup.
-    def with_buckets(df: DataFrame, prefix: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(f"{prefix}_id"),
-            F.posexplode(
-                F.array(*[literal_plane_sign_bits(vec_col, planes) for planes in tables])
-            ).alias(f"{prefix}_tbl", f"{prefix}_bucket"),
-        )
-
-    pair_ids = (
-        with_buckets(corpus, "c")
-        .join(
-            with_buckets(queries, "q"),
-            (F.col("c_tbl") == F.col("q_tbl")) & (F.col("c_bucket") == F.col("q_bucket")),
-        )
-        .filter(F.col("c_id") != F.col("q_id"))
-        .select("q_id", "c_id")
-        .distinct()
-    )
-    scored = _rerank_pairs(pair_ids, corpus, queries, id_col, vec_col)
-    w = W.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-        F.col("rank") <= k
     )
 
 
@@ -483,8 +467,6 @@ def _centroid_score_array(vec: str | F.Column, cents: list[list[float]]) -> F.Co
     recompute put +30%% on the sf1 trained-IVF entry after cosine()
     gained its zero guard). Zero vectors score 0.0 on every centroid,
     matching cosine()."""
-    import math
-
     from ..functions.text import _bind
     from ..functions.vector import dot, norm
 
@@ -761,18 +743,9 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-dup: LSH-bucketed candidate generation +
     exact cosine filter (id_a < id_b)."""
-    # Id-only buckets on the self-join exchange (no vector duplication);
-    # vectors are joined back onto the deduped pairs for the exact check.
-    buckets = df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(
-                *[
-                    hyperplane_sign_bits(vec_col, n_planes, seed=seed + 1000 * t)
-                    for t in range(n_tables)
-                ]
-            )
-        ).alias("tbl", "bucket"),
+    # Vectors are joined back onto the deduped pairs for the exact check.
+    buckets = _lsh_buckets(
+        df, id_col, _lsh_sigs(df, vec_col, n_planes, n_tables, seed)
     )
     a = buckets.alias("a")
     # shuffle_hash: both sides are the SF-scaling bucket frame — a
@@ -956,65 +929,26 @@ def semantic_dedup(
         n_work = n_reps
 
     assigned = work.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
+        F.col(id_col),
+        F.col(vec_col),
         _argmax_cell(_centroid_score_array(vec_col, cents)).alias("cell"),
     )
-    # Within-cell scoring runs BLOCKED (same GEMM kernel idea as
-    # exact_cosine_pairs_blocked): cells are the comparison scope, but
-    # a skewed quantizer can funnel most of the corpus into one cell —
-    # observed at the sf1 rehearsal with centroids="first" on a
-    # clustered corpus (2x10^8 within-cell pairs; 242 s interpreted,
-    # 130 s with codegen'd per-pair cosine, ~8 s blocked). Hashing ids
-    # into ~block_rows blocks and crossing (cell, block) groups keeps
-    # the quadratic work in numpy matmuls AND breaks a hot cell into
-    # many parallel tasks instead of one straggler.
-    # float32-cast cosine on both engines so the threshold comparison
-    # is representation-stable (same convention as embedding_near_dup).
-    import math
-
-    n_blocks = max(1, math.ceil(n_work / 1024))
-    blocks = assigned.select(
-        "cell", "id", "v", F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).alias("b")
+    # Within-cell scoring runs on the blocked kernel of
+    # exact_cosine_pairs_blocked, keyed by cell: cells are the
+    # comparison scope, but a skewed quantizer can funnel most of the
+    # corpus into one cell — observed at the sf1 rehearsal with
+    # centroids="first" on a clustered corpus (2x10^8 within-cell
+    # pairs; 242 s interpreted, 130 s with codegen'd per-pair cosine,
+    # ~8 s blocked). Hashing ids into ~1024-row blocks and crossing
+    # (cell, block) groups keeps the quadratic work in numpy matmuls
+    # AND breaks a hot cell into many parallel tasks instead of one
+    # straggler. A qualifying pair (lo, hi) drops hi (keep-min-id).
+    grouped = _vector_blocks(assigned, id_col, vec_col, n_work, 1024, "cell")
+    dropped = (
+        _blocked_pairs(grouped, threshold, "cell")
+        .select(F.col("id_b").alias("id"))
+        .distinct()
     )
-    grouped = blocks.groupBy("cell", "b").agg(
-        F.collect_list(F.struct("id", "v")).alias("rows")
-    )
-    ga = grouped.select("cell", F.col("b").alias("ba"), F.col("rows").alias("ra"))
-    gb = grouped.select("cell", F.col("b").alias("bb"), F.col("rows").alias("rb"))
-    bpairs = ga.join(gb, "cell").filter(F.col("ba") <= F.col("bb"))
-    thr = float(threshold)
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        def unpack(rows):
-            ids = np.array([r["id"] for r in rows], dtype=np.int64)
-            mat = np.array([r["v"] for r in rows], dtype=np.float64)
-            nrm = np.sqrt((mat * mat).sum(axis=1))
-            nrm[nrm == 0.0] = 1.0
-            return ids, mat / nrm[:, None]
-
-        for pdf in batches:
-            out = []
-            for ba, ra, bb, rb in zip(pdf["ba"], pdf["ra"], pdf["bb"], pdf["rb"]):
-                ia, ma = unpack(ra)
-                if ba == bb:
-                    ib, mb = ia, ma
-                else:
-                    ib, mb = unpack(rb)
-                s32 = (ma @ mb.T).astype(np.float32)
-                keep = s32.astype(np.float64) >= thr
-                ii, jj = np.nonzero(keep)
-                id_i, id_j = ia[ii], ib[jj]
-                m = id_i != id_j  # self-pairs on the same-block diagonal
-                # pair (lo, hi) qualifying → hi is dropped (keep-min-id)
-                out.append(np.maximum(id_i, id_j)[m])
-            if out:
-                yield pd.DataFrame({"id": np.unique(np.concatenate(out))})
-
-    dropped = bpairs.mapInPandas(score, "id long").distinct()
     # (cell, id) re-derived by exploding `grouped` rather than from a
     # second copy of the `assigned` subtree: grouped's exchange already
     # feeds the block self-join, so the verdict join hangs off that
@@ -1080,44 +1014,42 @@ def exact_cosine_pairs_blocked(
     join-based exact form; equality is pinned in
     tests/test_dedup_similarity.py.
     """
-    import math
-
     n = df.count()  # one scalar aggregate to size the block grid
-    n_blocks = max(1, math.ceil(n / block_rows))
-    blocks = df.select(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("b"),
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-    )
-    grouped = blocks.groupBy("b").agg(
-        F.collect_list(F.struct("id", "v")).alias("rows")
-    )
-    ga = grouped.select(F.col("b").alias("ba"), F.col("rows").alias("ra"))
-    gb = grouped.select(F.col("b").alias("bb"), F.col("rows").alias("rb"))
-    pairs = ga.join(gb, F.col("ba") <= F.col("bb"))
+    grouped = _vector_blocks(df, id_col, vec_col, n, block_rows)
+    return _blocked_pairs(grouped, threshold)
 
+
+def _blocked_pairs(grouped: DataFrame, threshold: float, *keys: str) -> DataFrame:
+    """(id_a, id_b, cosine float32), id_a < id_b, for every pair of
+    rows in a :func:`_vector_blocks` frame whose cosine is >= threshold:
+    blocks with equal ``keys`` pair up (upper triangle, ba <= bb) and
+    each block pair is one numpy matmul."""
+    ga = grouped.select(*keys, F.col("b").alias("ba"), F.col("rows").alias("ra"))
+    gb = grouped.select(
+        *[F.col(c).alias(f"__{c}") for c in keys],
+        F.col("b").alias("bb"),
+        F.col("rows").alias("rb"),
+    )
+    # A condition join, not join(gb, []): the key list may be empty.
+    on = F.col("ba") <= F.col("bb")
+    for c in keys:
+        on = on & (F.col(c) == F.col(f"__{c}"))
+    pairs = ga.join(gb, on).select("ba", "ra", "bb", "rb")
     thr = float(threshold)
 
     def score(batches):
         import numpy as np
         import pandas as pd
 
-        def unpack(rows):
-            ids = np.array([r["id"] for r in rows], dtype=np.int64)
-            mat = np.array([r["v"] for r in rows], dtype=np.float64)
-            nrm = np.sqrt((mat * mat).sum(axis=1))
-            nrm[nrm == 0.0] = 1.0
-            return ids, mat / nrm[:, None]
-
         for pdf in batches:
             out_a, out_b, out_c = [], [], []
             for ba, ra, bb, rb in zip(pdf["ba"], pdf["ra"], pdf["bb"], pdf["rb"]):
-                ia, ma = unpack(ra)
+                ia, ma = _unit_rows(ra)
                 same = ba == bb
                 if same:
                     ib, mb = ia, ma
                 else:
-                    ib, mb = unpack(rb)
+                    ib, mb = _unit_rows(rb)
                 # f32 cast first, then compare against the DOUBLE
                 # threshold (numpy would silently downcast the
                 # threshold to f32 otherwise — not what SQL does).

@@ -714,15 +714,14 @@ SELECT q_id, vec_id, cosine, rank FROM ranked WHERE rank <= {k} ORDER BY q_id, r
 
 @register("similarity_ann_lsh", tags=["U4"], oracle=_ann_lsh_oracle())
 def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-table hyperplane-LSH ANN with literal Rademacher planes
-    (operators/similarity.ann_lsh_topk_literal) so the oracle replays
-    the exact bucketing. The xxhash64-plane variant (ann_lsh_topk) is
-    the 100 TB path — same plan shape, planes derived executor-side;
-    its recall vs brute force is pinned in tests."""
+    """Multi-table hyperplane-LSH ANN (operators/similarity.ann_lsh_topk).
+    Its planes are literal Rademacher ±1 components, so the oracle
+    replays the exact bucketing; its recall vs brute force is pinned in
+    tests."""
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 4)
     return (
-        S.ann_lsh_topk_literal(emb, queries, "vec_id", "embedding", k=5)
+        S.ann_lsh_topk(emb, queries, "vec_id", "embedding", k=5)
         .select("q_id", "vec_id", "cosine", "rank")
         .orderBy("q_id", "rank")
     )
@@ -1111,9 +1110,9 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     vacuously (0 rows on both sides).
 
     At 100 TB the exact plan is replaced by
-    operators/similarity.embedding_near_dup_pairs (hyperplane-LSH
-    buckets + exact cosine filter, same output contract); its recall
-    against this exact twin is pinned in
+    operators/similarity.embedding_near_dup_pairs (the hyperplane-LSH
+    bucket join of ann_lsh_topk + exact cosine filter, same output
+    contract); its precision is pinned in
     tests/test_dedup_similarity.py. Random low-similarity corpora
     defeat LSH recall at low thresholds, so the driver-checked entry
     is the exact form."""

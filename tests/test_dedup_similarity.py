@@ -113,6 +113,14 @@ def test_embedding_near_dup_precision(spark):
         assert r.cosine >= 0.99
 
 
+def test_lsh_on_empty_corpus_is_empty(spark):
+    # The plane width comes from the first row; an empty corpus has
+    # none and must still give an empty result, not raise.
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    assert S.ann_lsh_topk(empty, empty, "vec_id", "embedding", k=5).count() == 0
+    assert S.embedding_near_dup_pairs(empty, "vec_id", "embedding").count() == 0
+
+
 @pytest.mark.slow
 def test_prefix_filter_variant_matches_count_based(spark, exact_pairs):
     """ngram_jaccard_pairs_prefix (AllPairs prefix filter) is lossless:

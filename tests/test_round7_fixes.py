@@ -181,14 +181,14 @@ def test_route_topk_footer_fast_paths(spark, spark_jobs):
     filt = emb.filter(F.col("vec_id") < 5)
     with spark_jobs() as probe:
         # exact×exact: decide either way
-        assert S._route_topk(emb, emb, n * n + 1) == "crossjoin"
-        assert S._route_topk(emb, emb, n * n) == "blocked"
+        assert S._route_topk(emb, emb, n * n + 1) == ("crossjoin", (n, n))
+        assert S._route_topk(emb, emb, n * n) == ("blocked", (n, n))
         # ub×ub below threshold: the filter side has only a bound
-        assert S._route_topk(emb, filt, n * n + 1) == "crossjoin"
+        assert S._route_topk(emb, filt, n * n + 1) == ("crossjoin", None)
     assert probe.jobs == []
     # ambiguous (bound straddles): falls back to one count job
     with spark_jobs() as probe:
-        assert S._route_topk(emb, filt, n * 5 + 1) == "crossjoin"
+        assert S._route_topk(emb, filt, n * 5 + 1) == ("crossjoin", (n, 5))
     assert probe.actions == 1
 
 
@@ -275,6 +275,32 @@ def test_queries_count_hint_jobless_and_exact(spark, spark_jobs):
         queries_count_hint=10**9,
     ).collect()
     assert sorted(map(tuple, wrong)) == sorted(map(tuple, explicit))
+
+
+def test_blocked_topk_builds_on_the_probe_counts(spark, emb, spark_jobs, monkeypatch):
+    """An auto-routed blocked top-k sizes its block grids from the
+    router's counts: building it runs the one probe action and no
+    count of its own. An explicit strategy="blocked" counts (one
+    action); both return the crossjoin result."""
+    monkeypatch.setattr(S, "BLOCKED_TOPK_MIN_PAIRS", 10)
+    calls = []
+    real = S._cosine_topk_blocked
+    monkeypatch.setattr(
+        S, "_cosine_topk_blocked", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    q = emb.filter(F.col("vec_id") < 3)
+    with spark_jobs() as probe:
+        auto = S.cosine_topk(emb, q, "vec_id", "embedding", k=4, block_rows=16)
+    assert calls and probe.actions == 1
+    with spark_jobs() as probe:
+        explicit = S.cosine_topk(
+            emb, q, "vec_id", "embedding", k=4, strategy="blocked", block_rows=16
+        )
+    assert probe.actions == 1
+    cross = S.cosine_topk(emb, q, "vec_id", "embedding", k=4, strategy="crossjoin")
+    want = sorted(map(tuple, cross.collect()))
+    assert sorted(map(tuple, auto.collect())) == want
+    assert sorted(map(tuple, explicit.collect())) == want
 
 
 def test_auto_route_matches_explicit_crossjoin(spark, emb):

@@ -131,3 +131,44 @@ def test_high_threshold_disables_collapse(dup_corpus, monkeypatch):
         assert len(collapsed_df.collect()) == 28
     finally:
         release_caches()
+
+
+def test_cross_block_pairs_match_numpy(spark):
+    # >1024 vectors in one cell: the within-cell scorer splits the cell
+    # into two hash blocks, so qualifying pairs straddle blocks (ba < bb)
+    # as well as sitting inside one. No exact duplicates, so the
+    # collapse gate stays off. Oracle: f32 cosine >= threshold drops
+    # the larger id of the pair.
+    import random
+
+    import numpy as np
+
+    rng = random.Random(11)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(1100)]
+    corpus = _mk_corpus(spark, rows)
+    threshold = 0.95
+    mat = np.array([v for _, v in rows], dtype=np.float64)
+    mat /= np.sqrt((mat * mat).sum(axis=1))[:, None]
+    s32 = (mat @ mat.T).astype(np.float32)
+    ii, jj = np.nonzero(np.triu(s32.astype(np.float64) >= threshold, k=1))
+    want = set(jj.tolist())
+    block = {
+        r["vec_id"]: r["b"]
+        for r in corpus.select(
+            "vec_id", F.pmod(F.xxhash64("vec_id"), F.lit(2)).alias("b")
+        ).collect()
+    }
+    assert any(block[i] != block[j] for i, j in zip(ii.tolist(), jj.tolist()))
+    assert any(block[i] == block[j] for i, j in zip(ii.tolist(), jj.tolist()))
+    try:
+        out = {
+            r["id"]: r["is_dropped"]
+            for r in S.semantic_dedup(
+                corpus, "vec_id", "embedding",
+                threshold=threshold, n_centroids=1, centroids="first",
+            ).collect()
+        }
+    finally:
+        release_caches()
+    assert len(out) == 1100
+    assert {i for i, d in out.items() if d} == want

@@ -14,8 +14,8 @@ measures anyway).
 Expression ids (``name#123``) are renumbered in order of first
 appearance, so two dumps of the same plan from two commits diff clean
 while ids within one plan still tell same-named columns apart; the
-session-global exchange ids (``plan_id=123``) are renumbered the same
-way.
+session-global exchange ids (``plan_id=123``) and lambda variable
+suffixes (``lambda x_754``) are renumbered the same way.
 """
 
 from __future__ import annotations
@@ -29,12 +29,13 @@ sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
 def renumber_ids(plan: str) -> str:
     """``#123`` → ``#1``, ``#2``, ... in order of first appearance; the
-    session-global exchange ids (``plan_id=123``) likewise."""
-    for prefix in ("#", "plan_id="):
+    session-global exchange ids (``plan_id=123``) and lambda variable
+    suffixes (``x_754`` → ``x_1``) likewise."""
+    for pattern in (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(\blambda '?[A-Za-z]\w*?_)(\d+)\b"):
         ids: dict[str, str] = {}
         plan = re.sub(
-            re.escape(prefix) + r"(\d+)",
-            lambda m: prefix + ids.setdefault(m[1], str(len(ids) + 1)),
+            pattern,
+            lambda m: m[1] + ids.setdefault(m[2], str(len(ids) + 1)),
             plan,
         )
     return plan
