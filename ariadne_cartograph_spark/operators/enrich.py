@@ -1,29 +1,33 @@
 """Raster-tile enrichment dataflow (SURVEY.md §3 E1) — the reference's
 signature pipeline (`/root/reference/update_ways_metadata.py:12-35`)
-re-expressed as one lazy DataFrame plan:
+re-expressed as one lazy DataFrame plan over every requested provider:
 
     ways(gid, geom)
       → posexplode vertices                      (P4)
-      → Web-Mercator + tile/pixel, native math   (P5, P6 — no UDF)
-      → distinct tiles → materialize → join back (S2/S3/J2: the dict
-        cache becomes dedup + broadcast join — pure dataflow)
-      → per-tile vectorized pixel sampling       (P7/P9: applyInPandas,
-        decode each tile ONCE, numpy-sample all its coordinates — the
-        reference decodes once but samples scalar-ly)
-      → exact median per way                     (A1: percentile, not
+      → per provider p: Web-Mercator + tile/pixel at p's zoom, native
+        math, tagged with the literal index p    (P5, P6 — no UDF)
+      → union, distinct (p, z, x, y, px, py)     (S2/S3/J2: the dict
+        cache becomes dedup + join back — pure dataflow)
+      → one grouped applyInPandas per (p, z, x, y) tile: fetch the
+        tile inside its group, decode it ONCE, numpy-sample all its
+        pixels                                   (P7/P9: the reference
+        decodes once but samples scalar-ly)
+      → exact median per way and provider        (A1: percentile, not
         approx — np.median parity)
-      → global max → broadcast-normalize         (A2/A3: crossJoin of a
-        1-row aggregate, no single-partition window)
+      → global max per provider → broadcast-normalize (A2/A3: crossJoin
+        of a 1-row aggregate, no single-partition window)
 
 Boundaries that were process hops in the reference (DB cursor, HTTP,
 dict) are shuffles here; the only Python is the Arrow-batched pixel
-sampler, which is O(distinct tiles) not O(vertices).
+sampler, which is O(distinct tiles) not O(vertices), and it runs as
+one stage however many providers a call asks for.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -32,14 +36,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.geo import lnglat_to_tile_pixel
-from ..sources.tiles import decode_tile, synthetic_tiles
+from ..sources.tiles import decode_tile, synth_tile_array
 
 
 @dataclass
 class Provider:
     """The reference's CachedTiledDataProvider as plan configuration
-    (`dataproviders.py:59-69`): URL/template is replaced by a
-    tile-materialization function; value_fn by a named vectorized
+    (`dataproviders.py:59-69`): URL/template is replaced by a per-tile
+    fetch function ``tile_source(z, x, y) → bytes | None`` (default:
+    the closed-form synthetic tile); value_fn by a named vectorized
     sampler (U1/U2 extension point)."""
 
     name: str
@@ -47,8 +52,7 @@ class Provider:
     zoom: int = 12
     tile_size: int = 256
     value_kind: str = "gray"  # 'gray' | 'greenery_abs' | 'greenery_rel'
-    tile_source: Callable[[SparkSession, DataFrame], DataFrame] | None = None
-    extra: dict = field(default_factory=dict)
+    tile_source: Callable[[int, int, int], bytes | None] | None = None
 
 
 STRAVA_PROVIDER = Provider(name="strava_popularity", mode="L", zoom=12, value_kind="gray")
@@ -71,18 +75,17 @@ def _box_sums(plane: np.ndarray, x0, x1, y0, y1) -> np.ndarray:
 
 
 def _sample_values(
-    pixels: pd.DataFrame, tile: pd.DataFrame, value_kind: str, tile_size: int, mode: str
+    pixels: pd.DataFrame, tile: bytes | None, value_kind: str, tile_size: int, mode: str
 ) -> pd.DataFrame:
-    """Vectorized per-tile sampler (cogrouped): ``pixels`` holds the
-    DISTINCT (px,py) of ONE tile; ``tile`` holds that tile's single row
-    (or is empty if the fetch failed → NaN, P11)."""
-    img_bytes = tile["img"].iloc[0] if len(tile) else None
+    """Vectorized per-tile sampler: ``pixels`` holds the DISTINCT
+    (p,z,x,y,px,py) rows of ONE tile; ``tile`` is that tile's bytes
+    (None if the fetch failed → NaN, P11)."""
     px = pixels["px"].to_numpy()
     py = pixels["py"].to_numpy()
-    if img_bytes is None:
+    if tile is None:
         vals = np.full(len(pixels), np.nan)
     else:
-        arr = decode_tile(bytes(img_bytes), mode, tile_size)
+        arr = decode_tile(tile, mode, tile_size)
         if value_kind == "gray":
             # reference strava_value: img.getpixel((x,y))/255
             # (update_ways_metadata.py:64-65)
@@ -117,7 +120,8 @@ def _sample_values(
                 )
         else:
             raise ValueError(f"unknown value_kind {value_kind}")
-    out = pixels[["z", "x", "y", "px", "py"]].copy()
+    # applyInPandas matches output columns by name: keep every key
+    out = pixels.copy()
     out["value"] = vals
     return out
 
@@ -125,9 +129,8 @@ def _sample_values(
 def explode_way_coords(ways: DataFrame) -> DataFrame:
     """ways(gid, geom) → one (gid, lng, lat) row per vertex. Zoom- and
     provider-independent, so a multi-provider pipeline can materialize
-    it ONCE and share it across every enrichment pass (the reference
-    walks the ways cursor once per provider; see update_ways_metadata
-    .run's one-pass loop)."""
+    it ONCE and share it across the per-provider projections of
+    sample_tile_values (see update_ways_metadata.run)."""
     return ways.select("gid", F.posexplode("geom").alias("pos", "pt")).select(
         "gid", F.col("pt.lng").alias("lng"), F.col("pt.lat").alias("lat")
     )
@@ -136,82 +139,92 @@ def explode_way_coords(ways: DataFrame) -> DataFrame:
 def sample_tile_values(
     spark: SparkSession,
     ways: DataFrame,
-    provider: Provider,
+    providers: list[Provider],
     coords: DataFrame | None = None,
 ) -> DataFrame:
-    """ways(gid, geom) → (gid, value) one row per vertex. ``coords``:
+    """ways(gid, geom) → (gid, p, value): one row per vertex and
+    provider, ``p`` the provider's index in ``providers``. ``coords``:
     an optional pre-exploded (gid, lng, lat) frame (explode_way_coords)
-    — pass a persisted one to share the explode across providers; the
-    output is identical either way."""
+    — pass a persisted one so the providers' projections share one
+    explode; the output is identical either way."""
     if coords is None:
         coords = explode_way_coords(ways)
-    tx, ty, px, py = lnglat_to_tile_pixel("lng", "lat", provider.zoom, provider.tile_size)
-    keyed = coords.select(
-        "gid",
-        F.lit(provider.zoom).cast("int").alias("z"),
-        tx.alias("x"),
-        ty.alias("y"),
-        px.cast("int").alias("px"),
-        py.cast("int").alias("py"),
-    )
-    tile_source = provider.tile_source or (
-        lambda sp, needed: synthetic_tiles(sp, needed, provider.mode, provider.tile_size)
-    )
-    tiles = tile_source(spark, keyed)
-    # A pixel's value depends only on (z,x,y,px,py) — so the Python
+    projections = []
+    for i, prov in enumerate(providers):
+        tx, ty, px, py = lnglat_to_tile_pixel("lng", "lat", prov.zoom, prov.tile_size)
+        projections.append(
+            coords.select(
+                "gid",
+                F.lit(i).alias("p"),
+                F.lit(prov.zoom).cast("int").alias("z"),
+                tx.alias("x"),
+                ty.alias("y"),
+                px.cast("int").alias("px"),
+                py.cast("int").alias("py"),
+            )
+        )
+    keyed = reduce(DataFrame.unionAll, projections)
+
+    def sample(key, pdf):
+        p, z, x, y = (int(k) for k in key)
+        prov = providers[p]
+        if prov.tile_source is None:
+            tile = synth_tile_array(x, y, z, prov.mode, prov.tile_size).tobytes()
+        else:
+            tile = prov.tile_source(z, x, y)
+        return _sample_values(pdf, tile, prov.value_kind, prov.tile_size, prov.mode)
+
+    # A pixel's value depends only on (p,z,x,y,px,py) — so the Python
     # sampling stage runs over DISTINCT pixels (≤ tile_size² per tile,
     # independent of vertex count: the scale-invariant. At 100 TB the
-    # vertex frame grows; this stage doesn't). Cogrouped applyInPandas
-    # pairs each tile's pixel group with its single tile row, so image
-    # bytes are never replicated per coordinate and never shuffled more
-    # than once.
-    pixels = keyed.select("z", "x", "y", "px", "py").dropDuplicates()
-    sampled_px = (
-        pixels.groupBy("z", "x", "y")
-        .cogroup(tiles.groupBy("z", "x", "y"))
-        .applyInPandas(
-            lambda pix, tile: _sample_values(
-                pix, tile, provider.value_kind, provider.tile_size, provider.mode
-            ),
-            schema="z int, x long, y long, px int, py int, value double",
-        )
+    # vertex frame grows; this stage doesn't). Grouping by tile makes
+    # each distinct tile one group, so its fetch runs once and its
+    # bytes never enter the plan.
+    pixels = keyed.select("p", "z", "x", "y", "px", "py").dropDuplicates()
+    sampled_px = pixels.groupBy("p", "z", "x", "y").applyInPandas(
+        sample, schema="p int, z int, x long, y long, px int, py int, value double"
     )
     # Join the small value frame back to per-vertex rows. AQE turns
     # this into a broadcast join at region scale (values ≤ 65k/tile);
     # at continental scale it stays a well-distributed shuffle join on
-    # the 5-part pixel key.
-    return keyed.join(sampled_px, ["z", "x", "y", "px", "py"], "left").select(
-        "gid", "value"
+    # the 6-part pixel key.
+    return keyed.join(sampled_px, ["p", "z", "x", "y", "px", "py"], "left").select(
+        "gid", "p", "value"
     )
 
 
 def enrich_ways(
     spark: SparkSession,
     ways: DataFrame,
-    provider: Provider,
+    providers: list[Provider],
     coords: DataFrame | None = None,
 ) -> DataFrame:
-    """Full E1: per-way exact median of sampled values, normalized by
-    the global max median (update_ways_metadata.py:29-33). Returns
-    (gid, <provider.name>) with values in [0,1]. ``coords`` as in
-    sample_tile_values."""
-    sampled = sample_tile_values(spark, ways, provider, coords=coords)
+    """Full E1 for every provider at once: per-way exact median of
+    sampled values, normalized by the provider's global max median
+    (update_ways_metadata.py:29-33). Returns (gid, <p.name>…) with
+    values in [0,1], one column per provider in order. ``coords`` as
+    in sample_tile_values."""
+    sampled = sample_tile_values(spark, ways, providers, coords=coords)
+    idx = range(len(providers))
     # NOTE: the static plan shows the gmax broadcast side repeating the
     # whole sampling subtree, but runtime ReuseExchange/ReuseSubquery
     # dedupes the identical shuffle stages — measured FASTER than an
     # explicit persist of the median frame, which breaks exchange reuse
     # and pays a cache materialization (2.7s vs 8-17s at sf0.1).
-    medians = sampled.groupBy("gid").agg(F.median("value").alias("median_value"))
-    gmax = medians.agg(F.max("median_value").alias("gmax"))
+    medians = sampled.groupBy("gid").agg(
+        *(F.median(F.when(F.col("p") == i, F.col("value"))).alias(f"m{i}") for i in idx)
+    )
+    gmax = medians.agg(*(F.max(f"m{i}").alias(f"g{i}") for i in idx))
     return medians.crossJoin(F.broadcast(gmax)).select(
         "gid",
         # All-zero tiles → 0/0: the reference's numpy yields NaN; ANSI
         # mode (Spark 4 default) would throw DIVIDE_BY_ZERO instead, so
         # the NaN branch is explicit (documented edge case, FIXTURES.md,
         # pinned in test_enrichment).
-        F.when(
-            F.col("gmax") != 0, F.col("median_value") / F.col("gmax")
-        )
-        .otherwise(F.lit(float("nan")))
-        .alias(provider.name),
+        *(
+            F.when(F.col(f"g{i}") != 0, F.col(f"m{i}") / F.col(f"g{i}"))
+            .otherwise(F.lit(float("nan")))
+            .alias(prov.name)
+            for i, prov in enumerate(providers)
+        ),
     )

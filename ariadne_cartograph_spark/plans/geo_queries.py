@@ -228,10 +228,10 @@ def ways_enrichment_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     real thing (binary tiles, pandas sampler, median, normalize); the
     oracle recomputes pixel values analytically from the closed-form
     synthetic tile definition."""
-    from ..operators.enrich import STRAVA_PROVIDER, enrich_ways, sample_tile_values
+    from ..operators.enrich import STRAVA_PROVIDER, sample_tile_values
 
     ways = ways_from_lineitem(spark, sf_dir)
-    sampled = sample_tile_values(spark, ways, STRAVA_PROVIDER)
+    sampled = sample_tile_values(spark, ways, [STRAVA_PROVIDER])
     # no persist: runtime exchange reuse dedupes the shared subtree
     # under gmax (see operators/enrich.py:enrich_ways note)
     med = sampled.groupBy("gid").agg(F.median("value").alias("med"))
@@ -903,7 +903,7 @@ def osm_ways_enrichment_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     ways = geo.filter(F.col("tags").getItem("highway").isNotNull()).select(
         F.col("id").alias("gid"), "geom"
     )
-    enriched = enrich_ways(spark, ways, GMAPS_GREENERY_PROVIDER)
+    enriched = enrich_ways(spark, ways, [GMAPS_GREENERY_PROVIDER])
     return (
         enriched.groupBy((F.col("gid") % 10).alias("g"))
         .agg(

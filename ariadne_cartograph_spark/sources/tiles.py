@@ -1,23 +1,24 @@
 """Tile sources (SURVEY.md §2.1 S2/S3): the reference fetches XYZ
 raster tiles over HTTP per *distinct* (x,y,z) with a dict cache
 (`/root/reference/dataproviders.py:79-105`). The engine replaces the
-side-effecting cache with pure dataflow: the coordinate frame is
-deduplicated to distinct tiles, tiles are materialized (fetched or
-synthesized) once, and joined back — same fetch amplification (1 GET
-per distinct tile, BASELINE.md), but sharded across executors.
+side-effecting cache with dataflow: the enrichment sampler
+(``operators.enrich``) groups its pixels by tile, so each distinct
+tile is one group, and the group calls its provider's tile source
+once — same fetch amplification (1 GET per distinct tile, BASELINE.md),
+sharded across executors, with no tile bytes moving through the plan.
 
-Two providers:
+A tile source is a function ``(z, x, y) → bytes | None``:
 
-- ``synthetic_tiles``: deterministic closed-form pixels (FIXTURES.md
+- the default (a ``Provider`` without ``tile_source``) is
+  ``synth_tile_array``: deterministic closed-form pixels (FIXTURES.md
   §7) — grayscale v = (px+py+x+y+z) mod 256; RGB r=px, g=(px+py),
   b=py (mod 256). Stored as raw row-major uint8 bytes (mode 'L': 1
   byte/px; 'RGB': 3). No image libs needed; the pure-Python oracle
   recomputes values exactly.
-- ``http_tiles``: executor-side HTTP GET via mapInPandas, gated behind
-  an import-try (no network in tests — SURVEY.md §5.2). Fetch failures
-  yield NULL img (the reference's crash-on-failed-fetch,
-  `dataproviders.py:103-105`, is a documented deviation: we propagate
-  NULL instead, P11).
+- ``http_tiles`` builds an HTTP GET fetcher (no network in tests —
+  SURVEY.md §5.2). Fetch failures yield None → NaN samples (the
+  reference's crash-on-failed-fetch, `dataproviders.py:103-105`, is a
+  documented deviation: we propagate instead, P11).
 
 PNG decode: this container has no image codecs — ``decode_tile``
 handles mode 'L'/'RGB' raw bytes natively and raises NotImplementedError
@@ -26,21 +27,10 @@ for 'png' unless PIL is importable (multimodal stub contract).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 from string import Template
 
 import numpy as np
-import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 # One-time real-codec probe (see decode_tile): failed imports are not
 # cached by Python, so this must not run per decoded tile.
@@ -48,17 +38,6 @@ try:
     from PIL import Image as _PIL_IMAGE  # noqa: N816  (not in this container)
 except Exception:
     _PIL_IMAGE = None
-
-TILE_SCHEMA = StructType(
-    [
-        StructField("z", IntegerType()),
-        StructField("x", LongType()),
-        StructField("y", LongType()),
-        StructField("mode", StringType()),
-        StructField("tile_size", IntegerType()),
-        StructField("img", BinaryType()),
-    ]
-)
 
 
 def synth_tile_array(x: int, y: int, z: int, mode: str, tile_size: int) -> np.ndarray:
@@ -178,138 +157,84 @@ def decode_tile(img: bytes, mode: str, tile_size: int) -> np.ndarray:
     raise ValueError(f"unknown mode {mode}")
 
 
-def synthetic_tiles(
-    spark: SparkSession, needed: DataFrame, mode: str, tile_size: int = 256
-) -> DataFrame:
-    """Materialize the distinct tiles listed in ``needed`` (cols z,x,y)
-    with closed-form pixels. Generation happens executor-side in
-    mapInPandas — only tile *keys* move through the plan."""
-    distinct = needed.select("z", "x", "y").distinct()
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for z, x, y in zip(pdf["z"], pdf["x"], pdf["y"]):
-                arr = synth_tile_array(int(x), int(y), int(z), mode, tile_size)
-                rows.append(
-                    {
-                        "z": int(z),
-                        "x": int(x),
-                        "y": int(y),
-                        "mode": mode,
-                        "tile_size": tile_size,
-                        "img": arr.tobytes(),
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return distinct.mapInPandas(gen, schema=TILE_SCHEMA)
 
 
 def http_tiles(
-    spark: SparkSession,
-    needed: DataFrame,
     url_template: str,
-    mode: str,
-    tile_size: int = 256,
     headers: dict | None = None,
     max_retries: int = 3,
     backoff_s: float = 0.5,
     rate_limit_per_s: float | None = None,
     timeout_s: float = 30.0,
-) -> DataFrame:
-    """Fetch distinct tiles over HTTP (reference S2 semantics, URL
-    ${x}/${y}/${z} Template — `dataproviders.py:96`). Executor-side,
-    one *logical* GET per distinct tile; failures → NULL img (P11
+) -> Callable[[int, int, int], bytes | None]:
+    """A tile source that GETs ``url_template`` (reference S2
+    semantics, ${x}/${y}/${z} Template — `dataproviders.py:96`) with
+    ``headers``. One *logical* GET per call; failures → None (P11
     fixed).
 
-    Egress politeness (a planet-scale import fans this map out across
-    every executor — an impolite fetch loop is a self-inflicted DDoS
-    on the tile service):
+    Egress politeness (a planet-scale import fans the sampler out
+    across every executor — an impolite fetch loop is a self-inflicted
+    DDoS on the tile service):
 
     - transient failures (connection errors, 5xx, 429) retry up to
       ``max_retries`` times with exponential backoff starting at
       ``backoff_s`` (deterministic doubling), honoring a numeric
       ``Retry-After`` response header when the server sends one;
     - permanent client errors (404 and other non-429 4xx) do NOT
-      retry — they are NULL immediately;
-    - ``rate_limit_per_s`` paces requests *per partition* (token
-      spacing between consecutive GETs, retries included). Cluster-wide
-      egress is then bounded by partitions × rate: size the partition
-      count of ``needed`` to the service's documented budget.
+      retry — they are None immediately;
+    - ``rate_limit_per_s`` paces consecutive GETs of one fetcher
+      (token spacing, retries included). The pacing state lives in the
+      fetcher, and the sampler deserializes its fetcher once per task,
+      so the pace holds *per partition*: cluster-wide egress is bounded
+      by partitions × rate.
     """
-    distinct = needed.select("z", "x", "y").distinct()
+    import time
 
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time as _time
+    min_interval = 1.0 / rate_limit_per_s if rate_limit_per_s else 0.0
+    last_req = 0.0
 
+    def fetch(z: int, x: int, y: int) -> bytes | None:
+        nonlocal last_req
         try:
             import requests
         except ImportError:
-            requests = None
-        min_interval = 1.0 / rate_limit_per_s if rate_limit_per_s else 0.0
-        last_req = 0.0
-
-        def get_with_retry(url: str) -> bytes | None:
-            nonlocal last_req
-            delay = backoff_s
-            for attempt in range(max_retries + 1):
-                if min_interval:
-                    wait = last_req + min_interval - _time.monotonic()
-                    if wait > 0:
-                        _time.sleep(wait)
-                resp = None
-                try:
-                    last_req = _time.monotonic()
-                    resp = requests.get(url, headers=headers, timeout=timeout_s)
-                except Exception:
-                    resp = None  # connection-level failure: retryable
-                if resp is not None:
-                    if resp.status_code < 400:
-                        return resp.content
-                    if resp.status_code != 429 and resp.status_code < 500:
-                        return None  # permanent client error: no retry
-                if attempt == max_retries:
-                    return None  # NULL propagation, not a crash
-                retry_after = None
-                if resp is not None:
-                    ra = resp.headers.get("Retry-After")
-                    try:
-                        retry_after = float(ra) if ra is not None else None
-                    except ValueError:
-                        retry_after = None
-                    # The header is server-controlled: clamp so a
-                    # malformed negative value can't crash the executor
-                    # task (time.sleep raises on negatives — the
-                    # "failures → NULL, not a crash" contract) and a
-                    # hostile/buggy huge value can't hang the slot.
-                    if retry_after is not None:
-                        retry_after = max(0.0, min(retry_after, 60.0))
-                _time.sleep(retry_after if retry_after is not None else delay)
-                delay *= 2
             return None
+        url = Template(url_template).substitute({"x": x, "y": y, "z": z})
+        delay = backoff_s
+        for attempt in range(max_retries + 1):
+            if min_interval:
+                wait = last_req + min_interval - time.monotonic()
+                if wait > 0:
+                    time.sleep(wait)
+            resp = None
+            try:
+                last_req = time.monotonic()
+                resp = requests.get(url, headers=headers, timeout=timeout_s)
+            except Exception:
+                resp = None  # connection-level failure: retryable
+            if resp is not None:
+                if resp.status_code < 400:
+                    return resp.content
+                if resp.status_code != 429 and resp.status_code < 500:
+                    return None  # permanent client error: no retry
+            if attempt == max_retries:
+                return None  # None propagation, not a crash
+            retry_after = None
+            if resp is not None:
+                ra = resp.headers.get("Retry-After")
+                try:
+                    retry_after = float(ra) if ra is not None else None
+                except ValueError:
+                    retry_after = None
+                # The header is server-controlled: clamp so a
+                # malformed negative value can't crash the executor
+                # task (time.sleep raises on negatives — the
+                # "failures → None, not a crash" contract) and a
+                # hostile/buggy huge value can't hang the slot.
+                if retry_after is not None:
+                    retry_after = max(0.0, min(retry_after, 60.0))
+            time.sleep(retry_after if retry_after is not None else delay)
+            delay *= 2
+        return None
 
-        for pdf in batches:
-            rows = []
-            for z, x, y in zip(pdf["z"], pdf["x"], pdf["y"]):
-                img = None
-                if requests is not None:
-                    url = Template(url_template).substitute(
-                        {"x": int(x), "y": int(y), "z": int(z)}
-                    )
-                    img = get_with_retry(url)
-                rows.append(
-                    {
-                        "z": int(z),
-                        "x": int(x),
-                        "y": int(y),
-                        "mode": mode,
-                        "tile_size": tile_size,
-                        "img": img,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return distinct.mapInPandas(fetch, schema=TILE_SCHEMA)
+    return fetch

@@ -3,16 +3,18 @@ flow (`/root/reference/update_ways_metadata.py:128-144`): load
 ``config.yaml`` → read the routable ``ways`` table → for each tile
 provider compute the per-way MEDIAN of per-vertex sampled values,
 normalize by the global max (`update_ways_metadata.py:29-33`) → upsert
-each provider's column into ``ways_metadata`` with ON CONFLICT
+the providers' columns into ``ways_metadata`` with ON CONFLICT
 semantics (`update_ways_metadata.py:50-54`).
 
 What changes under Spark: the reference walks a psycopg2 cursor row by
-row with sequential HTTP and a process-local tile dict; here every
-stage is a distributed plan — coordinate explode, distinct-pixel
-sampling over cogrouped Arrow batches, hash-aggregate median,
-broadcast-normalize, copy-on-write MERGE (bucket-pruned when the
-metadata table is bucketed). The providers and value functions mirror
-the reference's (`update_ways_metadata.py:63-66,103-119`).
+row with sequential HTTP and a process-local tile dict, once per
+provider; here one distributed plan enriches every requested provider
+— coordinate explode, distinct-pixel sampling in one tile-keyed
+Python stage (each tile fetched inside its own group), hash-aggregate
+medians, broadcast-normalize — and one copy-on-write MERGE
+(bucket-pruned when the metadata table is bucketed) commits all the
+columns together. The providers and value functions mirror the
+reference's (`update_ways_metadata.py:63-66,103-119`).
 
 Usage (offline by default — the synthetic closed-form tiles; pass a
 ``--url`` template to fetch live like the reference):
@@ -39,9 +41,11 @@ from .operators.enrich import (
     STRAVA_PROVIDER,
     Provider,
     enrich_ways,
+    explode_way_coords,
 )
 from .operators.merge import ParquetMergeTable
 from .sources.config import load_config, provider_headers
+from .sources.tiles import http_tiles
 
 # provider key → (ways_metadata column, Provider) — the exact columns
 # the reference writes (update_ways_metadata.py:71,91,125).
@@ -76,57 +80,52 @@ def run(
     url_templates: dict[str, str] | None = None,
     n_buckets: int | None = None,
 ) -> dict[str, int]:
-    """Enrich ``ways`` with every requested provider and MERGE each
-    column into the ``ways_metadata`` table at ``out_path``. Offline
+    """Enrich ``ways`` with every requested provider in one plan and
+    MERGE their columns into the ``ways_metadata`` table at
+    ``out_path`` in one commit (repeated names count once). Offline
     (synthetic tiles) unless the provider has a URL template — then
-    the live HTTP source with the config's auth headers, exactly the
+    the live HTTP fetcher with the config's auth headers, exactly the
     reference's authed high-res path (update_ways_metadata.py:88-89).
     Returns {column: row count} per provider."""
-    config = config or {}
+    names = list(dict.fromkeys(provider_names))
+    if not names:
+        return {}
     url_templates = url_templates or {}
-    table = ParquetMergeTable(spark, out_path, key="gid", n_buckets=n_buckets)
-    written: dict[str, int] = {}
-    # One-pass sharing across providers: the ways lineage (for osm:
-    # sources, the whole XML parse + topology build) and the vertex
-    # explode are provider-independent — materialize the exploded
-    # coordinate frame ONCE and hand it to every enrichment instead of
-    # re-executing the import per provider (the reference holds the
-    # ways cursor rows in memory across its provider loop; this is the
-    # distributed analog). Output per provider is pinned identical to
-    # the unshared path in tests/test_enrichment.py.
-    coords = None
-    if len(provider_names) > 1:
-        from .operators.enrich import explode_way_coords
-
-        coords = explode_way_coords(ways).localCheckpoint(eager=True)
-    for name in provider_names:
+    columns, providers = [], []
+    for name in names:
         if name not in PROVIDERS:
             raise ValueError(f"unknown provider {name!r}; have {sorted(PROVIDERS)}")
         column, provider = PROVIDERS[name]
         if name in url_templates:
-            from .sources.tiles import http_tiles
-
-            url = url_templates[name]
-            headers = provider_headers(config, name) or None
+            headers = provider_headers(config or {}, name) or None
             provider = dataclasses.replace(
-                provider,
-                tile_source=lambda sp, needed, _u=url, _h=headers, _p=provider: http_tiles(
-                    sp, needed, _u, _p.mode, _p.tile_size, headers=_h
-                ),
+                provider, tile_source=http_tiles(url_templates[name], headers=headers)
             )
-        vals = enrich_ways(spark, ways, provider, coords=coords).withColumnRenamed(
-            provider.name, column
-        )
-        # Materialize the enrichment ONCE: upsert references the frame
-        # twice (bucket census + merged write) and the row count a
-        # third time — without the checkpoint each reference would
-        # re-execute the whole sampling lineage, tile fetches included.
-        vals = vals.localCheckpoint(eager=True)
-        # per-column upsert, the reference's ON CONFLICT DO UPDATE SET
-        # {column}: other providers' columns are untouched
-        table.upsert(vals, update_cols=[column])
-        written[column] = vals.count()
-    return written
+        columns.append(column)
+        providers.append(provider)
+    # The ways lineage (for osm: sources, the whole XML parse +
+    # topology build) feeds one projection per provider: with several
+    # providers, materialize the exploded coordinates ONCE so the
+    # import runs once (the reference holds the ways cursor rows in
+    # memory across its providers; this is the distributed analog).
+    # Output is pinned identical to the unshared path in
+    # tests/test_enrichment.py.
+    coords = None
+    if len(names) > 1:
+        coords = explode_way_coords(ways).localCheckpoint(eager=True)
+    # Materialize the enrichment ONCE: upsert references the frame
+    # twice (bucket census + merged write) and the row count a third
+    # time — without the checkpoint each reference would re-execute
+    # the whole sampling lineage, tile fetches included.
+    vals = enrich_ways(spark, ways, providers, coords=coords).toDF("gid", *columns)
+    vals = vals.localCheckpoint(eager=True)
+    # the reference's ON CONFLICT DO UPDATE SET {columns}: columns of
+    # providers not in this run are untouched
+    ParquetMergeTable(spark, out_path, key="gid", n_buckets=n_buckets).upsert(
+        vals, update_cols=columns
+    )
+    n = vals.count()
+    return {column: n for column in columns}
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -22,6 +22,39 @@ def spark():
     yield s
 
 
+def street_grid_rows(n: int = 12, step: float = 0.006) -> list[tuple]:
+    """A deterministic ``ways(gid, geom)`` street grid: ``n``×``n``
+    intersections ``step`` degrees apart, one 3-vertex way per block
+    edge (2·n·(n−1) ways) whose midpoint is nudged off the straight
+    line by a gid-dependent amount. Adjacent ways share their end
+    vertices, so coordinates repeat across ways. The grid touches 4
+    zoom-12 tiles and 56 zoom-15 tiles."""
+    lng0, lat0 = -118.16, 34.11
+    rows = []
+    for (di, dj) in ((1, 0), (0, 1)):
+        for i in range(n - di):
+            for j in range(n - dj):
+                gid = len(rows) + 1
+                a = (lng0 + i * step, lat0 + j * step)
+                b = (lng0 + (i + di) * step, lat0 + (j + dj) * step)
+                nudge = ((gid * 7) % 5 - 2) * step / 20
+                mid = ((a[0] + b[0]) / 2 + nudge * dj, (a[1] + b[1]) / 2 + nudge * di)
+                rows.append((gid, [a, mid, b]))
+    return rows
+
+
+@pytest.fixture(scope="session")
+def street_grid(spark, tmp_path_factory):
+    """The street grid written as a parquet ``ways`` table (readable
+    by ``update_ways_metadata.load_ways``): ``.path``, ``.n_ways``."""
+    rows = street_grid_rows()
+    path = str(tmp_path_factory.mktemp("street_grid") / "ways.parquet")
+    spark.createDataFrame(
+        rows, "gid long, geom array<struct<lng:double,lat:double>>"
+    ).coalesce(1).write.parquet(path)
+    return SimpleNamespace(path=path, n_ways=len(rows))
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_CORRECT

@@ -1,8 +1,8 @@
 """End-to-end enrichment vs a pure-Python oracle that re-implements
 the reference algorithm literally (SURVEY.md §5.2 item 2): same
 projection math, same tile values (closed-form synthetic), same
-np.median + global-max normalize. Run on ways assembled from the
-reference's own example.osm fixture."""
+np.median + global-max normalize. Run on the deterministic street grid
+of conftest.py."""
 
 from __future__ import annotations
 
@@ -10,23 +10,17 @@ import math
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from ariadne_cartograph_spark.operators.enrich import (
     GMAPS_GREENERY_PROVIDER,
     STRAVA_PROVIDER,
     Provider,
     enrich_ways,
+    explode_way_coords,
 )
 from ariadne_cartograph_spark.operators.merge import ParquetMergeTable, merge_into
-from ariadne_cartograph_spark.sources.osm import (
-    assemble_way_geometries,
-    read_osm_elements,
-    split_elements,
-)
 from ariadne_cartograph_spark.sources.tiles import synth_tile_array
-
-OSM_PATH = "/root/reference/osm/example.osm"
+from ariadne_cartograph_spark.update_ways_metadata import load_ways
 
 
 # ---- pure-python reference re-implementation (the oracle) -----------------
@@ -79,16 +73,8 @@ def _oracle_enrich(ways, provider: Provider):
 
 
 @pytest.fixture(scope="module")
-def ways_df(spark):
-    t = split_elements(read_osm_elements(spark, OSM_PATH))
-    geo = assemble_way_geometries(t["nodes"], t["ways"])
-    # routable subset, gid = way id (enrichment doesn't care about
-    # topology splitting; reference enriches whatever `ways` holds)
-    return (
-        geo.filter(F.col("tags").getItem("highway").isNotNull())
-        .select(F.col("id").alias("gid"), "geom")
-        .cache()
-    )
+def ways_df(spark, street_grid):
+    return load_ways(spark, street_grid.path).cache()
 
 
 @pytest.fixture(scope="module")
@@ -102,7 +88,7 @@ def ways_local(ways_df):
                          ids=["strava_gray_z12", "gmaps_greenery_z15"])
 def test_enrichment_matches_reference_oracle(spark, ways_df, ways_local, provider):
     got = {
-        r.gid: r[provider.name] for r in enrich_ways(spark, ways_df, provider).collect()
+        r.gid: r[provider.name] for r in enrich_ways(spark, ways_df, [provider]).collect()
     }
     want = _oracle_enrich(ways_local, provider)
     assert set(got) == set(want)
@@ -137,49 +123,41 @@ def test_all_zero_tiles_normalize_to_nan(spark):
     crashing or silently zeroing."""
     import math as _m
 
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def zero_tiles(sp, needed):
-        keys = needed.select("z", "x", "y").dropDuplicates().collect()
-        rows = [
-            {
-                "z": k.z, "x": k.x, "y": k.y, "mode": "L", "tile_size": 8,
-                "img": bytes(8 * 8),
-            }
-            for k in keys
-        ]
-        return sp.createDataFrame(pd.DataFrame(rows))
-
     prov = Provider(
         name="zeroed", zoom=3, tile_size=8, mode="L", value_kind="gray",
-        tile_source=zero_tiles,
+        tile_source=lambda z, x, y: bytes(8 * 8),
     )
     ways = spark.createDataFrame(
         [(1, [(-118.12, 34.14), (-118.11, 34.13)]), (2, [(13.4, 52.52)])],
         "gid long, geom array<struct<lng:double,lat:double>>",
     )
-    got = {r.gid: r.zeroed for r in enrich_ways(spark, ways, prov).collect()}
+    got = {r.gid: r.zeroed for r in enrich_ways(spark, ways, [prov]).collect()}
     assert set(got) == {1, 2}
     assert all(_m.isnan(v) for v in got.values()), got
 
 
 def test_shared_coords_pinned_equal(spark, ways_df):
     """The one-pass multi-provider path (update_ways_metadata.run
-    materializes explode_way_coords once and hands it to every
-    enrich_ways call) must be row-identical to the unshared path, per
-    provider — the share is a physical reuse, never a semantic one."""
-    from ariadne_cartograph_spark.operators.enrich import explode_way_coords
-
+    enriches every provider in one plan over a coordinate frame
+    materialized once) must be row-identical to the single-provider,
+    unshared path, per provider — the fusion and the share are
+    physical reuse, never a semantic one."""
     coords = explode_way_coords(ways_df).localCheckpoint(eager=True)
-    for provider in (STRAVA_PROVIDER, GMAPS_GREENERY_PROVIDER):
+    both = [STRAVA_PROVIDER, GMAPS_GREENERY_PROVIDER]
+    fused = [
+        {r.gid: r for r in enrich_ways(spark, ways_df, both, coords=c).collect()}
+        for c in (None, coords)
+    ]
+    for provider in both:
         solo = {
             r.gid: r[provider.name]
-            for r in enrich_ways(spark, ways_df, provider).collect()
+            for r in enrich_ways(spark, ways_df, [provider]).collect()
         }
         shared = {
             r.gid: r[provider.name]
-            for r in enrich_ways(spark, ways_df, provider, coords=coords).collect()
+            for r in enrich_ways(spark, ways_df, [provider], coords=coords).collect()
         }
         assert solo == shared
+        for rows in fused:
+            assert {g: r[provider.name] for g, r in rows.items()} == solo
         assert solo  # non-vacuous

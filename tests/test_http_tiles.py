@@ -3,10 +3,11 @@ the reference fetches XYZ tiles with auth headers over real HTTP
 (`/root/reference/dataproviders.py:96-105`,
 `update_ways_metadata.py:88-89`). These tests stand up an in-process
 ``http.server`` on 127.0.0.1 and drive the SAME code paths a live
-deployment uses — executor-side GETs from ``http_tiles`` and the CLI's
-``--url`` provider override — asserting server-side that every request
-carried the configured auth header and that each distinct tile was
-fetched exactly once (the dedup-then-join contract)."""
+deployment uses — the ``http_tiles`` fetcher, called directly, and the
+CLI's ``--url`` provider override, whose fetcher the executors call —
+asserting server-side that every request carried the configured auth
+header and that each distinct tile was fetched exactly once (the
+one-fetch-per-tile-group contract)."""
 
 from __future__ import annotations
 
@@ -17,6 +18,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 import pytest
 from pyspark.sql import functions as F
 
+from ariadne_cartograph_spark.functions.geo import lnglat_to_tile_pixel
 from ariadne_cartograph_spark.sources.tiles import http_tiles, synth_tile_array
 
 AUTH = "Bearer test-token-xyz"
@@ -96,77 +98,46 @@ def server():
     s.stop()
 
 
-def test_http_tiles_live_fetch_with_auth(spark, server):
-    """Executor-side GETs: correct bytes for every distinct tile, one
-    request per distinct tile despite duplicate coordinates, auth
-    header present on every request server-side."""
-    needed = spark.createDataFrame(
-        # duplicates on purpose: the source must dedup before fetching
-        [(12, 701, 1635), (12, 701, 1635), (12, 702, 1635), (12, 702, 1636)],
-        "z int, x long, y long",
-    )
-    tiles = http_tiles(
-        spark,
-        needed,
-        server.url_template,
-        mode="L",
-        tile_size=server.tile_size,
-        headers={"Authorization": AUTH},
-    ).collect()
-    assert len(tiles) == 3
-    for t in tiles:
-        want = synth_tile_array(t.x, t.y, t.z, "L", server.tile_size).tobytes()
-        assert bytes(t.img) == want
+def test_http_tiles_live_fetch_with_auth(server):
+    """Correct bytes for every tile, one request per fetch, auth header
+    present on every request server-side."""
+    fetch = http_tiles(server.url_template, headers={"Authorization": AUTH})
+    tiles = [(12, 701, 1635), (12, 702, 1635), (12, 702, 1636)]
+    for z, x, y in tiles:
+        want = synth_tile_array(x, y, z, "L", server.tile_size).tobytes()
+        assert fetch(z, x, y) == want
     paths = Counter(p for p, _ in server.requests)
     assert all(n == 1 for n in paths.values()), f"re-fetched: {paths}"
     assert len(paths) == 3
     assert all(h == AUTH for _, h in server.requests)
 
 
-def test_http_tiles_fetch_failure_propagates_null(spark, server):
-    """A 404 tile yields img NULL (P11 deviation: propagate, don't
-    crash), other tiles in the same batch unaffected."""
+def test_http_tiles_fetch_failure_propagates_null(server):
+    """A 404 tile yields None (P11 deviation: propagate, don't crash)
+    after one request; other tiles from the same fetcher unaffected."""
     server.missing.add((12, 5, 6))
-    needed = spark.createDataFrame(
-        [(12, 5, 6), (12, 5, 7)], "z int, x long, y long"
-    )
-    rows = {
-        (r.z, r.x, r.y): r.img
-        for r in http_tiles(
-            spark, needed, server.url_template, "L", server.tile_size
-        ).collect()
-    }
-    assert rows[(12, 5, 6)] is None
-    assert (
-        bytes(rows[(12, 5, 7)])
-        == synth_tile_array(5, 7, 12, "L", server.tile_size).tobytes()
-    )
+    fetch = http_tiles(server.url_template)
+    assert fetch(12, 5, 6) is None
+    assert fetch(12, 5, 7) == synth_tile_array(5, 7, 12, "L", server.tile_size).tobytes()
+    assert Counter(p for p, _ in server.requests)["/tiles/12/5/6"] == 1
 
 
-def test_http_tiles_retries_transient_failures(spark, server):
+def test_http_tiles_retries_transient_failures(server):
     """A tile that 503s twice then succeeds must come back with correct
     bytes; a tile that 429s forever must exhaust max_retries and yield
-    NULL; a permanent 404 must NOT be retried. Attempt counts asserted
-    server-side — the one-logical-GET-per-distinct-tile contract
-    becomes (1 + observed transient failures) physical requests."""
+    None; a permanent 404 must NOT be retried. Attempt counts asserted
+    server-side — one logical GET per fetch becomes (1 + observed
+    transient failures) physical requests."""
     server.flaky[(12, 1, 1)] = [2, 503]   # two transient failures
     server.flaky[(12, 2, 2)] = [99, 429]  # always throttled
     server.missing.add((12, 3, 3))        # permanent
     server.retry_after = "0.05"           # keep the test fast
-    needed = spark.createDataFrame(
-        [(12, 1, 1), (12, 2, 2), (12, 3, 3), (12, 4, 4)], "z int, x long, y long"
-    )
-    rows = {
-        (r.z, r.x, r.y): r.img
-        for r in http_tiles(
-            spark, needed, server.url_template, "L", server.tile_size,
-            max_retries=3, backoff_s=0.05,
-        ).collect()
-    }
-    assert bytes(rows[(12, 1, 1)]) == synth_tile_array(1, 1, 12, "L", server.tile_size).tobytes()
+    fetch = http_tiles(server.url_template, max_retries=3, backoff_s=0.05)
+    rows = {(12, i, i): fetch(12, i, i) for i in (1, 2, 3, 4)}
+    assert rows[(12, 1, 1)] == synth_tile_array(1, 1, 12, "L", server.tile_size).tobytes()
     assert rows[(12, 2, 2)] is None       # retries exhausted
     assert rows[(12, 3, 3)] is None       # permanent, no retry
-    assert bytes(rows[(12, 4, 4)]) == synth_tile_array(4, 4, 12, "L", server.tile_size).tobytes()
+    assert rows[(12, 4, 4)] == synth_tile_array(4, 4, 12, "L", server.tile_size).tobytes()
     paths = Counter(p for p, _ in server.requests)
     assert paths["/tiles/12/1/1"] == 3    # 2 failures + 1 success
     assert paths["/tiles/12/2/2"] == 4    # 1 + max_retries attempts
@@ -174,36 +145,30 @@ def test_http_tiles_retries_transient_failures(spark, server):
     assert paths["/tiles/12/4/4"] == 1
 
 
-def test_http_tiles_rate_limit_paces_requests(spark, server):
-    """rate_limit_per_s spaces consecutive GETs within a partition:
-    5 tiles in ONE partition at 20 req/s must take >= 4 x 50 ms of
+def test_http_tiles_rate_limit_paces_requests(server):
+    """rate_limit_per_s spaces consecutive GETs of one fetcher (one
+    partition's worth): 5 tiles at 20 req/s must take >= 4 x 50 ms of
     wall clock between first and last server-side arrival."""
-    needed = spark.createDataFrame(
-        [(12, i, i) for i in range(5)], "z int, x long, y long"
-    ).coalesce(1)
-    tiles = http_tiles(
-        spark, needed, server.url_template, "L", server.tile_size,
-        rate_limit_per_s=20.0,
-    ).collect()
-    assert len(tiles) == 5 and all(t.img is not None for t in tiles)
+    fetch = http_tiles(server.url_template, rate_limit_per_s=20.0)
+    tiles = [fetch(12, i, i) for i in range(5)]
+    assert all(t is not None for t in tiles)
     assert len(server.request_times) == 5
     spread = max(server.request_times) - min(server.request_times)
     assert spread >= 4 * 0.05 * 0.8, f"requests not paced: {spread:.3f}s"
 
 
-def test_cli_url_path_hits_live_server_with_config_headers(spark, server, tmp_path):
+def test_cli_url_path_hits_live_server_with_config_headers(spark, server, street_grid, tmp_path):
     """The reference's authed high-res flow end-to-end
     (`update_ways_metadata.py:88-89`): run() with a --url template and
     a config carrying provider headers fetches every distinct tile
-    from the live server (auth asserted server-side) and produces the
+    from the live server exactly once, despite the grid's duplicate
+    coordinates (auth asserted server-side), and produces the
     IDENTICAL table to the offline synthetic provider — the server
     serves the same closed-form tiles."""
     from ariadne_cartograph_spark.operators.merge import ParquetMergeTable
     from ariadne_cartograph_spark.update_ways_metadata import load_ways, run
 
-    ways = load_ways(spark, "osm:/root/reference/osm/example.osm").localCheckpoint(
-        eager=True
-    )
+    ways = load_ways(spark, street_grid.path).localCheckpoint(eager=True)
     config = {"providers": {"strava": {"headers": {"Authorization": AUTH}}}}
 
     live_out = str(tmp_path / "wm_live")
@@ -233,8 +198,14 @@ def test_cli_url_path_hits_live_server_with_config_headers(spark, server, tmp_pa
     finally:
         M.PROVIDERS["strava"] = orig
 
-    assert written == {"popularity": 604}
+    assert written == {"popularity": street_grid.n_ways}
     assert server.requests and all(h == AUTH for _, h in server.requests)
+    paths = Counter(p for p, _ in server.requests)
+    assert all(n == 1 for n in paths.values()), f"re-fetched: {paths}"
+    tx, ty, _, _ = lnglat_to_tile_pixel("lng", "lat", orig[1].zoom, server.tile_size)
+    coords = ways.select(F.explode("geom").alias("pt")).select("pt.lng", "pt.lat")
+    tiles = coords.select(tx.alias("x"), ty.alias("y")).distinct().collect()
+    assert set(paths) == {f"/tiles/{orig[1].zoom}/{t.x}/{t.y}" for t in tiles}
     live = {
         (r.gid, r.popularity)
         for r in ParquetMergeTable(spark, live_out, key="gid").read().collect()

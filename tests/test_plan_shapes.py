@@ -165,10 +165,10 @@ def test_exact_dedup_single_shuffle_then_semi_join(spark, queries):
 
 def test_enrichment_python_stages_are_arrow_batched(spark, queries):
     """The tile sampler is the one place Python is allowed in E1 — it
-    must be the cogrouped-Arrow operator, not row-at-a-time eval."""
+    must be the grouped-Arrow operator, not row-at-a-time eval."""
     plan = plan_of(queries["ways_enrichment_pipeline"](spark, SF_SMOKE))
     assert "BatchEvalPython" not in plan
-    assert "FlatMapCoGroupsInPandas" in plan or "FlatMapCoGroupsInArrow" in plan
+    assert "FlatMapGroupsInPandas" in plan or "FlatMapGroupsInArrow" in plan
 
 
 def test_ann_lsh_candidate_exchange_carries_ids_only(spark, queries):
