@@ -11,9 +11,11 @@ Two flavors:
   in applyInPandas → exact median → broadcast normalize) while the
   oracle recomputes pixel values symbolically — an end-to-end
   cross-engine check of E1.
-- **Rows-only** queries exercise the OSM ingest / topology / POI
-  pipelines on the reference's own fixture (no OSM tables exist in the
-  oracle's view set); their golden checks live in tests/.
+- **Fixture-census** queries exercise the OSM ingest / topology / POI
+  pipelines on the repository's seeded OSM fixture
+  (sources/osm_fixture.py; no OSM tables exist in the oracle's view
+  set): their oracles are literal census rows, each recomputed from
+  the XML by plain Python in tests/test_osm_fixture.py.
 """
 
 from __future__ import annotations
@@ -248,29 +250,34 @@ def ways_enrichment_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Rows-only: OSM ingest / topology / POI pipelines on the reference
-# fixture (golden-checked in tests/, no OSM tables in the oracle views).
+# OSM ingest / topology / POI pipelines on the repository's seeded OSM
+# fixture (sources/osm_fixture.py; no OSM tables in the oracle views).
 # --------------------------------------------------------------------------
 
-_OSM_PATH = "/root/reference/osm/example.osm"
+
+def _osm_path() -> str:
+    # imported on first use, so importing the catalog stays free of it
+    from ..sources.osm_fixture import ensure_osm_fixture
+
+    return ensure_osm_fixture()
 
 
-# The osm_* oracles are GOLDEN-FIXTURE literals: the reference's
-# osm/example.osm is static, and every number below is independently
-# derivable from the XML (tests/test_osm_ingest.py re-derives the
-# element counts with a plain ElementTree pass, without engine code).
-# A literal oracle turns the whole ingest/topology pipeline into a
-# value-hash check instead of a rows-only count.
+# The osm_* oracles are literal census rows of the seeded fixture: the
+# generator writes the same bytes on every host, and
+# tests/test_osm_fixture.py recomputes every value below from the XML
+# with plain Python (ElementTree census, dict topology, BFS, haversine,
+# shoelace areas, changeset replay) — no engine code. A literal oracle
+# turns the whole ingest/topology pipeline into a value-hash check
+# instead of a rows-only count.
 
-# polygon = 759 closed tagged ways + 16 multipolygon relations; every
-# number re-derived independently in tests/test_osm_ingest.py via a
-# plain ElementTree census of the XML.
+# polygon = 448 closed tagged ways + 4 multipolygon relations; the
+# same plain ElementTree census runs in tests/test_osm_ingest.py.
 _OSM_INGEST_ORACLE = """
 SELECT * FROM (VALUES
-  ('line',    CAST(1091 AS BIGINT)),
-  ('point',   CAST(333 AS BIGINT)),
-  ('polygon', CAST(775 AS BIGINT)),
-  ('roads',   CAST(79 AS BIGINT))
+  ('line',    CAST(709 AS BIGINT)),
+  ('point',   CAST(171 AS BIGINT)),
+  ('polygon', CAST(452 AS BIGINT)),
+  ('roads',   CAST(190 AS BIGINT))
 ) t(table_name, n_rows)
 ORDER BY table_name
 """
@@ -287,7 +294,7 @@ ORDER BY table_name
     oracle=_OSM_INGEST_ORACLE,
 )
 def osm_ingest_feature_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full osm2pgsql-analog ingest on the reference fixture: XML →
+    """Full osm2pgsql-analog ingest on the seeded OSM fixture: XML →
     element tables → way-geometry assembly → style-driven promotion →
     planet_osm_* family, with polygon = closed tagged ways PLUS
     multipolygon relations (README.md:37). Output: per-table row
@@ -299,7 +306,7 @@ def osm_ingest_feature_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_elements,
     )
 
-    t = split_elements(read_osm_elements(spark, _OSM_PATH))
+    t = split_elements(read_osm_elements(spark, _osm_path()))
     geo = assemble_way_geometries(t["nodes"], t["ways"])
     tables = derive_feature_tables(t["nodes"], geo, relations=t["relations"])
     stats = None
@@ -330,7 +337,7 @@ def osm_ingest_pbf_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..sources.osm_pbf import ensure_pbf_fixture, read_osm_pbf
 
-    p = ensure_pbf_fixture(_OSM_PATH)
+    p = ensure_pbf_fixture(_osm_path())
     t = split_elements(read_osm_pbf(spark, f"file://{p}"))
     geo = assemble_way_geometries(t["nodes"], t["ways"])
     tables = derive_feature_tables(t["nodes"], geo, relations=t["relations"])
@@ -347,16 +354,17 @@ def osm_ingest_pbf_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # semantics (delete/polygon/area) — re-derived independently in
 # tests/test_osm_ingest.py::test_style_driven_feature_tables_census
 # via a plain ElementTree pass: point = nodes with a non-deleted tag
-# (107 — most fixture nodes carry only source/created_by/note, which
-# the stock style deletes); polygon = 756 closed ways with a
-# polygon-flagged tag (area rules applied) + 16 multipolygon
+# (82 of the 171 tagged nodes — the rest carry only source/
+# created_by/note, which the stock style deletes); polygon = 447
+# closed ways with a polygon-flagged tag (area rules applied: the
+# area=yes plaza counts, the area=no track does not) + 4 multipolygon
 # relations.
 _OSM_STYLE_ORACLE = """
 SELECT * FROM (VALUES
-  ('line',    CAST(1091 AS BIGINT)),
-  ('point',   CAST(107 AS BIGINT)),
-  ('polygon', CAST(772 AS BIGINT)),
-  ('roads',   CAST(79 AS BIGINT))
+  ('line',    CAST(709 AS BIGINT)),
+  ('point',   CAST(82 AS BIGINT)),
+  ('polygon', CAST(451 AS BIGINT)),
+  ('roads',   CAST(190 AS BIGINT))
 ) t(table_name, n_rows)
 ORDER BY table_name
 """
@@ -378,7 +386,7 @@ def osm_style_feature_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_elements,
     )
 
-    t = split_elements(read_osm_elements(spark, _OSM_PATH))
+    t = split_elements(read_osm_elements(spark, _osm_path()))
     geo = assemble_way_geometries(t["nodes"], t["ways"])
     tables = derive_feature_tables(
         t["nodes"], geo, style=default_style_rules(), relations=t["relations"]
@@ -392,20 +400,20 @@ def osm_style_feature_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.orderBy("table_name")
 
 
-# Attribute columns (--attributes --tags analog): 8 distinct highway
-# classes / 9 oneway ways / 84 named ways among edge-producing routable
-# ways — independently re-derived from the XML in
+# Attribute columns (--attributes --tags analog): 12 distinct highway
+# classes / 19 oneway ways / 181 named ways among edge-producing
+# routable ways — independently re-derived from the XML in
 # tests/test_topology_spatial.py::test_edge_attributes_census.
 _OSM_TOPOLOGY_ORACLE = """
-SELECT CAST(604 AS BIGINT) AS n_edges,
-       CAST(293 AS BIGINT) AS n_ways,
-       CAST(419 AS BIGINT) AS n_sources,
-       CAST(407 AS BIGINT) AS n_targets,
-       CAST(1701 AS BIGINT) AS total_vertices,
-       CAST(872070915274 AS BIGINT) AS sum_source_ids,
-       CAST(8 AS BIGINT) AS n_highway_classes,
-       CAST(9 AS BIGINT) AS n_oneway_ways,
-       CAST(84 AS BIGINT) AS n_named_ways
+SELECT CAST(785 AS BIGINT) AS n_edges,
+       CAST(254 AS BIGINT) AS n_ways,
+       CAST(400 AS BIGINT) AS n_sources,
+       CAST(423 AS BIGINT) AS n_targets,
+       CAST(2356 AS BIGINT) AS total_vertices,
+       CAST(785749128 AS BIGINT) AS sum_source_ids,
+       CAST(12 AS BIGINT) AS n_highway_classes,
+       CAST(19 AS BIGINT) AS n_oneway_ways,
+       CAST(181 AS BIGINT) AS n_named_ways
 """
 
 
@@ -418,7 +426,7 @@ def osm_topology_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.topology import build_topology, routable_ways
     from ..sources.osm import read_osm_elements, split_elements
 
-    t = split_elements(read_osm_elements(spark, _OSM_PATH))
+    t = split_elements(read_osm_elements(spark, _osm_path()))
     edges = build_topology(t["nodes"], routable_ways(t["ways"]))["edges"]
     return edges.agg(
         F.count(F.lit(1)).alias("n_edges"),
@@ -442,13 +450,13 @@ def osm_topology_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pipeline): write the fixture ways tag-indexed, read back, answer
 # `tags ? k` / `tags->k = v` through the pushed __has_<key> presence
 # columns. Golden census re-derived independently by a plain
-# ElementTree pass in tests (24 residential ways / 33 amenity-tagged /
-# 688 building-tagged; exact id checksum for the value query).
+# ElementTree pass in tests (122 residential ways / 22 amenity-tagged
+# / 424 building-tagged; exact id checksum for the value query).
 _TAG_INDEX_ORACLE = """
-SELECT CAST(24 AS BIGINT) AS n_residential,
-       CAST(1837256527 AS BIGINT) AS sum_residential_ids,
-       CAST(33 AS BIGINT) AS n_amenity_ways,
-       CAST(688 AS BIGINT) AS n_building_ways
+SELECT CAST(122 AS BIGINT) AS n_residential,
+       CAST(244074057 AS BIGINT) AS sum_residential_ids,
+       CAST(22 AS BIGINT) AS n_amenity_ways,
+       CAST(424 AS BIGINT) AS n_building_ways
 """
 
 
@@ -484,9 +492,10 @@ def scan_tag_index_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # publishes with an atomic rename, so concurrent drivers race to
     # an identical result, not a half-written directory.
     keys = ["highway", "amenity", "building"]
-    st = os.stat(_OSM_PATH)
+    osm_path = _osm_path()
+    st = os.stat(osm_path)
     digest = hashlib.md5(
-        f"{_OSM_PATH}:{st.st_size}:{st.st_mtime_ns}:{keys}"
+        f"{osm_path}:{st.st_size}:{st.st_mtime_ns}:{keys}"
         f":layout_v{TAG_INDEX_LAYOUT_VERSION}".encode()
     ).hexdigest()[:12]
     cache_root = os.path.join(
@@ -508,7 +517,7 @@ def scan_tag_index_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.chmod(cache_root, 0o700)
     path = os.path.join(cache_root, f"tag_index_{digest}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ways = split_elements(read_osm_elements(spark, _OSM_PATH))["ways"]
+        ways = split_elements(read_osm_elements(spark, osm_path))["ways"]
         # scratch under the same per-user root: keeps the publish
         # rename same-filesystem and the partial write private
         scratch = tempfile.mkdtemp(prefix="tag_index_w_", dir=cache_root)
@@ -535,21 +544,21 @@ def scan_tag_index_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Golden census per import profile, re-derived independently in
-# tests/test_mapconfig.py: the stock profile covers all 8 fixture
+# Census per import profile, re-derived independently in
+# tests/test_mapconfig.py: the stock profile covers all 12 fixture
 # highway classes, so its edge set is IDENTICAL to the legacy
-# highway-tagged import (604 edges / 293 ways — same as
+# highway-tagged import (785 edges / 254 ways — same as
 # _OSM_TOPOLOGY_ORACLE); the pedestrian profile keeps the 4 foot
-# classes (313 edges / 160 ways). Float sums follow the round-then-f32
+# classes (19 edges / 19 ways). Float sums follow the round-then-f32
 # parity policy.
 _OSM_MAPCONFIG_ORACLE = """
 SELECT * FROM (VALUES
-  ('pedestrian', CAST(313 AS BIGINT), CAST(160 AS BIGINT), CAST(4 AS BIGINT),
-   CAST(37637 AS BIGINT), CAST(10908.8 AS FLOAT), CAST(8257.3 AS FLOAT),
-   CAST(0 AS BIGINT), CAST(8928.9 AS FLOAT)),
-  ('stock', CAST(604 AS BIGINT), CAST(293 AS BIGINT), CAST(8 AS BIGINT),
-   CAST(70294 AS BIGINT), CAST(33276.8 AS FLOAT), CAST(9301.8 AS FLOAT),
-   CAST(16 AS BIGINT), CAST(33135.0 AS FLOAT))
+  ('pedestrian', CAST(19 AS BIGINT), CAST(19 AS BIGINT), CAST(4 AS BIGINT),
+   CAST(2276 AS BIGINT), CAST(1550.7 AS FLOAT), CAST(1401.2 AS FLOAT),
+   CAST(0 AS BIGINT), CAST(1875.7 AS FLOAT)),
+  ('stock', CAST(785 AS BIGINT), CAST(254 AS BIGINT), CAST(12 AS BIGINT),
+   CAST(87889 AS BIGINT), CAST(48424.8 AS FLOAT), CAST(4440.5 AS FLOAT),
+   CAST(57 AS BIGINT), CAST(12221.0 AS FLOAT))
 ) t(profile, n_edges, n_ways, n_classes, sum_tag_ids, total_length_m,
     total_cost_s, n_oneway_edges, total_weighted_cost)
 ORDER BY profile
@@ -578,13 +587,13 @@ def osm_topology_mapconfig(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiles over the fixture: the stock osm2pgrouting config and a
     pedestrian-only custom config, each summarized to an edge/cost
     census. The stock profile's edge set provably equals the legacy
-    highway-tagged import on this fixture (same 604/293 census as
+    highway-tagged import on this fixture (same 785/254 census as
     osm_topology_edges)."""
     from ..operators.topology import build_topology, edge_costs, routable_ways
     from ..sources.mapconfig import default_mapconfig, parse_mapconfig
     from ..sources.osm import read_osm_elements, split_elements
 
-    t = split_elements(read_osm_elements(spark, _OSM_PATH))
+    t = split_elements(read_osm_elements(spark, _osm_path()))
     out = None
     for profile, cfg in (
         ("stock", default_mapconfig()),
@@ -611,21 +620,34 @@ def osm_topology_mapconfig(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("profile")
 
 
-# A deterministic OsmChange changeset over REAL fixture ids (the
-# osm2pgsql --append replication path, README.md:19): deletes 3
-# unreferenced amenity nodes + one modify-then-delete node, moves 2
-# way-referenced nodes (shifting geometry), retags Oakdale Street
-# residential→tertiary, creates a 2-node footway, and exercises the
-# last-op-wins collapse (create→modify on one node). Shared with
-# tests/test_osm_diff.py, which pins the per-operation semantics.
-OSC_DELETED_AMENITY_NODES = (571718697, 1841515694, 2030772619)
-OSC_MOVED_NODES = (26850937, 26850938)
-OSC_RETAGGED_WAY = 13302656
+# A deterministic OsmChange changeset over fixture ids (the osm2pgsql
+# --append replication path, README.md:19): deletes 3 unreferenced
+# amenity nodes + one modify-then-delete survey node, moves 2 shape
+# points of one street way (shifting its geometry), retags the
+# residential way North 5 Avenue to tertiary while dropping its last
+# two vertices, creates a 2-node footway, and exercises the
+# last-op-wins collapse (create→modify on one node). The ids are the
+# roles sources/osm_fixture.generate() writes (tests/test_osm_fixture.py
+# checks each one); shared with tests/test_osm_diff.py, which pins the
+# per-operation semantics.
+OSC_DELETED_AMENITY_NODES = (1014970, 1014978, 1015005)
+OSC_MOVED_NODES = (1002558, 1002566)
+OSC_RETAGGED_WAY = 2000735
+# the retagged way's first five refs (its seven-vertex way keeps these)
+OSC_RETAGGED_WAY_REFS = (1000224, 1004355, 1000310, 1004363, 1000420)
 OSC_NEW_NODES = (9000000001, 9000000002)
 OSC_NEW_WAY = 900000001
 OSC_CREATE_THEN_MODIFY_NODE = 9000000003
-OSC_MODIFY_THEN_DELETE_NODE = 2030772624
+OSC_MODIFY_THEN_DELETE_NODE = 1015066
+# a no_left_turn whose to-way is the retagged way (via its first ref)
+OSC_RESTRICTION = 3000023
+# a multipolygon with one hole, and its outer member way
+OSC_MULTIPOLYGON = 3000004
+OSC_MULTIPOLYGON_WAY = 2003581
+# a bus route that a route_master lists
+OSC_DELETED_ROUTE = 3000052
 
+_OSC_RETAGGED_NDS = "\n".join(f'      <nd ref="{r}"/>' for r in OSC_RETAGGED_WAY_REFS)
 EXAMPLE_OSC_XML = f"""<?xml version="1.0" encoding="UTF-8"?>
 <osmChange version="0.6" generator="test">
   <create>
@@ -642,20 +664,16 @@ EXAMPLE_OSC_XML = f"""<?xml version="1.0" encoding="UTF-8"?>
     </way>
   </create>
   <modify>
-    <node id="{OSC_MOVED_NODES[0]}" version="2" lat="34.1232406" lon="-118.1347192"/>
-    <node id="{OSC_MOVED_NODES[1]}" version="2" lat="34.1227361" lon="-118.1333888"/>
+    <node id="{OSC_MOVED_NODES[0]}" version="2" lat="34.1336406" lon="-118.1396192"/>
+    <node id="{OSC_MOVED_NODES[1]}" version="2" lat="34.1335361" lon="-118.1390888"/>
     <node id="{OSC_MODIFY_THEN_DELETE_NODE}" version="2" lat="34.1403" lon="-118.1206"/>
     <node id="{OSC_CREATE_THEN_MODIFY_NODE}" version="2" lat="34.1402" lon="-118.1204">
       <tag k="amenity" v="cafe"/>
     </node>
     <way id="{OSC_RETAGGED_WAY}" version="2">
-      <nd ref="122714882"/>
-      <nd ref="122714883"/>
-      <nd ref="122714885"/>
-      <nd ref="122714890"/>
-      <nd ref="122714892"/>
+{_OSC_RETAGGED_NDS}
       <tag k="highway" v="tertiary"/>
-      <tag k="name" v="Oakdale Street"/>
+      <tag k="name" v="North 5 Avenue"/>
     </way>
   </modify>
   <delete>
@@ -686,10 +704,10 @@ SELECT CAST(3 AS BIGINT) AS n_affected_ways,
        CAST(3 AS BIGINT) AS n_rebuilt_ways,
        CAST(0 AS BIGINT) AS n_deleted_ways,
        CAST(0 AS BIGINT) AS n_incremental_vs_full_mismatch,
-       CAST(6222 AS BIGINT) AS patched_nodes,
-       CAST(1092 AS BIGINT) AS patched_ways,
-       CAST(149 AS BIGINT) AS sum_rebuilt_vertices,
-       CAST(1149330019 AS BIGINT) AS sum_affected_way_ids
+       CAST(3067 AS BIGINT) AS patched_nodes,
+       CAST(710 AS BIGINT) AS patched_ways,
+       CAST(12 AS BIGINT) AS sum_rebuilt_vertices,
+       CAST(904000923 AS BIGINT) AS sum_affected_way_ids
 """
 
 
@@ -709,7 +727,7 @@ def osm_diff_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..sources.osm import read_osm_elements, split_elements
 
-    base = read_osm_elements(spark, _OSM_PATH)
+    base = read_osm_elements(spark, _osm_path())
     diff = read_osc_elements(spark, ensure_osc_fixture())
     patched_el = apply_osc(base, diff)
     patched = split_elements(patched_el)
@@ -765,12 +783,14 @@ def osm_diff_incremental_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# 18 amenity POIs: 16 within 50 m of a street edge, the two placed
+# far outside the grid flagged too_far.
 _OSM_POI_ORACLE = """
-SELECT CAST(14 AS BIGINT) AS n_pois,
-       CAST(14 AS BIGINT) AS n_assigned,
-       CAST(13 AS BIGINT) AS n_edges_hit,
-       CAST(35885767946 AS BIGINT) AS sum_pids,
-       CAST(217978346274823 AS BIGINT) AS sum_edge_gids
+SELECT CAST(18 AS BIGINT) AS n_pois,
+       CAST(16 AS BIGINT) AS n_assigned,
+       CAST(16 AS BIGINT) AS n_edges_hit,
+       CAST(18269888 AS BIGINT) AS sum_pids,
+       CAST(2097449271318 AS BIGINT) AS sum_edge_gids
 """
 
 
@@ -784,10 +804,10 @@ def osm_poi_nearest_edge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.topology import build_topology, routable_ways
     from ..sources.osm import read_osm_elements, split_elements
 
-    t = split_elements(read_osm_elements(spark, _OSM_PATH))
+    t = split_elements(read_osm_elements(spark, _osm_path()))
     nodes = t["nodes"]
     edges = build_topology(nodes, routable_ways(t["ways"]))["edges"]
-    # POIs = the fixture's tagged amenity nodes (real data)
+    # POIs = the fixture's tagged amenity nodes
     pois = nodes.filter(F.col("tags").getItem("amenity").isNotNull()).select(
         F.col("id").alias("pid"), F.col("lon").alias("lng"), F.col("lat")
     )
@@ -803,14 +823,12 @@ def osm_poi_nearest_edge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _OSM_RESTRICTIONS_ORACLE = """
 SELECT * FROM (VALUES
-  (CAST(1109564 AS BIGINT), 'no_u_turn',       CAST(405367300 AS BIGINT), CAST(123013699 AS BIGINT), CAST(405367300 AS BIGINT)),
-  (CAST(1110020 AS BIGINT), 'no_u_turn',       CAST(70872428 AS BIGINT),  CAST(123013693 AS BIGINT), CAST(70872428 AS BIGINT)),
-  (CAST(2430203 AS BIGINT), 'only_right_turn', CAST(13298929 AS BIGINT),  CAST(3909613366 AS BIGINT), CAST(140161509 AS BIGINT)),
-  (CAST(3516928 AS BIGINT), 'no_left_turn',    CAST(261918653 AS BIGINT), CAST(122714882 AS BIGINT), CAST(13302656 AS BIGINT)),
-  (CAST(3516929 AS BIGINT), 'no_left_turn',    CAST(406503638 AS BIGINT), CAST(123013697 AS BIGINT), CAST(13445093 AS BIGINT)),
-  (CAST(3516930 AS BIGINT), 'no_left_turn',    CAST(261918654 AS BIGINT), CAST(122933249 AS BIGINT), CAST(261918652 AS BIGINT)),
-  (CAST(7552502 AS BIGINT), 'no_u_turn',       CAST(522293567 AS BIGINT), CAST(122635559 AS BIGINT), CAST(522293567 AS BIGINT)),
-  (CAST(8107362 AS BIGINT), 'no_u_turn',       CAST(261918652 AS BIGINT), CAST(122635559 AS BIGINT), CAST(261918652 AS BIGINT))
+  (CAST(3000023 AS BIGINT), 'no_left_turn',    CAST(2000069 AS BIGINT), CAST(1000224 AS BIGINT), CAST(2000735 AS BIGINT)),
+  (CAST(3000025 AS BIGINT), 'only_right_turn', CAST(2000232 AS BIGINT), CAST(1000766 AS BIGINT), CAST(2000674 AS BIGINT)),
+  (CAST(3000027 AS BIGINT), 'no_right_turn',   CAST(2000334 AS BIGINT), CAST(1001118 AS BIGINT), CAST(2000838 AS BIGINT)),
+  (CAST(3000034 AS BIGINT), 'no_u_turn',       CAST(2000139 AS BIGINT), CAST(1000442 AS BIGINT), CAST(2000139 AS BIGINT)),
+  (CAST(3000043 AS BIGINT), 'no_u_turn',       CAST(2000355 AS BIGINT), CAST(1001191 AS BIGINT), CAST(2000355 AS BIGINT)),
+  (CAST(3000044 AS BIGINT), 'no_straight_on',  CAST(2000276 AS BIGINT), CAST(1000920 AS BIGINT), CAST(2000979 AS BIGINT))
 ) t(relation_id, restriction, from_way, via_node, to_way)
 ORDER BY relation_id
 """
@@ -818,13 +836,13 @@ ORDER BY relation_id
 
 _OSM_ROUTE_MEMBERS_ORACLE = """
 SELECT * FROM (VALUES
-  (CAST(3319294 AS BIGINT), 'route',        'bicycle', '66',  CAST(2807 AS BIGINT), CAST(947131879293 AS BIGINT)),
-  (CAST(6180566 AS BIGINT), 'route',        'bus',     '267', CAST(305 AS BIGINT),  CAST(149624336191 AS BIGINT)),
-  (CAST(6181176 AS BIGINT), 'route',        'bus',     '267', CAST(290 AS BIGINT),  CAST(113917311636 AS BIGINT)),
-  (CAST(6181177 AS BIGINT), 'route_master', 'bus',     CAST(NULL AS VARCHAR), CAST(2 AS BIGINT), CAST(12361742 AS BIGINT)),
-  (CAST(6192320 AS BIGINT), 'route',        'bus',     '10',  CAST(83 AS BIGINT),   CAST(30366302899 AS BIGINT)),
-  (CAST(6192321 AS BIGINT), 'route',        'bus',     '10',  CAST(88 AS BIGINT),   CAST(33307196159 AS BIGINT)),
-  (CAST(6192322 AS BIGINT), 'route_master', 'bus',     '10',  CAST(2 AS BIGINT),    CAST(12384641 AS BIGINT))
+  (CAST(3000052 AS BIGINT), 'route',        'bus',     '10', CAST(8 AS BIGINT), CAST(13001478 AS BIGINT)),
+  (CAST(3000054 AS BIGINT), 'route',        'bus',     '10', CAST(8 AS BIGINT), CAST(13001478 AS BIGINT)),
+  (CAST(3000058 AS BIGINT), 'route_master', 'bus',     '10', CAST(2 AS BIGINT), CAST(6000106 AS BIGINT)),
+  (CAST(3000066 AS BIGINT), 'route',        'bus',     '20', CAST(7 AS BIGINT), CAST(12005323 AS BIGINT)),
+  (CAST(3000068 AS BIGINT), 'route',        'bus',     '20', CAST(7 AS BIGINT), CAST(12005323 AS BIGINT)),
+  (CAST(3000074 AS BIGINT), 'route_master', 'bus',     CAST(NULL AS VARCHAR), CAST(2 AS BIGINT), CAST(6000134 AS BIGINT)),
+  (CAST(3000076 AS BIGINT), 'route',        'bicycle', '66', CAST(6 AS BIGINT), CAST(11002486 AS BIGINT))
 ) t(relation_id, relation_type, route_kind, route_ref, n_members, sum_member_refs)
 ORDER BY relation_id
 """
@@ -834,12 +852,11 @@ ORDER BY relation_id
 def osm_route_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Route / route_master relation members (sources/osm.route_members)
     summarized per relation. The oracle is the fixture's 7 transit
-    relations transcribed literally from the XML (member counts and
-    exact member-ref checksums) — the full 3,577-row member table's
-    ordering and roles are pinned in tests/test_osm_ingest.py."""
+    relations (5 routes, 2 route_masters) censused from the XML
+    (member counts and exact member-ref checksums)."""
     from ..sources.osm import read_osm_elements, route_members, split_elements
 
-    t = split_elements(read_osm_elements(spark, _OSM_PATH))
+    t = split_elements(read_osm_elements(spark, _osm_path()))
     return (
         route_members(t["relations"])
         .groupBy("relation_id", "relation_type", "route_kind", "route_ref")
@@ -855,28 +872,27 @@ def osm_route_members(spark: SparkSession, sf_dir: str) -> DataFrame:
 def osm_turn_restrictions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Turn-restriction relations → restrictions table
     (operators/topology.extract_turn_restrictions). The oracle is the
-    fixture's 8 restriction relations transcribed literally from the
-    XML — every (from, via, to) triple hand-checkable at
-    osm/example.osm."""
+    fixture's 6 restriction relations censused from the XML — every
+    (from, via, to) triple readable in the fixture file."""
     from ..operators.topology import extract_turn_restrictions
     from ..sources.osm import read_osm_elements, split_elements
 
-    t = split_elements(read_osm_elements(spark, _OSM_PATH))
+    t = split_elements(read_osm_elements(spark, _osm_path()))
     return extract_turn_restrictions(t["relations"]).orderBy("relation_id")
 
 
 _ENRICH_FIXTURE_ORACLE = """
 SELECT * FROM (VALUES
-  (CAST(0 AS BIGINT), CAST(29 AS BIGINT), CAST(5583235790 AS BIGINT), CAST(13833684 AS BIGINT), CAST(29 AS BIGINT)),
-  (1, 25, 4560941205, 7724759, 25),
-  (2, 38, 8054378776, 18253182, 38),
-  (3, 28, 4003115514, 11226489, 28),
-  (4, 30, 5481811700, 14000000, 30),
-  (5, 26, 5083986590, 13783116, 26),
-  (6, 33, 6279965328, 11163194, 33),
-  (7, 26, 6049698052, 12203470, 26),
-  (8, 29, 6729707892, 14298528, 29),
-  (9, 29, 5969940971, 15376459, 29)
+  (CAST(0 AS BIGINT), CAST(24 AS BIGINT), CAST(48016230 AS BIGINT), CAST(8737142 AS BIGINT), CAST(24 AS BIGINT)),
+  (1, 15, 30008525, 10763439, 15),
+  (2, 34, 68022548, 17423260, 34),
+  (3, 22, 44015856, 10276071, 22),
+  (4, 24, 48011956, 15597010, 24),
+  (5, 25, 50018195, 9256250, 25),
+  (6, 26, 52015246, 14899736, 26),
+  (7, 24, 48016908, 12016412, 24),
+  (8, 26, 52018878, 15427368, 26),
+  (9, 34, 68021506, 18705824, 34)
 ) t(g, n_ways, sum_gid, q_greenery, nn_greenery)
 ORDER BY g
 """
@@ -884,21 +900,22 @@ ORDER BY g
 
 @register("osm_ways_enrichment_fixture", tags=["E1"], oracle=_ENRICH_FIXTURE_ORACLE)
 def osm_ways_enrichment_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's flagship dataflow run end-to-end on ITS OWN
-    fixture (`/root/reference/osm/example.osm` + deterministic
-    synthetic tiles; `update_ways_metadata.py:122-133` greenery pass):
+    """The reference's flagship dataflow run end-to-end on the seeded
+    OSM fixture (sources/osm_fixture.py + deterministic synthetic
+    tiles; `update_ways_metadata.py:122-133` greenery pass):
     highway-way assembly → tile lookup → 21×21 greenery sampling →
     per-way median → global-max normalize. The full pipeline is
     deterministic (integer pixels, exact median, one global divisor),
     so its output is pinned as a golden gid-decile census with the
     metadata quantized at 1e-6 (integer sums — associative, partition-
-    order independent); the oracle is that census transcribed literally
-    (previously this entry was rows-only). Any change to the Mercator
+    order independent); the oracle is that census as computed by the
+    pure-Python reference algorithm (tests/osm_census.oracle_enrich).
+    Any change to the Mercator
     math, sampling window, median, or normalization flips the hash."""
     from ..operators.enrich import GMAPS_GREENERY_PROVIDER, enrich_ways
     from ..sources.osm import assemble_way_geometries, read_osm_elements, split_elements
 
-    t = split_elements(read_osm_elements(spark, _OSM_PATH))
+    t = split_elements(read_osm_elements(spark, _osm_path()))
     geo = assemble_way_geometries(t["nodes"], t["ways"])
     ways = geo.filter(F.col("tags").getItem("highway").isNotNull()).select(
         F.col("id").alias("gid"), "geom"
@@ -1060,32 +1077,33 @@ def geo_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Routing: the pgRouting query surface the reference's `ways` import
-# exists to serve (/root/reference/README.md:41-54). Golden-fixture
-# oracle (same convention as the other osm_* entries); the BFS result
-# is independently verified against a pure-Python BFS in
-# tests/test_routing.py, and the haversine-weighted Bellman-Ford
-# variant against a Python Dijkstra there too.
+# exists to serve (/root/reference/README.md:41-54). Fixture-census
+# oracle (same convention as the other osm_* entries): a pure-Python
+# BFS over a dict topology recomputes it in tests/test_osm_fixture.py,
+# tests/test_routing.py checks the engine's BFS against the same
+# Python BFS, and the haversine-weighted Bellman-Ford variant against a
+# Python Dijkstra.
 # --------------------------------------------------------------------------
 
 _ROUTE_ORACLE = """
-SELECT CAST(195 AS BIGINT) AS n_reached,
+SELECT CAST(103 AS BIGINT) AS n_reached,
        CAST(12 AS INT) AS max_hops,
-       CAST(1734 AS BIGINT) AS sum_hops,
-       CAST(2918399019593 AS BIGINT) AS id_hop_checksum
+       CAST(812 AS BIGINT) AS sum_hops,
+       CAST(812837263 AS BIGINT) AS id_hop_checksum
 """
 
 
-# Golden per-source census for the cost-matrix entry: independent
+# Per-source census for the cost-matrix entry: independent
 # plain-Python BFS over the fixture topology, re-derived in
 # tests/test_routing.py::test_cost_matrix_census_literals.
 _ROUTE_MATRIX_ORACLE = """
 SELECT * FROM (VALUES
-  (CAST(20827733 AS BIGINT), CAST(129 AS BIGINT), CAST(974 AS BIGINT),
-   CAST(1658784252081 AS BIGINT)),
-  (CAST(29322335 AS BIGINT), CAST(212 AS BIGINT), CAST(1397 AS BIGINT),
-   CAST(2278525630109 AS BIGINT)),
-  (CAST(29322337 AS BIGINT), CAST(185 AS BIGINT), CAST(1226 AS BIGINT),
-   CAST(1898728416385 AS BIGINT))
+  (CAST(1000002 AS BIGINT), CAST(76 AS BIGINT), CAST(500 AS BIGINT),
+   CAST(500525280 AS BIGINT)),
+  (CAST(1000005 AS BIGINT), CAST(85 AS BIGINT), CAST(544 AS BIGINT),
+   CAST(544493142 AS BIGINT)),
+  (CAST(1000009 AS BIGINT), CAST(95 AS BIGINT), CAST(609 AS BIGINT),
+   CAST(609587557 AS BIGINT))
 ) t(src, n_reached, sum_hops, id_hop_checksum)
 ORDER BY src
 """
@@ -1102,7 +1120,7 @@ def osm_route_cost_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.topology import build_topology, routable_ways
     from ..sources.osm import read_osm_elements, split_elements
 
-    t = split_elements(read_osm_elements(spark, _OSM_PATH))
+    t = split_elements(read_osm_elements(spark, _osm_path()))
     edges = build_topology(t["nodes"], routable_ways(t["ways"]))["edges"]
     adj = edge_adjacency(edges)
     vs = adj.select(F.col("u").alias("v")).distinct()
@@ -1133,7 +1151,7 @@ def osm_route_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.topology import build_topology, routable_ways
     from ..sources.osm import read_osm_elements, split_elements
 
-    t = split_elements(read_osm_elements(spark, _OSM_PATH))
+    t = split_elements(read_osm_elements(spark, _osm_path()))
     edges = build_topology(t["nodes"], routable_ways(t["ways"]))["edges"]
     src = edges.agg(
         F.least(F.min("source"), F.min("target")).alias("v")
@@ -1149,18 +1167,18 @@ def osm_route_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _OSM_TAG_FREQ_ORACLE = """
 SELECT * FROM (VALUES
-  ('building', CAST(700 AS BIGINT)),
-  ('source', CAST(399 AS BIGINT)),
-  ('highway', CAST(332 AS BIGINT)),
-  ('name', CAST(217 AS BIGINT)),
-  ('source_ref', CAST(123 AS BIGINT)),
-  ('addr:housenumber', CAST(118 AS BIGINT)),
-  ('addr:street', CAST(118 AS BIGINT)),
-  ('foot', CAST(102 AS BIGINT)),
-  ('maxspeed', CAST(59 AS BIGINT)),
-  ('addr:postcode', CAST(58 AS BIGINT)),
-  ('source:maxspeed', CAST(54 AS BIGINT)),
-  ('source_ref:maxspeed', CAST(54 AS BIGINT))
+  ('building', CAST(425 AS BIGINT)),
+  ('addr:housenumber', CAST(353 AS BIGINT)),
+  ('addr:street', CAST(353 AS BIGINT)),
+  ('highway', CAST(318 AS BIGINT)),
+  ('name', CAST(200 AS BIGINT)),
+  ('addr:postcode', CAST(147 AS BIGINT)),
+  ('source', CAST(83 AS BIGINT)),
+  ('created_by', CAST(41 AS BIGINT)),
+  ('amenity', CAST(40 AS BIGINT)),
+  ('surface', CAST(38 AS BIGINT)),
+  ('note', CAST(24 AS BIGINT)),
+  ('maxspeed', CAST(23 AS BIGINT))
 ) t(tag_key, n)
 ORDER BY n DESC, tag_key
 """
@@ -1170,13 +1188,12 @@ ORDER BY n DESC, tag_key
 def osm_tag_key_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-typed column surface over the OSM tags (map<string,string>):
     explode(map_keys(tags)) across all three element kinds → frequency
-    top-12. The oracle is the fixture's tag census transcribed literally
-    (119 distinct keys, 3,140 tags total — re-derivable with a plain
-    ElementTree pass). Exercises the map-function path (map_keys +
+    top-12. The oracle is the fixture's tag census from a plain
+    ElementTree pass. Exercises the map-function path (map_keys +
     explode) the style-driven promotion (P12) builds on."""
     from ..sources.osm import read_osm_elements
 
-    els = read_osm_elements(spark, _OSM_PATH)
+    els = read_osm_elements(spark, _osm_path())
     return (
         els.filter(F.col("tags").isNotNull())
         .select(F.explode(F.map_keys("tags")).alias("tag_key"))
@@ -1409,16 +1426,16 @@ def geo_point_in_polygon_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=["P13", "S6"],
     oracle="""
 SELECT id, CAST(way_area AS DOUBLE) AS way_area FROM (VALUES
-  (236027362, 4443008.5),
-  (-2700722, 2445333.2),
-  (29111188, 747149.3),
-  (29111275, 316946.0),
-  (205868796, 132329.4),
-  (29111127, 84098.6),
-  (222593213, 60452.3),
-  (196125681, 54395.9),
-  (205868795, 41026.5),
-  (30794534, 27040.7)
+  (-3000009, 118584.8),
+  (-3000014, 80843.8),
+  (-3000015, 38806.4),
+  (-3000004, 29753.8),
+  (2001314, 5324.1),
+  (2002254, 1940.3),
+  (2003338, 1423.0),
+  (2003394, 1423.0),
+  (2003433, 1423.0),
+  (2002062, 1422.9)
 ) t(id, way_area)
 ORDER BY 2 DESC, 1
 """,
@@ -1427,11 +1444,11 @@ def osm_polygon_way_area(spark: SparkSession, sf_dir: str) -> DataFrame:
     """osm2pgsql's ``way_area`` column on the polygon feature table
     (Mercator-plane shoelace, holes subtracted —
     functions/geometry.polygon_area_m2): top-10 fixture polygons by
-    area, pinned as a golden census (the fixture is deterministic; the
-    pure-math engine area was independently replayed in python to 1e-9
-    relative in tests/test_topology_spatial.py). The #2 polygon is a
-    multipolygon RELATION (osm_id −2700722, holes subtracted), so the
-    census covers the relation-assembly path too."""
+    area, pinned as a census that a Python shoelace replay recomputes
+    (tests/osm_census.ring_area_m2). The top four are the multipolygon
+    RELATIONS (osm_id = −relation id; holes subtracted, one inner way
+    missing from the file, one outer ring stitched from two open ways),
+    so the census covers the relation-assembly path too."""
     from ..sources.osm import (
         assemble_way_geometries,
         derive_feature_tables,
@@ -1439,7 +1456,7 @@ def osm_polygon_way_area(spark: SparkSession, sf_dir: str) -> DataFrame:
         split_elements,
     )
 
-    t = split_elements(read_osm_elements(spark, _OSM_PATH))
+    t = split_elements(read_osm_elements(spark, _osm_path()))
     geo = assemble_way_geometries(t["nodes"], t["ways"])
     tables = derive_feature_tables(t["nodes"], geo, relations=t["relations"])
     return (
@@ -1521,9 +1538,9 @@ def geo_line_simplify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Column list + expected values for the replication census, in ONE
 # place: the registered oracle below is template.format(**golden), so
-# the SQL column list cannot drift from the census dict. To regenerate
-# after a deliberate census change: print _replication_census(spark)
-# and update _OSM_REPLICATION_GOLDEN.
+# the SQL column list cannot drift from the census dict. The values
+# come from a dict replay of the same changeset
+# (tests/test_osm_fixture.py), never from this entry's own output.
 _OSM_REPLICATION_ORACLE_TEMPLATE = """
 SELECT CAST({n_relations} AS BIGINT) AS n_relations,
        CAST({sum_relation_ids} AS BIGINT) AS sum_relation_ids,
@@ -1538,9 +1555,10 @@ SELECT CAST({n_relations} AS BIGINT) AS n_relations,
        CAST({metadata_orphans} AS BIGINT) AS metadata_orphans
 """
 
-# The way the combined changeset DELETES (a real fixture way), whose
-# ways_metadata row must cascade out (ways_metadata.ddl:6).
-OSC_CASCADED_WAY = 13313070
+# The way the combined changeset DELETES (a fixture building no
+# relation lists), whose ways_metadata row must cascade out
+# (ways_metadata.ddl:6).
+OSC_CASCADED_WAY = 2002466
 
 
 def _replication_census(spark: SparkSession) -> dict:
@@ -1579,7 +1597,7 @@ def _replication_census(spark: SparkSession) -> dict:
             derive_relations=derive_rels,
             way_children=[meta],
         )
-        p0 = split_elements(read_osm_elements(spark, _OSM_PATH))
+        p0 = split_elements(read_osm_elements(spark, _osm_path()))
         pipe.bootstrap(p0["nodes"], p0["ways"], relations=p0["relations"])
         # the enrichment CLI's metadata table: one deterministic row
         # per bootstrapped way, FK-child of the ways store
@@ -1594,17 +1612,17 @@ def _replication_census(spark: SparkSession) -> dict:
         osc = f"""<osmChange version="0.6">
           <modify>
             <way id="{OSC_RETAGGED_WAY}" version="2">
-              <nd ref="122714882"/><nd ref="122714883"/>
+              <nd ref="{OSC_RETAGGED_WAY_REFS[0]}"/><nd ref="{OSC_RETAGGED_WAY_REFS[1]}"/>
               <tag k="highway" v="tertiary"/>
             </way>
-            <relation id="3516928" version="2">
+            <relation id="{OSC_RESTRICTION}" version="2">
               <member type="way" ref="{OSC_RETAGGED_WAY}" role="to"/>
               <tag k="type" v="restriction"/>
             </relation>
           </modify>
           <delete>
             <way id="{OSC_CASCADED_WAY}" version="2"/>
-            <relation id="333928" version="2"/>
+            <relation id="{OSC_MULTIPOLYGON}" version="2"/>
           </delete>
           <create>
             <relation id="910000001" version="1">
@@ -1690,16 +1708,16 @@ def _replication_census(spark: SparkSession) -> dict:
 # derived table, or the ways_metadata cascade flips the hash. The
 # remaining values census the final stores.
 _OSM_REPLICATION_GOLDEN = {
-    "n_relations": 32,
-    "sum_relation_ids": 1062148111,
-    "n_index_entries": 9604,
+    "n_relations": 17,
+    "sum_relation_ids": 958000683,
+    "n_index_entries": 3065,
     "idx_mismatch": 0,
     "derived_mismatch": 0,
-    "n_derived_ways": 1090,
-    "sum_derived_pts": 7594,
-    "n_derived_rels": 32,
-    "sum_derived_members": 3897,
-    "n_metadata": 1090,
+    "n_derived_ways": 708,
+    "sum_derived_pts": 4086,
+    "n_derived_rels": 17,
+    "sum_derived_members": 64,
+    "n_metadata": 708,
     "metadata_orphans": 0,
 }
 _OSM_REPLICATION_ORACLE = _OSM_REPLICATION_ORACLE_TEMPLATE.format(

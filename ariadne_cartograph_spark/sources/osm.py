@@ -309,10 +309,10 @@ def route_members(relations: DataFrame) -> DataFrame:
     """Transit route extraction (SURVEY.md §1.1): ``type=route`` and
     ``type=route_master`` relations → one row per (relation, member)
     with the member ordinal preserved (member order is semantic in OSM
-    routes — it is the stop/way sequence). The fixture
-    (`/root/reference/osm/example.osm`) carries 5 route + 2
-    route_master relations; route_master members are themselves
-    relations (the per-direction route variants).
+    routes — it is the stop/way sequence). The seeded fixture
+    (sources/osm_fixture.py) carries 5 route + 2 route_master
+    relations; route_master members are themselves relations (the
+    per-direction route variants).
 
     Pure narrow ops (filter + posexplode) over the relations frame — no
     shuffle; at planet scale this is a projection of the bronze

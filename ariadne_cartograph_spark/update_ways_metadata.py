@@ -17,10 +17,12 @@ columns together. The providers and value functions mirror the
 reference's (`update_ways_metadata.py:63-66,103-119`).
 
 Usage (offline by default — the synthetic closed-form tiles; pass a
-``--url`` template to fetch live like the reference):
+``--url`` template to fetch live like the reference). The example
+imports the repository's seeded OSM fixture, whose path
+``python -m ariadne_cartograph_spark.sources.osm_fixture`` prints:
 
     python -m ariadne_cartograph_spark.update_ways_metadata \\
-        --ways osm:/root/reference/osm/example.osm \\
+        --ways "osm:$(python -m ariadne_cartograph_spark.sources.osm_fixture)" \\
         --out /tmp/ways_metadata \\
         --providers strava,gmaps [--config config.yaml] [--url ...]
 """

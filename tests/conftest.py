@@ -56,6 +56,23 @@ def street_grid(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="session")
+def osm_fixture():
+    """Path of the repository's seeded OSM XML fixture
+    (sources/osm_fixture.py), written once per digest."""
+    from ariadne_cartograph_spark.sources.osm_fixture import ensure_osm_fixture
+
+    return ensure_osm_fixture()
+
+
+@pytest.fixture(scope="session")
+def osm_doc(osm_fixture):
+    """The fixture parsed by the plain-Python census (tests/osm_census.py)."""
+    from tests.osm_census import parse
+
+    return parse(osm_fixture)
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     return SF_CORRECT
 

@@ -1,14 +1,12 @@
-"""End-to-end enrichment vs a pure-Python oracle that re-implements
-the reference algorithm literally (SURVEY.md §5.2 item 2): same
+"""End-to-end enrichment vs a pure-Python oracle
+(tests/osm_census.oracle_enrich) that re-implements the reference
+algorithm literally (SURVEY.md §5.2 item 2): same
 projection math, same tile values (closed-form synthetic), same
 np.median + global-max normalize. Run on the deterministic street grid
 of conftest.py."""
 
 from __future__ import annotations
 
-import math
-
-import numpy as np
 import pytest
 
 from ariadne_cartograph_spark.operators.enrich import (
@@ -19,57 +17,8 @@ from ariadne_cartograph_spark.operators.enrich import (
     explode_way_coords,
 )
 from ariadne_cartograph_spark.operators.merge import ParquetMergeTable, merge_into
-from ariadne_cartograph_spark.sources.tiles import synth_tile_array
 from ariadne_cartograph_spark.update_ways_metadata import load_ways
-
-
-# ---- pure-python reference re-implementation (the oracle) -----------------
-
-def _project(lng, lat, tile_size):
-    siny = math.sin(lat * math.pi / 180)
-    siny = min(max(siny, -0.9999), 0.9999)
-    return (
-        tile_size * (0.5 + lng / 360),
-        tile_size * (0.5 - math.log((1 + siny) / (1 - siny)) / (4 * math.pi)),
-    )
-
-
-def _to_xyz(wx, wy, zoom, tile_size):
-    scale = 1 << zoom
-    return (
-        int(math.floor(wx * scale / tile_size)),
-        int(math.floor(wy * scale / tile_size)),
-        int(math.floor(wx * scale % tile_size)),
-        int(math.floor(wy * scale % tile_size)),
-    )
-
-
-def _oracle_enrich(ways, provider: Provider):
-    tiles = {}
-    out = {}
-    max_observed = 0
-    for gid, coords in ways:
-        values = []
-        for lng, lat in coords:
-            wx, wy = _project(lng, lat, provider.tile_size)
-            x, y, px, py = _to_xyz(wx, wy, provider.zoom, provider.tile_size)
-            if (x, y) not in tiles:
-                tiles[(x, y)] = synth_tile_array(
-                    x, y, provider.zoom, provider.mode, provider.tile_size
-                )
-            arr = tiles[(x, y)]
-            if provider.value_kind == "gray":
-                values.append(float(arr[py, px]) / 255)
-            else:  # greenery_abs
-                x0, y0 = max(0, px - 10), max(0, py - 10)
-                x1, y1 = min(provider.tile_size, px + 10), min(provider.tile_size, py + 10)
-                crop = arr[y0:y1, x0:x1].astype(np.int64)
-                r, g, b = crop[..., 0], crop[..., 1], crop[..., 2]
-                values.append(float(np.clip(np.minimum(g - r, g - b), 0, 1).mean()))
-        med = float(np.median(values))
-        max_observed = max(max_observed, med)
-        out[gid] = med
-    return {k: v / max_observed for k, v in out.items()}
+from tests.osm_census import oracle_enrich
 
 
 @pytest.fixture(scope="module")
@@ -90,7 +39,7 @@ def test_enrichment_matches_reference_oracle(spark, ways_df, ways_local, provide
     got = {
         r.gid: r[provider.name] for r in enrich_ways(spark, ways_df, [provider]).collect()
     }
-    want = _oracle_enrich(ways_local, provider)
+    want = oracle_enrich(ways_local, provider)
     assert set(got) == set(want)
     for gid in want:
         assert got[gid] == pytest.approx(want[gid], abs=1e-12), gid

@@ -440,7 +440,7 @@ def test_s1_live_postgres_wire_parity_env_gated(spark):
 
 # ---------------------------------------------------- tag-key index (S9)
 
-def test_tag_key_index_equals_raw_map_filters(spark, tmp_path):
+def test_tag_key_index_equals_raw_map_filters(spark, tmp_path, osm_fixture, osm_doc):
     """The hstore-GiST substitute: indexed presence/value predicates
     return exactly the raw map-lookup answers, and the presence
     conjunct is PUSHED to the parquet scan (row-group skippable),
@@ -458,9 +458,8 @@ def test_tag_key_index_equals_raw_map_filters(spark, tmp_path):
         split_elements,
     )
 
-    ways = split_elements(
-        read_osm_elements(spark, "/root/reference/osm/example.osm")
-    )["ways"]
+    ways = split_elements(read_osm_elements(spark, osm_fixture))["ways"]
+    xml_ways = osm_doc.ways.items()
     path = str(tmp_path / "ways_idx")
     write_tag_indexed(ways, path, keys=["highway", "amenity", "addr:housenumber"])
     back = spark.read.parquet(path)
@@ -469,7 +468,7 @@ def test_tag_key_index_equals_raw_map_filters(spark, tmp_path):
     # presence query: tags ? 'highway'
     got = back.filter(indexed_tag_predicate(back, "highway")).count()
     want = ways.filter(F.col("tags").getItem("highway").isNotNull()).count()
-    assert got == want == 293
+    assert got == want == sum(1 for _, (_, t) in xml_ways if "highway" in t)
     # value query: tags->'highway' = 'residential'
     gotv = {
         r.id
@@ -482,7 +481,9 @@ def test_tag_key_index_equals_raw_map_filters(spark, tmp_path):
         for r in ways.filter(F.col("tags").getItem("highway") == "residential")
         .select("id").collect()
     }
-    assert gotv == wantv and len(gotv) == 24
+    assert gotv == wantv == {
+        w for w, (_, t) in xml_ways if t.get("highway") == "residential"
+    }
 
     # the boolean conjunct reaches the scan as a pushed filter
     plan = plan_of(back.filter(indexed_tag_predicate(back, "highway", "residential")))

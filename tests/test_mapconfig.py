@@ -2,9 +2,10 @@
 (`/root/reference/README.md:44` `-c mapconfig.xml`): the declarative
 path for routable-way selection and class→(id, priority, speed) costs.
 
-Invariants pinned here:
+Invariants pinned here, on the repository's seeded OSM fixture
+(sources/osm_fixture.py):
 - the STOCK profile reproduces the legacy highway-tagged import's edge
-  census on the fixture exactly (osm_topology_edges golden unchanged);
+  census on the fixture exactly (osm_topology_edges oracle unchanged);
 - a custom profile (pedestrian-only) is a config file, not a code
   change, and selects exactly its classes;
 - per-direction speeds / priority / tag_id flow into edge_costs.
@@ -25,8 +26,7 @@ from ariadne_cartograph_spark.sources.mapconfig import (
     default_mapconfig,
     parse_mapconfig,
 )
-
-FIXTURE = "/root/reference/osm/example.osm"
+from tests.osm_census import has_highway, topology
 
 
 # ---------------------------------------------------------------- parser
@@ -96,13 +96,13 @@ def test_configuration_table_rows():
 # ------------------------------------------------- config-driven import
 
 @pytest.fixture(scope="module")
-def fixture_tables(spark):
+def fixture_tables(spark, osm_fixture):
     from ariadne_cartograph_spark.sources.osm import (
         read_osm_elements,
         split_elements,
     )
 
-    t = split_elements(read_osm_elements(spark, FIXTURE))
+    t = split_elements(read_osm_elements(spark, osm_fixture))
     return {
         "nodes": t["nodes"].localCheckpoint(eager=True),
         "ways": t["ways"].localCheckpoint(eager=True),
@@ -117,12 +117,15 @@ def _census(edges):
     ).collect()[0]
 
 
-def test_stock_config_reproduces_legacy_import(fixture_tables):
+def test_stock_config_reproduces_legacy_import(fixture_tables, osm_doc):
     """The acceptance gate from the round-7/8 verdict: under the
-    DEFAULT (stock) config the osm_topology_edges golden is unchanged —
+    DEFAULT (stock) config the osm_topology_edges oracle is unchanged —
     stock mapconfig covers every highway class in the fixture, so the
     edge census is identical to the legacy highway-tagged filter
-    (and to _OSM_TOPOLOGY_ORACLE's pinned 604/293/872070915274)."""
+    (and to _OSM_TOPOLOGY_ORACLE's pinned 785/254/785749128, which the
+    plain-Python topology split of the XML reproduces)."""
+    edges = topology(osm_doc, has_highway)
+    census = (len(edges), len({e.way_id for e in edges}), sum(e.source for e in edges))
     legacy = _census(
         build_topology(
             fixture_tables["nodes"], routable_ways(fixture_tables["ways"])
@@ -134,7 +137,7 @@ def test_stock_config_reproduces_legacy_import(fixture_tables):
             routable_ways(fixture_tables["ways"], config=default_mapconfig()),
         )["edges"]
     )
-    assert tuple(legacy) == tuple(stock) == (604, 293, 872070915274)
+    assert tuple(legacy) == tuple(stock) == census == (785, 254, 785749128)
 
 
 def test_custom_pedestrian_profile(fixture_tables):
@@ -152,7 +155,7 @@ def test_custom_pedestrian_profile(fixture_tables):
     classes = {r[0] for r in edges.select("highway").distinct().collect()}
     assert classes == {"footway", "path", "pedestrian", "steps"}
     n = edges.count()
-    assert n == 313
+    assert n == 19
 
 
 def test_edge_costs_from_config(fixture_tables):
@@ -225,7 +228,7 @@ def test_way_maxspeed_parsing(spark):
 
 
 def test_edge_costs_way_maxspeed_override(fixture_tables):
-    """The fixture's 54 mph-tagged ways: with use_way_maxspeed=True the
+    """The fixture's mph-tagged ways: with use_way_maxspeed=True the
     cost uses the way's own speed; untagged ways keep the class speed;
     default stays the pure class table (opt-in, so the
     osm_topology_mapconfig golden is unaffected)."""

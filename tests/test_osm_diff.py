@@ -2,12 +2,12 @@
 ``--append`` replication path (`/root/reference/README.md:19`),
 re-expressed as broadcast anti-join + blast-radius recompute.
 
-The changeset below is synthesized over REAL fixture ids
-(`/root/reference/osm/example.osm`): it deletes unreferenced amenity
-nodes, moves two way-referenced nodes (shifting geometry), retags a
-residential way to tertiary, creates a new footway, and exercises the
-last-op-wins collapse (create → modify on one node, modify → delete on
-another)."""
+The changeset below is synthesized over ids of the repository's seeded
+OSM fixture (sources/osm_fixture.py, whose generator guarantees each
+id's role): it deletes unreferenced amenity nodes, moves two
+way-referenced nodes (shifting geometry), retags a residential way to
+tertiary, creates a new footway, and exercises the last-op-wins
+collapse (create → modify on one node, modify → delete on another)."""
 
 from __future__ import annotations
 
@@ -32,14 +32,17 @@ from ariadne_cartograph_spark.plans.geo_queries import (
     EXAMPLE_OSC_XML,
     OSC_CREATE_THEN_MODIFY_NODE as CREATE_THEN_MODIFY_NODE,
     OSC_DELETED_AMENITY_NODES as DELETED_AMENITY_NODES,
+    OSC_DELETED_ROUTE as DELETED_ROUTE,
     OSC_MODIFY_THEN_DELETE_NODE as MODIFY_THEN_DELETE_NODE,
     OSC_MOVED_NODES as MOVED_NODES,
+    OSC_MULTIPOLYGON as MULTIPOLYGON,
+    OSC_MULTIPOLYGON_WAY as MULTIPOLYGON_WAY,
     OSC_NEW_NODES as NEW_NODES,
     OSC_NEW_WAY as NEW_WAY,
+    OSC_RESTRICTION as RESTRICTION,
     OSC_RETAGGED_WAY as RETAGGED_WAY,
+    OSC_RETAGGED_WAY_REFS as RETAGGED_REFS,
 )
-
-FIXTURE = "/root/reference/osm/example.osm"
 
 
 @pytest.fixture(scope="module")
@@ -50,8 +53,8 @@ def osc_path(tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def base(spark):
-    return read_osm_elements(spark, FIXTURE).localCheckpoint(eager=True)
+def base(spark, osm_fixture):
+    return read_osm_elements(spark, osm_fixture).localCheckpoint(eager=True)
 
 
 @pytest.fixture(scope="module")
@@ -85,9 +88,9 @@ def test_apply_osc_semantics(base, diff):
     assert set(NEW_NODES) | {CREATE_THEN_MODIFY_NODE} <= ids(nodes)
     # modify replaced wholesale: moved node carries the new latitude
     moved = nodes.filter(F.col("id") == MOVED_NODES[0]).collect()[0]
-    assert moved.lat == pytest.approx(34.1232406)
+    assert moved.lat == pytest.approx(34.1336406)
     retag = patched.filter((F.col("kind") == "way") & (F.col("id") == RETAGGED_WAY)).collect()[0]
-    assert retag.tags["highway"] == "tertiary" and retag.tags["name"] == "Oakdale Street"
+    assert retag.tags["highway"] == "tertiary" and retag.tags["name"] == "North 5 Avenue"
     # net counts: -4 nodes deleted, +3 created; +1 way created
     assert patched.count() == base.count() - 4 + 3 + 1
 
@@ -104,7 +107,7 @@ def test_affected_way_ids_blast_radius(base, diff):
         for r in idx.filter(F.col("node_id").isin(*MOVED_NODES)).collect()
     }
     assert expect and expect <= aff
-    # and the radius is a tiny fraction of the 1091-way fixture
+    # and the radius is a tiny fraction of the fixture's ways
     assert len(aff) <= 8
     # index path gives the identical answer
     aff_idx = {r.way_id for r in affected_way_ids(diff, index=idx).collect()}
@@ -147,29 +150,29 @@ def test_deleted_way_flows_through(base, spark, tmp_path):
 
 
 def test_affected_relation_ids(base, diff, spark):
-    """Relation blast radius: the fixture's turn restriction 3516928
-    has the retagged way as its to-member; multipolygon 333928 is
-    flagged iff its member way 30086704 is touched."""
+    """Relation blast radius: the fixture's turn restriction RESTRICTION
+    has the retagged way as its to-member; multipolygon MULTIPOLYGON is
+    flagged iff its member way MULTIPOLYGON_WAY is touched."""
     from ariadne_cartograph_spark.sources.osm_diff import affected_relation_ids
 
     relations = split_elements(base)["relations"]
     aff = {r.relation_id for r in affected_relation_ids(diff, relations).collect()}
-    assert 3516928 in aff
-    assert 333928 not in aff
+    assert RESTRICTION in aff
+    assert MULTIPOLYGON not in aff
     # a changeset touching the multipolygon's member way flags it
-    osc = """<osmChange version="0.6">
-      <modify><way id="30086704" version="2"><nd ref="1"/><nd ref="2"/>
+    osc = f"""<osmChange version="0.6">
+      <modify><way id="{MULTIPOLYGON_WAY}" version="2"><nd ref="1"/><nd ref="2"/>
         <tag k="building" v="yes"/></way></modify>
-      <delete><relation id="6180566" version="2"/></delete>
+      <delete><relation id="{DELETED_ROUTE}" version="2"/></delete>
     </osmChange>"""
     import tempfile, os
     p = os.path.join(tempfile.mkdtemp(), "mp.osc")
     open(p, "w").write(osc)
     d2 = read_osc_elements(spark, p)
     aff2 = {r.relation_id for r in affected_relation_ids(d2, relations).collect()}
-    assert 333928 in aff2          # via member way
-    assert 6180566 in aff2         # direct delete
-    assert 3516928 not in aff2
+    assert MULTIPOLYGON in aff2    # via member way
+    assert DELETED_ROUTE in aff2   # direct delete
+    assert RESTRICTION not in aff2
     # the materialized-index path gives the identical answer, and
     # exactly one of relations=/index= must be passed
     from ariadne_cartograph_spark.sources.osm_diff import relation_member_index
@@ -244,7 +247,7 @@ def test_replication_pipeline_exactly_once(base, spark, tmp_path, osc_path):
 
 
 @pytest.mark.slow
-def test_streaming_osc_replication(base, spark, tmp_path):
+def test_streaming_osc_replication(base, spark, tmp_path, osm_doc):
     """Continuous replication: a file stream of .osc changesets drained
     one-per-micro-batch maintains element stores + a derived table;
     after the drain the derived table equals a full rebuild of the
@@ -262,7 +265,7 @@ def test_streaming_osc_replication(base, spark, tmp_path):
     pipe = OsmReplicationPipeline(spark, str(tmp_path / "repl"), derive, n_buckets=4)
     p0 = split_elements(base)
     pipe.bootstrap(p0["nodes"], p0["ways"])
-    assert pipe.derived.read().count() == 1091  # all fixture ways
+    assert pipe.derived.read().count() == len(osm_doc.ways)  # all fixture ways
 
     osc_dir = tmp_path / "feed"
     osc_dir.mkdir()
@@ -552,12 +555,12 @@ def test_crashed_batch_replay_keeps_index_consistent(base, spark, tmp_path, cras
     pipe.bootstrap(p0["nodes"], p0["ways"])
 
     # a changeset where a way LOSES vertices: the retagged way shrinks
-    # from 5 refs to 2 — nodes 122714885/90/92 must leave its index rows
+    # to its first 2 refs — refs 3 to 5 must leave its index rows
     osc = f"""<osmChange version="0.6">
       <modify>
         <way id="{RETAGGED_WAY}" version="3">
-          <nd ref="122714882"/>
-          <nd ref="122714883"/>
+          <nd ref="{RETAGGED_REFS[0]}"/>
+          <nd ref="{RETAGGED_REFS[1]}"/>
           <tag k="highway" v="tertiary"/>
         </way>
       </modify>
@@ -595,10 +598,10 @@ def test_crashed_batch_replay_keeps_index_consistent(base, spark, tmp_path, cras
     }
     assert maintained == from_scratch
     idx = dict(maintained)
-    for gone in (122714885, 122714890, 122714892):
+    for gone in RETAGGED_REFS[2:5]:
         assert RETAGGED_WAY not in idx.get(gone, ()), f"stale entry for node {gone}"
     # way store and derived table reflect the shrunk way
-    assert pipe.ways.read().filter(F.col("id") == RETAGGED_WAY).collect()[0].node_refs == [122714882, 122714883]
+    assert pipe.ways.read().filter(F.col("id") == RETAGGED_WAY).collect()[0].node_refs == list(RETAGGED_REFS[:2])
     assert pipe.derived.read().filter(F.col("id") == RETAGGED_WAY).collect()[0].n_pts == 2
 
 
@@ -696,18 +699,19 @@ def test_streaming_relation_maintenance(base, spark, tmp_path):
     osc_dir = tmp_path / "feed"
     osc_dir.mkdir()
     # changeset 1: retag the restriction's to-member way (blast radius
-    # must include restriction 3516928) and delete multipolygon 333928
+    # must include restriction RESTRICTION) and delete multipolygon
+    # MULTIPOLYGON
+    nds = "".join(f'<nd ref="{r}"/>' for r in RETAGGED_REFS)
     f1 = osc_dir / "000001.osc"
     f1.write_text(
         f"""<osmChange version="0.6">
           <modify>
             <way id="{RETAGGED_WAY}" version="2">
-              <nd ref="122714882"/><nd ref="122714883"/><nd ref="122714885"/>
-              <nd ref="122714890"/><nd ref="122714892"/>
+              {nds}
               <tag k="highway" v="tertiary"/>
             </way>
           </modify>
-          <delete><relation id="333928" version="2"/></delete>
+          <delete><relation id="{MULTIPOLYGON}" version="2"/></delete>
         </osmChange>"""
     )
     os.utime(f1, (1800000000, 1800000000))
@@ -727,7 +731,7 @@ def test_streaming_relation_maintenance(base, spark, tmp_path):
     pipe.run_stream(str(osc_dir), str(tmp_path / "ckpt"))
 
     rels = pipe.relations.read()
-    assert rels.filter(F.col("id") == 333928).count() == 0
+    assert rels.filter(F.col("id") == MULTIPOLYGON).count() == 0
     assert rels.filter(F.col("id") == 910000001).count() == 1
     assert rels.count() == n_rels0  # one deleted, one created
 
@@ -740,7 +744,7 @@ def test_streaming_relation_maintenance(base, spark, tmp_path):
     }
     assert got == want
     assert (910000001, 1, "route") in got
-    assert not any(i == 333928 for i, _, _ in got)
+    assert not any(i == MULTIPOLYGON for i, _, _ in got)
 
     # maintained member index == from-scratch rebuild
     maintained = {
@@ -755,7 +759,7 @@ def test_streaming_relation_maintenance(base, spark, tmp_path):
     assert maintained == scratch
     idx = dict(maintained)
     assert 910000001 in idx[f"way:{RETAGGED_WAY}"]
-    assert all(333928 not in v for v in idx.values())
+    assert all(MULTIPOLYGON not in v for v in idx.values())
 
 
 def test_apply_osc_model_random_ways_and_nodes(base, spark, tmp_path):
@@ -880,16 +884,16 @@ def test_crashed_batch_replay_relation_side(base, spark, tmp_path, crash_at):
 
     # shrink a relation's member list (stale-index hazard: the removed
     # member's index entry must drop) and delete another relation
-    rel = p0["relations"].filter(F.col("id") == 3516928).collect()[0]
+    rel = p0["relations"].filter(F.col("id") == RESTRICTION).collect()[0]
     keep = rel.members[0]
     osc = f"""<osmChange version="0.6">
       <modify>
-        <relation id="3516928" version="2">
+        <relation id="{RESTRICTION}" version="2">
           <member type="{keep.member_type}" ref="{keep.ref}" role="{keep.role or ''}"/>
           <tag k="type" v="restriction"/>
         </relation>
       </modify>
-      <delete><relation id="333928" version="2"/></delete>
+      <delete><relation id="{MULTIPOLYGON}" version="2"/></delete>
     </osmChange>"""
     p = tmp_path / "c.osc"
     p.write_text(osc)
@@ -908,8 +912,8 @@ def test_crashed_batch_replay_relation_side(base, spark, tmp_path, crash_at):
     pipe.apply_changeset(diff, batch_id=1)  # the replay
 
     rels = pipe.relations.read()
-    assert rels.filter(F.col("id") == 333928).count() == 0
-    assert len(rels.filter(F.col("id") == 3516928).collect()[0].members) == 1
+    assert rels.filter(F.col("id") == MULTIPOLYGON).count() == 0
+    assert len(rels.filter(F.col("id") == RESTRICTION).collect()[0].members) == 1
     maintained = {
         (r.id, tuple(r.relation_ids)) for r in pipe.member_rels.read().collect()
     }

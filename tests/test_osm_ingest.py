@@ -1,8 +1,13 @@
-"""Golden ingest tests on the reference's own fixture
-(/root/reference/osm/example.osm — read-only; measured counts from
-SURVEY.md §5.2 / FIXTURES.md)."""
+"""OSM XML ingest tests. The property tests run on the repository's
+seeded fixture (sources/osm_fixture.py) and compare the engine with a
+plain ElementTree census of the same XML (tests/osm_census.py). The
+golden tests pin counts, ids and names of the reference's real
+extract; they read it only where it exists (measured counts from
+SURVEY.md §5.2 / FIXTURES.md) and skip elsewhere."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,26 +23,45 @@ from ariadne_cartograph_spark.sources.osm import (
     read_osm_elements,
     split_elements,
 )
+from tests.osm_census import feature_counts, is_closed
 
-OSM_PATH = "/root/reference/osm/example.osm"
+# The reference's real extract: optional, read only by the golden tests
+REAL_OSM_PATH = "/root/reference/osm/example.osm"
+needs_real_extract = pytest.mark.skipif(
+    not os.path.exists(REAL_OSM_PATH),
+    reason=f"golden facts of the real extract; {REAL_OSM_PATH} is absent",
+)
 
 
-@pytest.fixture(scope="module")
-def tables(spark):
-    elements = read_osm_elements(spark, OSM_PATH).cache()
+def _tables(spark, path):
+    elements = read_osm_elements(spark, path).cache()
     t = split_elements(elements)
     t["nodes"] = t["nodes"].cache()
     t["ways"] = t["ways"].cache()
     return t
 
 
-def test_golden_element_counts(tables):
+@pytest.fixture(scope="module")
+def tables(spark, osm_fixture):
+    return _tables(spark, osm_fixture)
+
+
+@pytest.fixture(scope="module")
+def golden_tables(spark):
+    return _tables(spark, REAL_OSM_PATH)
+
+
+@needs_real_extract
+def test_golden_element_counts(golden_tables):
+    tables = golden_tables
     assert tables["nodes"].count() == 6223
     assert tables["ways"].count() == 1091
     assert tables["relations"].count() == 32
 
 
-def test_golden_vertex_and_ring_counts(tables):
+@needs_real_extract
+def test_golden_vertex_and_ring_counts(golden_tables):
+    tables = golden_tables
     assert tables["ways"].select(
         F.sum(F.size("node_refs"))
     ).collect()[0][0] == 7612
@@ -45,7 +69,9 @@ def test_golden_vertex_and_ring_counts(tables):
     assert closed == 792
 
 
-def test_golden_way_13302656(tables, spark):
+@needs_real_extract
+def test_golden_way_13302656(golden_tables, spark):
+    tables = golden_tables
     w = tables["ways"].filter(F.col("id") == 13302656).collect()[0]
     assert len(w.node_refs) == 6
     assert w.tags["highway"] == "residential"
@@ -73,7 +99,7 @@ def _canon_elements(df):
     )
 
 
-def test_sharded_multi_file_ingest(tables, spark, tmp_path):
+def test_sharded_multi_file_ingest(tables, spark, tmp_path, osm_fixture, osm_doc):
     """The 100 TB ingest posture (VERDICT r6 #2): a pre-split extract —
     3 files with cross-file way→node and relation→way references —
     must produce byte-identical element and feature tables to the
@@ -81,7 +107,7 @@ def test_sharded_multi_file_ingest(tables, spark, tmp_path):
     file."""
     import xml.etree.ElementTree as ET
 
-    root = ET.parse(OSM_PATH).getroot()
+    root = ET.parse(osm_fixture).getroot()
     children = list(root)
     for i in range(3):
         shard = ET.Element("osm", root.attrib)
@@ -101,7 +127,7 @@ def test_sharded_multi_file_ingest(tables, spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
         spark.conf.set("spark.sql.files.openCostInBytes", old_oc)
-    single = _canon_elements(read_osm_elements(spark, OSM_PATH))
+    single = _canon_elements(read_osm_elements(spark, osm_fixture))
     sharded_c = _canon_elements(sharded).cache()
     assert single.exceptAll(sharded_c).count() == 0
     assert sharded_c.exceptAll(single).count() == 0
@@ -114,9 +140,10 @@ def test_sharded_multi_file_ingest(tables, spark, tmp_path):
         assemble_way_geometries(t["nodes"], t["ways"]),
         relations=t["relations"],
     )
-    assert ft["point"].count() == 333
-    assert ft["line"].count() == 1091
-    assert ft["polygon"].count() == 775
+    want = feature_counts(osm_doc)
+    assert ft["point"].count() == want["point"]
+    assert ft["line"].count() == want["line"]
+    assert ft["polygon"].count() == want["polygon"]
     sharded_c.unpersist()
 
 
@@ -191,20 +218,21 @@ def test_geojson_roundtrip(tables, spark):
         assert abs(p.lng - q.lng) < 1e-9 and abs(p.lat - q.lat) < 1e-9
 
 
-def test_feature_tables(tables):
+def test_feature_tables(tables, osm_doc):
     t = derive_feature_tables(
         tables["nodes"], assemble_way_geometries(tables["nodes"], tables["ways"])
     )
     n_point = t["point"].count()
     n_line = t["line"].count()
     n_poly = t["polygon"].count()
-    assert n_line == 1091  # all ways
-    assert 0 < n_point < 6223  # only tagged nodes
-    assert 0 < n_poly <= 792  # closed+tagged subset
-    # style promotion: building column populated for the fixture's ~700
-    # buildings
+    closed = [tags for refs, tags in osm_doc.ways.values() if is_closed(refs)]
+    assert n_line == len(osm_doc.ways)  # all ways
+    assert 0 < n_point < len(osm_doc.nodes)  # only tagged nodes
+    assert 0 < n_poly <= len(closed)  # closed+tagged subset
+    # style promotion: building column populated for every closed
+    # building way of the fixture
     n_buildings = t["polygon"].filter(F.col("building").isNotNull()).count()
-    assert n_buildings >= 650
+    assert n_buildings == sum(1 for tags in closed if "building" in tags)
     # residual map holds non-style keys
     assert "other_tags" in t["line"].columns
 
@@ -257,12 +285,14 @@ def test_multipolygon_hole_attachment_pip_fallback(spark):
     assert (sq.holes[0][0]["lng"], sq.holes[0][0]["lat"]) == (6.0, 6.0)
 
 
-def test_multipolygon_assembly(tables, spark):
+@needs_real_extract
+def test_multipolygon_assembly(golden_tables, spark):
     """README.md:37 — the polygon table includes multipolygon
     relations: all 16 fixture relations stitch to one outer ring each,
     inner member ways (present in the extract) become holes."""
     from ariadne_cartograph_spark.sources.osm import assemble_multipolygons
 
+    tables = golden_tables
     geo = assemble_way_geometries(tables["nodes"], tables["ways"])
     mp = assemble_multipolygons(tables["relations"], geo).cache()
     rows = {r.relation_id: r for r in mp.collect()}
@@ -283,13 +313,13 @@ def test_multipolygon_assembly(tables, spark):
     assert len(rows[2700722].holes) == 0
 
 
-def test_feature_tables_with_relations_census(tables):
+def test_feature_tables_with_relations_census(tables, osm_fixture):
     """Independent census: feature-table counts re-derived from the XML
     with plain ElementTree (no engine code) — the same numbers pinned
     in the osm_ingest_feature_tables golden oracle."""
     import xml.etree.ElementTree as ET
 
-    root = ET.parse(OSM_PATH).getroot()
+    root = ET.parse(osm_fixture).getroot()
     tagged_nodes = sum(
         1 for el in root if el.tag == "node" and any(t.tag == "tag" for t in el)
     )
@@ -311,11 +341,11 @@ def test_feature_tables_with_relations_census(tables):
         assemble_way_geometries(tables["nodes"], tables["ways"]),
         relations=tables["relations"],
     )
-    assert t["point"].count() == tagged_nodes == 333
-    assert t["line"].count() == len(xml_ways) == 1091
-    assert t["polygon"].count() == closed_tagged + n_mp == 775
+    assert t["point"].count() == tagged_nodes == 171
+    assert t["line"].count() == len(xml_ways) == 709
+    assert t["polygon"].count() == closed_tagged + n_mp == 452
     # relation-derived rows carry osm2pgsql's negative-id convention
-    assert t["polygon"].filter(F.col("id") < 0).count() == n_mp == 16
+    assert t["polygon"].filter(F.col("id") < 0).count() == n_mp == 4
 
 
 def test_style_file_parser():
@@ -357,7 +387,7 @@ node,way   odd        text   nocolumn,nocache
     assert "highway" not in {r.tag for r in dflt if r.is_polygon}
 
 
-def test_style_driven_feature_tables_census(tables):
+def test_style_driven_feature_tables_census(tables, osm_fixture):
     """Full osm2pgsql flag semantics under the stock default.style,
     golden-checked against an independent ElementTree census: deleted
     tags (source/created_by/note) don't make a node importable, and a
@@ -371,7 +401,7 @@ def test_style_driven_feature_tables_census(tables):
     deleted = {r.tag for r in rules if r.is_deleted}
     poly_keys = {r.tag for r in rules if r.is_polygon and r.applies_to("way")}
 
-    root = ET.parse(OSM_PATH).getroot()
+    root = ET.parse(osm_fixture).getroot()
     want_point, want_poly = 0, 0
     for el in root:
         xtags = {t.get("k"): t.get("v") for t in el if t.tag == "tag"}
@@ -394,10 +424,10 @@ def test_style_driven_feature_tables_census(tables):
         style=rules,
         relations=tables["relations"],
     )
-    assert t["point"].count() == want_point == 107
-    assert t["line"].count() == 1091
-    assert t["polygon"].count() == want_poly + 16 == 772
-    assert t["roads"].count() == 79
+    assert t["point"].count() == want_point == 82
+    assert t["line"].count() == 709
+    assert t["polygon"].count() == want_poly + 4 == 451
+    assert t["roads"].count() == 190
     # promoted columns follow the style's column set + datatypes
     assert "addr_housenumber" in t["point"].columns
     assert dict(t["line"].dtypes)["z_order"] == "int"
@@ -469,14 +499,15 @@ node,way   building  text   polygon
     assert got == {1, 4}
 
 
-def test_turn_restrictions_golden(tables):
+@needs_real_extract
+def test_turn_restrictions_golden(golden_tables):
     """osm2pgrouting --attributes/--tags analog: the fixture's 8
     restriction relations, hand-checked triples from the XML."""
     from ariadne_cartograph_spark.operators.topology import extract_turn_restrictions
 
     r = {
         row.relation_id: row
-        for row in extract_turn_restrictions(tables["relations"]).collect()
+        for row in extract_turn_restrictions(golden_tables["relations"]).collect()
     }
     assert len(r) == 8
     assert r[3516928].restriction == "no_left_turn"
@@ -493,10 +524,11 @@ def test_turn_restrictions_golden(tables):
         assert r[rid].from_way == r[rid].to_way
 
 
-def test_route_members_golden(tables):
+@needs_real_extract
+def test_route_members_golden(golden_tables):
     from ariadne_cartograph_spark.sources.osm import route_members
 
-    rm = route_members(tables["relations"]).cache()
+    rm = route_members(golden_tables["relations"]).cache()
     # fixture census: 5 route + 2 route_master relations, 3,577 member rows
     assert rm.count() == 3577
     by_type = {
@@ -537,7 +569,7 @@ def test_route_members_golden(tables):
     rm.unpersist()
 
 
-def test_permissive_mode_quarantines_corrupt_file(spark, tmp_path):
+def test_permissive_mode_quarantines_corrupt_file(spark, tmp_path, osm_fixture, osm_doc):
     """The 100 TB ingest contract (Spark JSON/CSV PERMISSIVE applied at
     the XML corruption unit, the file): a truncated shard contributes
     its parsed prefix plus ONE quarantine marker; intact shards parse
@@ -546,8 +578,8 @@ def test_permissive_mode_quarantines_corrupt_file(spark, tmp_path):
 
     from ariadne_cartograph_spark.sources.osm import corrupt_files
 
-    shutil.copy(OSM_PATH, tmp_path / "good.osm")
-    data = open(OSM_PATH, "rb").read()
+    shutil.copy(osm_fixture, tmp_path / "good.osm")
+    data = open(osm_fixture, "rb").read()
     with open(tmp_path / "bad.osm", "wb") as f:
         f.write(data[: len(data) // 2])  # truncated mid-document
 
@@ -555,15 +587,15 @@ def test_permissive_mode_quarantines_corrupt_file(spark, tmp_path):
     bad = corrupt_files(el).collect()
     assert len(bad) == 1
     assert bad[0].path.endswith("bad.osm") and "ParseError" in bad[0].error
-    # the intact file parsed fully (7346 elements), the truncated one
-    # contributed a prefix — and split_elements never sees the marker
+    # the intact file parsed fully, the truncated one contributed a
+    # prefix — and split_elements never sees the marker
     t = split_elements(el)
     n_nodes = t["nodes"].count()
-    assert 6223 < n_nodes < 2 * 6223
+    assert len(osm_doc.nodes) < n_nodes < 2 * len(osm_doc.nodes)
     good_only = split_elements(
         read_osm_elements(spark, f"file://{tmp_path}/good.osm")
     )
-    assert good_only["nodes"].count() == 6223
+    assert good_only["nodes"].count() == len(osm_doc.nodes)
 
     with pytest.raises(Exception):
         read_osm_elements(spark, f"file://{tmp_path}/*.osm").count()  # failfast

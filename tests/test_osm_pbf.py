@@ -1,6 +1,7 @@
 """The PBF source (sources/osm_pbf.py) — the splittable planet-scale
 ingest path: protobuf wire codec units, XML↔PBF format parity on the
-reference fixture, and blob-level intra-file parallelism."""
+repository's seeded OSM fixture (sources/osm_fixture.py), and
+blob-level intra-file parallelism."""
 
 from __future__ import annotations
 
@@ -13,8 +14,6 @@ from ariadne_cartograph_spark.sources.osm import (
     read_osm_elements,
     split_elements,
 )
-
-OSM_PATH = "/root/reference/osm/example.osm"
 
 
 def test_varint_zigzag_roundtrip():
@@ -34,18 +33,18 @@ def test_packed_delta_roundtrip():
 
 
 @pytest.fixture(scope="module")
-def pbf_path(tmp_path_factory):
-    rows = list(_iter_osm_rows(open(OSM_PATH, "rb")))
+def pbf_path(tmp_path_factory, osm_fixture):
+    rows = list(_iter_osm_rows(open(osm_fixture, "rb")))
     out = tmp_path_factory.mktemp("pbf") / "example.osm.pbf"
     P.write_pbf(rows, str(out), block_elements=1000)
     return str(out)
 
 
-def test_pbf_roundtrip_exact(pbf_path):
+def test_pbf_roundtrip_exact(pbf_path, osm_fixture):
     """Every element field survives XML → PBF → decode bit-exactly
     (delta/zigzag/string-table/granularity coding verified end-to-end
-    on all 7,346 fixture elements)."""
-    rows = list(_iter_osm_rows(open(OSM_PATH, "rb")))
+    on every fixture element)."""
+    rows = list(_iter_osm_rows(open(osm_fixture, "rb")))
     back = []
     with open(pbf_path, "rb") as f:
         for btype, off, size in P.scan_blob_index(pbf_path):
@@ -60,14 +59,15 @@ def test_pbf_roundtrip_exact(pbf_path):
         assert a[k] == b[k], k
 
 
-def test_blob_index_is_multi_block(pbf_path):
-    """1000-element blocks → the single file splits into 8 OSMData
-    blobs, each independently decodable (THE splittability property XML
-    lacks)."""
+def test_blob_index_is_multi_block(pbf_path, osm_doc):
+    """1000-element blocks → the single file splits into one OSMData
+    blob per 1000 elements, each independently decodable (THE
+    splittability property XML lacks)."""
     idx = P.scan_blob_index(pbf_path)
     assert idx[0][0] == "OSMHeader"
     data = [e for e in idx if e[0] == "OSMData"]
-    assert len(data) == 8  # ceil(7346 / 1000)
+    n = len(osm_doc.nodes) + len(osm_doc.ways) + len(osm_doc.relations)
+    assert len(data) == -(-n // 1000) > 1  # ceil(n / 1000)
 
 
 def _canon(df):
@@ -80,7 +80,7 @@ def _canon(df):
     )
 
 
-def test_spark_reader_matches_xml_reader(spark, pbf_path):
+def test_spark_reader_matches_xml_reader(spark, pbf_path, osm_fixture, osm_doc):
     """Format parity at the DataFrame level: the PBF reader and the XML
     reader produce identical unified element frames, and one file's
     blocks decode across multiple tasks."""
@@ -96,44 +96,46 @@ def test_spark_reader_matches_xml_reader(spark, pbf_path):
     finally:
         spark.conf.set(key, old)
     pbf = P.read_osm_pbf(spark, f"file://{pbf_path}")
-    xml = _canon(read_osm_elements(spark, OSM_PATH))
+    xml = _canon(read_osm_elements(spark, osm_fixture))
     got = _canon(pbf).cache()
     assert xml.exceptAll(got).count() == 0
     assert got.exceptAll(xml).count() == 0
     t = split_elements(P.read_osm_pbf(spark, f"file://{pbf_path}"))
-    assert t["nodes"].count() == 6223
-    assert t["ways"].count() == 1091
-    assert t["relations"].count() == 32
+    assert t["nodes"].count() == len(osm_doc.nodes)
+    assert t["ways"].count() == len(osm_doc.ways)
+    assert t["relations"].count() == len(osm_doc.relations)
     got.unpersist()
 
 
-def test_sharded_export_roundtrip(spark, tmp_path):
+def test_sharded_export_roundtrip(spark, tmp_path, osm_fixture, osm_doc):
     """The distributed sink: 4 partitions → 4 self-contained part
     files whose glob reads back the identical element frame (export →
     re-ingest is lossless, the directory IS a valid sharded extract)."""
     import os
 
-    elements = read_osm_elements(spark, OSM_PATH).repartition(4)
+    elements = read_osm_elements(spark, osm_fixture).repartition(4)
     out = str(tmp_path / "extract")
     manifest = P.write_pbf_sharded(elements, out, block_elements=500).collect()
     assert len(manifest) == 4
-    assert sum(m.n_elements for m in manifest) == 7346
+    assert sum(m.n_elements for m in manifest) == (
+        len(osm_doc.nodes) + len(osm_doc.ways) + len(osm_doc.relations)
+    )
     parts = [f for f in os.listdir(out) if f.endswith(".osm.pbf")]
     assert len(parts) == 4
     back = P.read_osm_pbf(spark, f"file://{out}/part-*.osm.pbf")
-    a = _canon(read_osm_elements(spark, OSM_PATH))
+    a = _canon(read_osm_elements(spark, osm_fixture))
     b = _canon(back).cache()
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     b.unpersist()
 
 
-def test_ensure_pbf_fixture_caches(tmp_path):
-    p1 = P.ensure_pbf_fixture(OSM_PATH, cache_dir=str(tmp_path))
+def test_ensure_pbf_fixture_caches(tmp_path, osm_fixture):
+    p1 = P.ensure_pbf_fixture(osm_fixture, cache_dir=str(tmp_path))
     import os
 
     mtime = os.path.getmtime(p1)
-    p2 = P.ensure_pbf_fixture(OSM_PATH, cache_dir=str(tmp_path))
+    p2 = P.ensure_pbf_fixture(osm_fixture, cache_dir=str(tmp_path))
     assert p1 == p2 and os.path.getmtime(p2) == mtime  # no re-encode
 
 

@@ -1,12 +1,13 @@
 """Distributed shortest-path (operators/routing) vs pure-Python
-oracles on the OSM fixture topology — BFS hop counts exactly, weighted
+oracles on the topology of the repository's seeded OSM fixture
+(sources/osm_fixture.py) — BFS hop counts exactly, weighted
 Bellman-Ford vs Dijkstra within float tolerance."""
 
 from __future__ import annotations
 
 import heapq
 import math
-from collections import defaultdict, deque
+from collections import defaultdict
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,13 +15,12 @@ from pyspark.sql import functions as F
 from ariadne_cartograph_spark.operators.routing import edge_adjacency, shortest_paths
 from ariadne_cartograph_spark.operators.topology import build_topology, routable_ways
 from ariadne_cartograph_spark.sources.osm import read_osm_elements, split_elements
-
-OSM_PATH = "/root/reference/osm/example.osm"
+from tests.osm_census import bfs, graph, haversine_m, reach_census
 
 
 @pytest.fixture(scope="module")
-def topo_edges(spark):
-    t = split_elements(read_osm_elements(spark, OSM_PATH))
+def topo_edges(spark, osm_fixture):
+    t = split_elements(read_osm_elements(spark, osm_fixture))
     return (
         build_topology(t["nodes"], routable_ways(t["ways"]))["edges"]
         .localCheckpoint(eager=True)
@@ -35,56 +35,28 @@ def edge_list(topo_edges):
     ]
 
 
-def _haversine_m(a, b):
-    # exact float-op mirror of functions.geo.haversine_m (delta-scaled
-    # radians), so path sums agree to float noise, not formula drift
-    (lng1, lat1), (lng2, lat2) = a, b
-    rad = math.pi / 180.0
-    dlat = (lat2 - lat1) * rad
-    dlng = (lng2 - lng1) * rad
-    h = (
-        math.sin(dlat / 2) ** 2
-        + math.cos(lat1 * rad) * math.cos(lat2 * rad) * math.sin(dlng / 2) ** 2
-    )
-    return 2.0 * 6371008.8 * math.asin(math.sqrt(h))  # EARTH_RADIUS_M
-
-
 def test_bfs_hops_match_python(spark, topo_edges, edge_list):
     src = min(min(a, b) for a, b, _ in edge_list)
-    g = defaultdict(list)
-    for a, b, _ in edge_list:
-        g[a].append(b)
-        g[b].append(a)
-    dist = {src: 0}
-    dq = deque([src])
-    while dq:
-        u = dq.popleft()
-        for v in g[u]:
-            if v not in dist:
-                dist[v] = dist[u] + 1
-                dq.append(v)
-    bounded = {k: v for k, v in dist.items() if v <= 12}
+    bounded = bfs(graph((a, b) for a, b, _ in edge_list), src, 12)
 
     got = {
         r.node_id: r.hops
         for r in shortest_paths(edge_adjacency(topo_edges), [src], max_iter=12).collect()
     }
     assert got == bounded
-    # the golden literals pinned in the osm_route_bfs_reach oracle
-    assert len(bounded) == 195
+    # the literals pinned in the osm_route_bfs_reach oracle
     assert max(bounded.values()) == 12
-    assert sum(bounded.values()) == 1734
-    assert sum(k * v for k, v in bounded.items()) == 2918399019593
+    assert reach_census(bounded) == (103, 812, 812837263)
 
 
 @pytest.mark.slow
 def test_weighted_matches_python_dijkstra(spark, topo_edges, edge_list):
-    from ariadne_cartograph_spark.functions.geo import haversine_m
+    from ariadne_cartograph_spark.functions import geo
 
     src = min(min(a, b) for a, b, _ in edge_list)
     g = defaultdict(list)
     for a, b, geom in edge_list:
-        w = sum(_haversine_m(geom[i], geom[i + 1]) for i in range(len(geom) - 1))
+        w = sum(haversine_m(geom[i], geom[i + 1]) for i in range(len(geom) - 1))
         g[a].append((b, w))
         g[b].append((a, w))
     dist = {src: 0.0}
@@ -104,7 +76,7 @@ def test_weighted_matches_python_dijkstra(spark, topo_edges, edge_list):
     length = F.aggregate(
         F.transform(
             F.sequence(F.lit(1), F.size("geom") - 1),
-            lambda i: haversine_m(
+            lambda i: geo.haversine_m(
                 F.element_at("geom", i)["lng"],
                 F.element_at("geom", i)["lat"],
                 F.element_at("geom", i + 1)["lng"],
@@ -265,7 +237,7 @@ def test_straight_through_same_way_not_banned_by_uturn(spark):
 
 @pytest.mark.slow
 def test_fixture_restricted_matches_python_linegraph_dijkstra(
-    spark, topo_edges
+    spark, topo_edges, osm_fixture
 ):
     """Full-fixture parity: restricted_shortest_paths vs an independent
     pure-Python edge-based Dijkstra implementing the same OSM
@@ -280,7 +252,9 @@ def test_fixture_restricted_matches_python_linegraph_dijkstra(
         extract_turn_restrictions,
     )
 
-    t = split_elements(read_osm_elements(spark, OSM_PATH))
+    from ariadne_cartograph_spark.plans.geo_queries import OSC_RESTRICTION
+
+    t = split_elements(read_osm_elements(spark, osm_fixture))
     restr_df = extract_turn_restrictions(t["relations"]).localCheckpoint(
         eager=True
     )
@@ -288,9 +262,10 @@ def test_fixture_restricted_matches_python_linegraph_dijkstra(
     arc_rows = arcs.collect()
     restr = restr_df.collect()
 
-    # source: tail of an arc on the no_left_turn's from_way (261918653)
+    # source: tail of an arc on the no_left_turn's from_way
+    from_way = next(r.from_way for r in restr if r.relation_id == OSC_RESTRICTION)
     src = min(
-        r.u for r in arc_rows if r.way_id == 261918653
+        r.u for r in arc_rows if r.way_id == from_way
     )
 
     out_arcs = defaultdict(list)
@@ -393,30 +368,16 @@ def test_cost_matrix_matches_per_source_runs(spark, topo_edges):
 def test_cost_matrix_census_literals(spark, edge_list):
     """Independent re-derivation of the osm_route_cost_matrix golden
     oracle: plain-Python BFS per source over the fixture topology."""
-    g = defaultdict(list)
-    for a, b, _ in edge_list:
-        g[a].append(b)
-        g[b].append(a)
+    g = graph((a, b) for a, b, _ in edge_list)
     srcs = sorted(set(g))[:3]
     want = {
-        20827733: (129, 974, 1658784252081),
-        29322335: (212, 1397, 2278525630109),
-        29322337: (185, 1226, 1898728416385),
+        1000002: (76, 500, 500525280),
+        1000005: (85, 544, 544493142),
+        1000009: (95, 609, 609587557),
     }
     assert srcs == sorted(want)
     for s in srcs:
-        dist = {s: 0}
-        dq = deque([s])
-        while dq:
-            u = dq.popleft()
-            for v in g[u]:
-                if v not in dist:
-                    dist[v] = dist[u] + 1
-                    dq.append(v)
-        b = {k: v for k, v in dist.items() if v <= 10}
-        assert (
-            len(b), sum(b.values()), sum(k * v for k, v in b.items())
-        ) == want[s], s
+        assert reach_census(bfs(g, s, 10)) == want[s], s
 
 
 @pytest.mark.slow

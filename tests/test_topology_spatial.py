@@ -1,6 +1,7 @@
 """Topology builder + POI nearest-edge assignment tests (SURVEY.md
-§2.6 / J4) — golden structure on example.osm plus a hand-built
-micro-fixture with known answers."""
+§2.6 / J4) — structure on the repository's seeded OSM fixture
+(sources/osm_fixture.py), checked against a plain ElementTree census
+of the XML, plus a hand-built micro-fixture with known answers."""
 
 from __future__ import annotations
 
@@ -10,13 +11,12 @@ from pyspark.sql import functions as F
 from ariadne_cartograph_spark.operators.spatial import assign_pois_to_edges
 from ariadne_cartograph_spark.operators.topology import build_topology, routable_ways
 from ariadne_cartograph_spark.sources.osm import read_osm_elements, split_elements
-
-OSM_PATH = "/root/reference/osm/example.osm"
+from tests.osm_census import mercator, ring_area_m2
 
 
 @pytest.fixture(scope="module")
-def topo(spark):
-    t = split_elements(read_osm_elements(spark, OSM_PATH))
+def topo(spark, osm_fixture):
+    t = split_elements(read_osm_elements(spark, osm_fixture))
     rw = routable_ways(t["ways"]).cache()
     out = build_topology(t["nodes"], rw)
     out["edges"] = out["edges"].cache()
@@ -68,14 +68,14 @@ def test_vertices_pgr_bookkeeping(topo):
     assert any(r.cnt > 2 for r in verts.values())
 
 
-def test_edge_attributes_census(topo):
+def test_edge_attributes_census(topo, osm_fixture):
     """--attributes --tags analog (README.md:44): every edge carries
     its way's highway / name / oneway and tags map. Golden numbers
     re-derived from the XML with a plain ElementTree pass (the same
     literals pinned in the osm_topology_edges oracle)."""
     import xml.etree.ElementTree as ET
 
-    root = ET.parse(OSM_PATH).getroot()
+    root = ET.parse(osm_fixture).getroot()
     classes, oneway_ways, named_ways = set(), set(), set()
     for el in root:
         if el.tag != "way":
@@ -100,15 +100,17 @@ def test_edge_attributes_census(topo):
             F.when(F.col("name").isNotNull(), F.col("osm_way_id"))
         ).alias("n_named"),
     ).collect()[0]
-    assert got.n_classes == len(classes) == 8
-    assert got.n_oneway == len(oneway_ways) == 9
-    assert got.n_named == len(named_ways) == 84
-    # known way: every segment of Oakdale Street keeps its attributes
-    segs = e.filter(F.col("osm_way_id") == 13302656).collect()
+    assert got.n_classes == len(classes) == 12
+    assert got.n_oneway == len(oneway_ways) == 19
+    assert got.n_named == len(named_ways) == 181
+    # known way: every segment of North 5 Avenue keeps its attributes
+    from ariadne_cartograph_spark.plans.geo_queries import OSC_RETAGGED_WAY
+
+    segs = e.filter(F.col("osm_way_id") == OSC_RETAGGED_WAY).collect()
     assert segs
     for s in segs:
         assert s.highway == "residential"
-        assert s.name == "Oakdale Street"
+        assert s.name == "North 5 Avenue"
         assert s.tags["highway"] == "residential"
 
 
@@ -402,22 +404,9 @@ def test_polygon_area_mercator_shoelace(spark):
     """Engine area vs an independent python replay of the same
     Mercator shoelace, plus a closed-form check: a Mercator-plane
     'rectangle' in projected coords has area exactly dx*dy there."""
-    import math
-
     from pyspark.sql import functions as F
 
     from ariadne_cartograph_spark.functions.geometry import polygon_area_m2
-
-    R = 6378137.0
-
-    def proj(lng, lat):
-        return (lng * math.pi * R / 180.0,
-                R * math.log(math.tan(math.pi / 4.0 + lat * math.pi / 360.0)))
-
-    def py_ring_area(ring):
-        pts = [proj(x, y) for x, y in ring]
-        s = sum(x1 * y2 - x2 * y1 for (x1, y1), (x2, y2) in zip(pts, pts[1:]))
-        return abs(s) / 2.0
 
     sq = [(10.0, 45.0), (10.1, 45.0), (10.1, 45.1), (10.0, 45.1), (10.0, 45.0)]
     hole = [(10.02, 45.02), (10.04, 45.02), (10.04, 45.04), (10.02, 45.04), (10.02, 45.02)]
@@ -437,12 +426,12 @@ def test_polygon_area_mercator_shoelace(spark):
             "i", polygon_area_m2(F.col("geom"), F.col("holes")).alias("a")
         ).collect()
     }
-    assert got[1] == pytest.approx(py_ring_area(sq) - py_ring_area(hole), rel=1e-9)
-    assert got[2] == pytest.approx(py_ring_area(tri), rel=1e-9)
+    assert got[1] == pytest.approx(ring_area_m2(sq) - ring_area_m2(hole), rel=1e-9)
+    assert got[2] == pytest.approx(ring_area_m2(tri), rel=1e-9)
     # closed-form: axis-aligned in lnglat => rectangle in Mercator plane
-    x0, y0 = proj(10.0, 45.0)
-    x1, y1 = proj(10.1, 45.1)
-    assert py_ring_area(sq) == pytest.approx((x1 - x0) * (y1 - y0), rel=1e-9)
+    x0, y0 = mercator(10.0, 45.0)
+    x1, y1 = mercator(10.1, 45.1)
+    assert ring_area_m2(sq) == pytest.approx((x1 - x0) * (y1 - y0), rel=1e-9)
 
 
 def test_simplify_radial_semantics(spark):

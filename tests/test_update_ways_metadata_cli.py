@@ -15,18 +15,16 @@ from ariadne_cartograph_spark.functions.geo import lnglat_to_tile_pixel
 from ariadne_cartograph_spark.operators.merge import ParquetMergeTable
 from ariadne_cartograph_spark.update_ways_metadata import PROVIDERS, load_ways, run
 
-FIXTURE = "osm:/root/reference/osm/example.osm"
-
-
 @pytest.fixture(scope="module")
 def ways(spark, street_grid):
     return load_ways(spark, street_grid.path).localCheckpoint(eager=True)
 
 
-def test_load_ways_is_the_routable_import(spark):
+def test_load_ways_is_the_routable_import(spark, osm_fixture):
     # the reference's `ways` IS osm2pgrouting's edge table: same census
-    ways = load_ways(spark, FIXTURE)
-    assert ways.count() == 604
+    # (osm_topology_edges' 785 edges on the seeded fixture)
+    ways = load_ways(spark, f"osm:{osm_fixture}")
+    assert ways.count() == 785
     assert set(ways.columns) == {"gid", "geom"}
 
 
