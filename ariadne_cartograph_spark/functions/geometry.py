@@ -61,15 +61,6 @@ def geojson_to_linestring(geojson: Column | str) -> Column:
     return F.transform(pairs, lambda xy: F.struct(xy[0].alias("lng"), xy[1].alias("lat")))
 
 
-def linestring_to_wkt(geom: Column | str) -> Column:
-    g = F.col(geom) if isinstance(geom, str) else geom
-    coords = F.concat_ws(
-        ",",
-        F.transform(g, lambda p: F.concat(_fmt_num(p["lng"]), F.lit(" "), _fmt_num(p["lat"]))),
-    )
-    return F.concat(F.lit("LINESTRING("), coords, F.lit(")"))
-
-
 def is_closed_ring(refs: Column | str, min_refs: int = 4) -> Column:
     """Polygon-candidate classification (reference P13, README.md:35):
     first ref == last ref and enough vertices."""

@@ -61,19 +61,6 @@ def punct_ratio(text: Column | str) -> Column:
     return n_punct.cast("double") / F.greatest(F.length(t), F.lit(1)).cast("double")
 
 
-def quality_score(text: Column | str) -> Column:
-    """Composite [0,1] quality heuristic: length sweet-spot, word-length
-    sanity, low punctuation density. Mirrors the shape of C4/Gopher-style
-    rule filters (public heuristics), not any specific implementation."""
-    t = F.col(text) if isinstance(text, str) else text
-    n = token_count(t)
-    len_score = F.least(n.cast("double") / 50.0, F.lit(1.0))
-    awl = avg_word_length(t)
-    wl_score = F.when((awl >= 3.0) & (awl <= 10.0), 1.0).otherwise(0.5)
-    p_score = F.lit(1.0) - F.least(punct_ratio(t) * 5.0, F.lit(1.0))
-    return (len_score + wl_score + p_score) / 3.0
-
-
 def _bind(value: Column, body) -> Column:
     """Evaluate ``value`` ONCE per row and pass it to ``body`` as a
     bound lambda variable: transform(array(v), x -> body(x))[1].

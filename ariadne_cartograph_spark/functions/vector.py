@@ -41,31 +41,6 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def dot_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Dot product unrolled for a known dimension: element products
-    summed left-associated — the SAME IEEE accumulation order as
-    :func:`dot`'s sequential fold (and DuckDB's list_dot_product), so
-    results are bit-identical, but the expression is plain arithmetic
-    that whole-stage codegen compiles instead of an interpreted
-    higher-order lambda. Use in scan-side per-row scoring (norms,
-    query dot products). NOTE, measured at the sf1 rehearsal: in a
-    nested-loop PAIR join the join iterator itself dominates (~1 us
-    per pair either way), so for all-pairs scoring reach for
-    operators/similarity.exact_cosine_pairs_blocked instead."""
-    av = F.col(a) if isinstance(a, str) else a
-    bv = F.col(b) if isinstance(b, str) else b
-    terms = [av[i].cast("double") * bv[i].cast("double") for i in range(dim)]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def euclidean(a: Column | str, b: Column | str) -> Column:
-    diffs = F.zip_with(as_double(a), as_double(b), lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))
-
-
 def rademacher_planes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     """±1.0 hyperplane components derived from md5 digests — stable
     across runs, platforms, and engines, and small enough to inject as

@@ -52,23 +52,8 @@ def decode_linestring(buf: bytes) -> list[tuple[float, float]]:
     return pts
 
 
-# pandas_udf creation needs an active SparkSession, so the UDFs are
+# pandas_udf creation needs an active SparkSession, so the UDF is
 # built lazily at first use rather than at module import.
-def geom_to_wkb_col(geom: Column | str) -> Column:
-    """array<struct<lng,lat>> column → WKB binary column."""
-    from pyspark.sql import functions as F
-
-    @pandas_udf("binary")
-    def geom_to_wkb(g: pd.Series) -> pd.Series:
-        return g.map(
-            lambda pts: None
-            if pts is None
-            else encode_linestring([(p["lng"], p["lat"]) for p in pts])
-        )
-
-    return geom_to_wkb(F.col(geom) if isinstance(geom, str) else geom)
-
-
 def wkb_to_geom_col(buf: Column | str) -> Column:
     """WKB binary column → array<struct<lng,lat>> column."""
     from pyspark.sql import functions as F

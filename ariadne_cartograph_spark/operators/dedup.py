@@ -119,25 +119,6 @@ def _minhash_from_shingles(shingles: "F.Column", n_hashes: int) -> "F.Column":
     )
 
 
-def minhash_signature(
-    df: DataFrame, text_col: str, n_hashes: int = 32, shingle_size: int = 3
-) -> DataFrame:
-    """Append ``mh_sig``: array<long> MinHash signature of the doc's
-    word-shingle set. Row-local: shingles → n_hashes seeded xxhash64
-    min-reductions, all inside array expressions (no shuffle)."""
-    # Shingles are built directly as longs (hashed_word_shingles: token
-    # hashes combined per gram — no gram strings), so string hashing
-    # runs once per TOKEN total, not once per gram per hash function;
-    # the shingle array is let-bound to build once per row.
-    from ..functions.text import _bind
-
-    sig = _bind(
-        hashed_word_shingles(text_col, n=shingle_size),
-        lambda h1: _minhash_from_shingles(h1, n_hashes),
-    )
-    return df.withColumn("mh_sig", sig)
-
-
 def lsh_candidate_pairs(
     sig_df: DataFrame,
     id_col: str,

@@ -19,11 +19,14 @@ IEEE-754 engine, so a DuckDB oracle replays the whole train bit-exactly
 — see plans/quality_queries.embedding_pca_project).
 
 Scale design:
-- the Gram aggregate runs as an Arrow-batched ``mapInPandas`` partial
-  (one d×d int64 matmul per batch, numpy), emitting d² rows per
-  PARTITION — shuffle volume is #partitions·d², independent of n;
-- the driver collect is model-sized (d² longs) and the iteration is
-  O(iters·d²) on the driver;
+- the Gram is ONE Spark action: an Arrow-batched ``mapInPandas``
+  partial (one d×d int64 matmul per batch, numpy) emits one row per
+  PARTITION — its raveled d×d partial as ``array<long>`` plus its
+  envelope bound — and the driver ``collect()``s those rows and sums
+  them in numpy; there is no ``groupBy(i, j)`` shuffle;
+- the driver collect is #partitions·d² longs, independent of n (131k
+  longs at d=64 on ``local[32]``), and the iteration is O(iters·d²) on
+  the driver;
 - the projection is a pure JVM column expression (zip_with/aggregate
   over the quantized array against d literal weights) — no Python in
   the per-row path, no second shuffle.
@@ -58,21 +61,21 @@ def quantize_vec(vec_col, q_scale: int = Q_SCALE):
 def gram_matrix(df: DataFrame, qvec_col: str = "q") -> list[list[int]]:
     """Exact int64 Gram matrix of a quantized array<long> column.
 
-    One pass: per-Arrow-batch numpy int64 ``X.T @ X`` accumulated per
-    partition, d² (i, j, s) rows per partition, one map-side-combinable
-    groupBy, a model-sized driver collect. Integer sums are associative,
-    so the result is independent of partitioning (test-pinned).
+    One action: per-Arrow-batch numpy int64 ``X.T @ X`` accumulated per
+    partition, one (raveled d×d partial, bound) row per partition, a
+    driver collect and a numpy sum. Integer sums are associative, so
+    the result is independent of partitioning (test-pinned).
 
     Overflow envelope ENFORCED, not just documented (r12 advice): numpy
-    int64 matmuls and Spark long sums both wrap silently, and the 2⁶³
-    assert in power_iteration cannot see a Gram entry that already
-    wrapped during accumulation. Each partition therefore tracks
-    Σ_batches n_rows·max|q|² in unbounded Python ints and asserts it
-    BEFORE every matmul (bounding the per-batch product, the partition
-    accumulator, and its emitted partials), then ships the bound as a
-    sentinel (i=0, j=0) row; the driver re-asserts the cross-partition
-    total — |G_ij| ≤ Σ_p bound_p < 2⁶³ proves no int64 anywhere in the
-    pipeline could have wrapped.
+    int64 matmuls and sums wrap silently, and the 2⁶³ assert in
+    power_iteration cannot see a Gram entry that already wrapped during
+    accumulation. Each partition therefore tracks Σ_batches
+    n_rows·max|q|² in unbounded Python ints and asserts it BEFORE every
+    matmul (bounding the per-batch product, the partition accumulator
+    and its emitted partial); the driver sums the partitions' bounds in
+    Python ints and asserts the total BEFORE the numpy sum — every
+    |G_ij| and every partial sum is at most that total, so no int64
+    anywhere in the pipeline can have wrapped.
     """
     import numpy as np
 
@@ -93,42 +96,23 @@ def gram_matrix(df: DataFrame, qvec_col: str = "q") -> list[list[int]]:
             g = X.T @ X
             acc = g if acc is None else acc + g
         if acc is not None:
-            d = acc.shape[0]
-            ii, jj = np.meshgrid(np.arange(d), np.arange(d), indexing="ij")
-            yield pd.DataFrame(
-                {"i": ii.ravel() + 1, "j": jj.ravel() + 1, "s": acc.ravel()}
-            )
-            # sentinel row: this partition's proven envelope bound,
-            # keyed by partition id so Spark's int64 sum never combines
-            # two sentinels (the cross-partition total is summed on the
-            # driver in unbounded Python ints — a wrapped Spark sum
-            # could otherwise sneak past the driver assert)
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            yield pd.DataFrame({"i": [0], "j": [pid], "s": [bound]})
+            yield pd.DataFrame({"g": [acc.ravel()], "bound": [bound]})
 
     rows = (
         df.select(qvec_col)
-        .mapInPandas(partial, schema="i int, j int, s long")
-        .groupBy("i", "j")
-        .agg(F.sum("s").alias("s"))
+        .mapInPandas(partial, schema="g array<long>, bound long")
         .collect()
     )
     if not rows:
         return []
-    total_bound = sum(int(r["s"]) for r in rows if r["i"] == 0)
+    total_bound = sum(int(r["bound"]) for r in rows)
     assert total_bound < 2**63, (
         "int64 Gram envelope exceeded across partitions "
         f"(sum n·max|q|^2 = {total_bound}) — lower q_scale or rows"
     )
-    d = max(r["i"] for r in rows)
-    G = [[0] * d for _ in range(d)]
-    for r in rows:
-        if r["i"] == 0:
-            continue
-        G[r["i"] - 1][r["j"] - 1] = int(r["s"])
-    return G
+    G = np.array([r["g"] for r in rows], dtype=np.int64).sum(axis=0)
+    d = math.isqrt(G.size)
+    return G.reshape(d, d).tolist()
 
 
 def power_iteration(G: list[list[int]], iters: int = 3, v_scale: int = V_SCALE) -> list[int]:

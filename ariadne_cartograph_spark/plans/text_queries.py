@@ -1576,7 +1576,10 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 # trained direction and projections bit-identical, pinned against the
 # SAME oracle as the batch entry. The production shape for model-state
 # maintenance over an append-only embedding store: d² driver state,
-# retrain without replaying history.
+# retrain without replaying history. Two staged files give two
+# micro-batches, the fewest that still exercise the accumulation; the
+# stage, checkpoint and partial store are removed before returning (the
+# returned plan reads the table, not the stage).
 # --------------------------------------------------------------------------
 
 
@@ -1586,14 +1589,20 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_PCA_ORACLE,
 )
 def embedding_stream_pca_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
+    import shutil
     import tempfile
 
     from ..operators.pca import power_iteration, project_direction
     from ..streaming.pca import stage_embeddings_as_stream_source, streaming_gram
 
-    stage = tempfile.mkdtemp(prefix="acs_stream_pca_")
-    stage_embeddings_as_stream_source(spark, sf_dir, stage, n_files=4)
-    G = streaming_gram(spark, stage)
+    work = tempfile.mkdtemp(prefix="acs_stream_pca_")
+    try:
+        stage = os.path.join(work, "stage")
+        stage_embeddings_as_stream_source(spark, sf_dir, stage, n_files=2)
+        G = streaming_gram(spark, stage, os.path.join(work, "stream"))
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
     p = power_iteration(G)
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     return project_direction(emb, ["vec_id", "label"], "embedding", p).orderBy(

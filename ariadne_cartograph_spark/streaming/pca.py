@@ -11,17 +11,35 @@ an append-only embedding store: each micro-batch contributes a d²
 integer increment (model-sized — the driver state is 64×64 longs, never
 O(rows)), and retraining after any number of batches is a driver-side
 O(iters·d²) pass with no replay of historical data.
+
+One streamer, :func:`streaming_gram`, serves both the catalog entry and
+restarts after a crash. Each micro-batch runs the one-action
+:func:`operators.pca.gram_matrix` and stores its d² partial on the
+driver as one small JSON file named by the batch id, in a partial store
+next to the stream checkpoint under ``work_dir``. foreachBatch is
+at-least-once: after a crash the restarted query replays the
+uncommitted batch with the SAME id over the SAME file-source offset
+range, and the replay overwrites that batch's file, so accumulation is
+exactly-once. The streamer returns the fold of the store in unbounded
+Python ints. No Spark job writes or reads the store: it is #batches·d²
+longs, written with a temp name and ``os.replace``.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.pca import Q_SCALE, gram_matrix, quantize_vec
 from ..sources.tables import load_table
+
+# The streamer reads only the embedding column; declaring it skips the
+# schema-inference job a read of the stage would run.
+_STREAM_SCHEMA = "embedding array<float>"
 
 
 def stage_embeddings_as_stream_source(
@@ -35,121 +53,77 @@ def stage_embeddings_as_stream_source(
 
 
 def streaming_gram(
-    spark: SparkSession, stage_dir: str, q_scale: int = Q_SCALE
-) -> list[list[int]]:
-    """Accumulate the exact integer Gram across an availableNow file
-    stream (one file per micro-batch). Python-int accumulation on the
-    driver: unbounded precision, and each per-batch partial is already
-    an exact int64 Spark aggregate."""
-    from pyspark.sql import functions as F
-
-    schema = spark.read.parquet(stage_dir).schema
-    acc: list[list[int]] = []
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        qdf = batch.select(quantize_vec(F.col("embedding"), q_scale).alias("q"))
-        G = gram_matrix(qdf, "q")
-        if not G:
-            return
-        if not acc:
-            acc.extend([row[:] for row in G])
-        else:
-            for i in range(len(G)):
-                for j in range(len(G)):
-                    acc[i][j] += G[i][j]
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
-    ckpt = tempfile.mkdtemp(prefix="acs_pca_ckpt_")
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", os.path.join(ckpt, "gram"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return acc
-
-
-def streaming_gram_durable(
     spark: SparkSession,
     stage_dir: str,
-    gram_dir: str,
-    checkpoint_dir: str,
+    work_dir: str | None = None,
     q_scale: int = Q_SCALE,
     fail_at_batch: int | None = None,
-) -> None:
-    """Crash-tolerant streaming Gram maintenance (r12 verdict task #7 —
-    the in-memory accumulator above proves associativity under CLEAN
-    replay; this is the restartable production shape).
-
-    Each micro-batch's exact d² int64 partial lands in
-    ``gram_dir/batch_id=N`` with per-batch-directory OVERWRITE, keyed
-    by the Structured Streaming batch id. foreachBatch is
-    at-least-once: after a crash, the restarted query replays the
-    uncommitted batch with the SAME id over the SAME file-source offset
-    range, so the overwrite makes accumulation exactly-once — a
-    partial written just before the crash is replaced, never
-    double-counted. :func:`read_gram_store` folds the store in
-    unbounded Python ints; equality with the offline
-    :func:`operators.pca.gram_matrix` is test-pinned under an injected
-    mid-stream crash (tests/test_pca.py).
+) -> list[list[int]]:
+    """Exact integer Gram of the ``embedding array<float>`` column of an
+    availableNow file stream over ``stage_dir`` (one file per
+    micro-batch). The checkpoint and the per-batch partial store live
+    under ``work_dir``; calling again with the same ``work_dir`` after a
+    crash resumes the stream and returns the same Gram as a clean run.
+    With ``work_dir=None`` a temporary directory is used and removed on
+    return.
 
     ``fail_at_batch``: test hook — raise AFTER writing that batch's
     partial (the hard case: state persisted, commit lost)."""
     from pyspark.sql import functions as F
 
-    schema = spark.read.parquet(stage_dir).schema
+    own = work_dir is None
+    if own:
+        work_dir = tempfile.mkdtemp(prefix="acs_pca_stream_")
+    store = os.path.join(work_dir, "gram")
+    os.makedirs(store, exist_ok=True)
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         qdf = batch.select(quantize_vec(F.col("embedding"), q_scale).alias("q"))
         G = gram_matrix(qdf, "q")
         if G:
-            d = len(G)
-            rows = [(i + 1, j + 1, G[i][j]) for i in range(d) for j in range(d)]
-            (
-                spark.createDataFrame(rows, "i int, j int, s long")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(gram_dir, f"batch_id={batch_id}"))
-            )
+            path = os.path.join(store, f"{batch_id}.json")
+            with open(path + ".tmp", "w") as f:
+                json.dump(G, f)
+            os.replace(path + ".tmp", path)
         if fail_at_batch is not None and batch_id == fail_at_batch:
             raise RuntimeError(f"injected crash after batch {batch_id}")
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        q = (
+            spark.readStream.schema(_STREAM_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage_dir)
+            .writeStream.foreachBatch(_process)
+            .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return _fold_store(store)
+    finally:
+        if own:
+            shutil.rmtree(work_dir, ignore_errors=True)
 
 
-def read_gram_store(spark: SparkSession, gram_dir: str) -> list[list[int]]:
+def _fold_store(store: str) -> list[list[int]]:
     """Fold the per-batch partial store into the total Gram. The
     cross-batch sum runs in unbounded Python ints (each batch partial
     is an exact, envelope-asserted int64 aggregate; their SUM may not
-    fit int64, so no Spark-side aggregation here — the store is
-    model-sized, #batches·d² rows), then the int64 envelope is
-    re-asserted on the total for oracle replayability."""
-    rows = spark.read.parquet(gram_dir).collect()
-    if not rows:
-        return []
-    agg: dict[tuple[int, int], int] = {}
-    for r in rows:
-        k = (r["i"], r["j"])
-        agg[k] = agg.get(k, 0) + int(r["s"])
-    d = max(i for i, _ in agg)
-    G = [[0] * d for _ in range(d)]
-    for (i, j), s in agg.items():
-        assert abs(s) < 2**63, "int64 Gram envelope exceeded — lower q_scale"
-        G[i - 1][j - 1] = s
+    fit int64), then the int64 envelope is re-asserted on the total for
+    oracle replayability."""
+    G: list[list[int]] = []
+    for name in sorted(os.listdir(store)):
+        if not name.endswith(".json"):
+            continue
+        with open(os.path.join(store, name)) as f:
+            part = json.load(f)
+        if not G:
+            G = part
+            continue
+        for row, prow in zip(G, part):
+            for j, s in enumerate(prow):
+                row[j] += s
+    for row in G:
+        for s in row:
+            assert abs(s) < 2**63, "int64 Gram envelope exceeded — lower q_scale"
     return G

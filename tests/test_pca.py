@@ -4,12 +4,17 @@ Pins: (1) partition-count independence of the integer Gram (the
 determinism contract the oracle relies on), (2) agreement of the
 trained direction with numpy's exact top eigenvector on a spectrally
 well-separated corpus, (3) the degenerate zero-Gram guard, (4) the
-int64-envelope assertion.
+int64-envelope assertion, (5) the Gram costs one Spark action, (6) the
+streaming Gram equals the offline one, also across a crash, and (7)
+the streaming catalog entry runs several micro-batches and leaves no
+directory behind.
 """
 
 from __future__ import annotations
 
 import math
+import os
+import tempfile
 
 import numpy as np
 import pytest
@@ -36,16 +41,35 @@ def test_gram_partition_independence(spark):
     X = rng.randn(200, 8).astype(np.float32) * 0.3
     import pyspark.sql.functions as F
 
-    grams = []
-    for parts in (1, 3, 13):
-        df = _mkdf(spark, X, parts).select(
-            quantize_vec(F.col("embedding")).alias("q")
-        )
-        grams.append(gram_matrix(df, "q"))
-    assert grams[0] == grams[1] == grams[2]
+    q = quantize_vec(F.col("embedding"))
+    # the augmented q ++ [1] shape embedding_dim_correlation trains on
+    qa = F.concat(q, F.array(F.lit(1).cast("long")))
+    grams, aug = [], []
+    for parts in (1, 3, 7, 13):
+        df = _mkdf(spark, X, parts)
+        grams.append(gram_matrix(df.select(q.alias("q")), "q"))
+        aug.append(gram_matrix(df.select(qa.alias("q")), "q"))
+    assert all(g == grams[0] for g in grams)
+    assert all(g == aug[0] for g in aug)
     # and it equals the exact numpy int64 Gram of the same quantization
     Q = np.floor(X.astype(np.float64) * Q_SCALE + 0.5).astype(np.int64)
     assert grams[0] == (Q.T @ Q).tolist()
+    Qa = np.hstack([Q, np.ones((len(Q), 1), dtype=np.int64)])
+    assert aug[0] == (Qa.T @ Qa).tolist()
+
+
+def test_gram_matrix_is_one_action(spark, spark_jobs):
+    # a local multi-partition frame with no shuffle of its own, so the
+    # Gram's own stages are all the probe sees: one action, one job
+    X = np.random.RandomState(4).randint(-9, 9, (100, 8))
+    rows = [([int(v) for v in x],) for x in X]
+    df = spark.createDataFrame(rows, "q array<long>")
+    assert df.rdd.getNumPartitions() > 1
+    with spark_jobs() as probe:
+        G = gram_matrix(df, "q")
+    assert len(G) == 8
+    assert probe.actions == 1
+    assert len(probe.jobs) == 1, probe.jobs
 
 
 def test_direction_matches_numpy_eigenvector(spark):
@@ -105,7 +129,18 @@ def test_gram_envelope_enforced_in_accumulation(spark):
     with pytest.raises(Exception, match="envelope"):
         gram_matrix(df.repartition(1), "q")
 
-    # well inside the envelope: exact, sentinel rows stripped
+    # each partition inside the envelope, their total outside: the
+    # driver's cross-partition assert must fire before the numpy sum
+    import pyspark.sql.functions as F
+
+    half = 2_500_000_000  # half^2 < 2^63 < 2·half^2
+    one_per_part = spark.range(0, 2, 1, 2).select(
+        F.array(F.lit(half).cast("long"), F.lit(0).cast("long")).alias("q")
+    )
+    with pytest.raises(AssertionError, match="envelope exceeded across partitions"):
+        gram_matrix(one_per_part, "q")
+
+    # well inside the envelope: exact
     small = spark.createDataFrame([([3, 4],), ([1, 2],)], "q array<long>")
     assert gram_matrix(small, "q") == [[10, 14], [14, 20]]
 
@@ -121,22 +156,38 @@ def test_iteration_float_semantics_match_sql_formula():
     assert got == want
 
 
-def test_streaming_gram_equals_batch_gram(spark, tmp_path):
+def _acs_entries():
+    """The package's temporary entries (``acs_*``) in the temp dir."""
+    return {e for e in os.listdir(tempfile.gettempdir()) if e.startswith("acs_")}
+
+
+def _stream_frame(spark, seed, n):
     import pyspark.sql.functions as F
 
-    from ariadne_cartograph_spark.streaming.pca import streaming_gram
-
-    rng = np.random.RandomState(9)
-    X = rng.randn(120, 8).astype(np.float32) * 0.3
+    X = np.random.RandomState(seed).randn(n, 8).astype(np.float32) * 0.3
     rows = [(i, 0, [float(v) for v in x]) for i, x in enumerate(X)]
     df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
-    batch_G = gram_matrix(
-        df.select(quantize_vec(F.col("embedding")).alias("q")), "q"
-    )
-    for n_files in (1, 5):
+    return df, gram_matrix(df.select(quantize_vec(F.col("embedding")).alias("q")), "q")
+
+
+def test_streaming_gram_equals_batch_gram(spark, tmp_path):
+    from ariadne_cartograph_spark.streaming.pca import streaming_gram
+
+    df, batch_G = _stream_frame(spark, 9, 120)
+    for n_files in (1, 2, 5):
         stage = str(tmp_path / f"stage{n_files}")
         df.repartition(n_files).write.mode("overwrite").parquet(stage)
-        assert streaming_gram(spark, stage) == batch_G
+        n_parts = len([f for f in os.listdir(stage) if f.endswith(".parquet")])
+        assert n_parts == n_files
+        work = str(tmp_path / f"work{n_files}")
+        assert streaming_gram(spark, stage, work) == batch_G
+        # one partial per micro-batch (one file per trigger)
+        store = sorted(os.listdir(os.path.join(work, "gram")))
+        assert store == [f"{b}.json" for b in range(n_files)]
+    # without a work_dir the streamer removes its temporary one
+    before = _acs_entries()
+    assert streaming_gram(spark, str(tmp_path / "stage2")) == batch_G
+    assert _acs_entries() == before
 
 
 @pytest.mark.slow
@@ -146,41 +197,61 @@ def test_streaming_gram_survives_mid_stream_crash(spark, tmp_path):
     batch (same id, same offsets), the overwrite keeps accumulation
     exactly-once, and the folded store equals the offline Gram
     bit-exactly (so the trained direction and every projection match)."""
-    import pyspark.sql.functions as F
+    from ariadne_cartograph_spark.streaming.pca import _fold_store, streaming_gram
 
-    from ariadne_cartograph_spark.streaming.pca import (
-        read_gram_store,
-        streaming_gram_durable,
-    )
-
-    rng = np.random.RandomState(21)
-    X = rng.randn(160, 8).astype(np.float32) * 0.3
-    rows = [(i, 0, [float(v) for v in x]) for i, x in enumerate(X)]
-    df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
-    offline_G = gram_matrix(
-        df.select(quantize_vec(F.col("embedding")).alias("q")), "q"
-    )
-
+    df, offline_G = _stream_frame(spark, 21, 160)
     stage = str(tmp_path / "stage_crash")
     df.repartition(4).write.mode("overwrite").parquet(stage)
-    gram_dir = str(tmp_path / "gram_store")
-    ckpt = str(tmp_path / "ckpt")
+    work = str(tmp_path / "work")
+    store = os.path.join(work, "gram")
 
     with pytest.raises(Exception, match="injected crash"):
-        streaming_gram_durable(spark, stage, gram_dir, ckpt, fail_at_batch=2)
+        streaming_gram(spark, stage, work, fail_at_batch=2)
     # the crashed batch's partial IS on disk — the dangerous state
-    import os
-    assert os.path.isdir(os.path.join(gram_dir, "batch_id=2"))
-    partial_mid = read_gram_store(spark, gram_dir)
-    assert partial_mid != offline_G  # stream genuinely interrupted
+    assert os.path.isfile(os.path.join(store, "2.json"))
+    assert _fold_store(store) != offline_G  # stream genuinely interrupted
 
     # resume from the same checkpoint: batch 2 replays (overwrite, not
     # double-count), batch 3 runs, and the total is exactly offline
-    streaming_gram_durable(spark, stage, gram_dir, ckpt)
-    assert read_gram_store(spark, gram_dir) == offline_G
+    G = streaming_gram(spark, stage, work)
+    assert G == offline_G
+    assert power_iteration(G) == power_iteration(offline_G)
 
-    from ariadne_cartograph_spark.operators.pca import power_iteration
 
-    assert power_iteration(read_gram_store(spark, gram_dir)) == power_iteration(
-        offline_G
+def test_stream_pca_entry_runs_batches_and_leaves_no_directory(spark, sf_dir):
+    """The entry's purpose is a multi-batch stream: a listener sees at
+    least two micro-batches. Its stage, checkpoint and partial store
+    are removed before it returns, and the returned plan still runs."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from ariadne_cartograph_spark.plans.text_queries import (
+        embedding_stream_pca_parity,
     )
+
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            self.batches = 0
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.batches += 1
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    before = _acs_entries()
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        df = embedding_stream_pca_parity(spark, sf_dir)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.batches >= 2
+    assert _acs_entries() == before
+    assert df.count() > 0
