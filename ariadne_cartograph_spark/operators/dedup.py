@@ -27,8 +27,9 @@ from ..functions.text import fingerprint_md5, hashed_word_shingles
 # Persisted shingle frames created by the near-dup builders below. The
 # returned DataFrames are lazy, so the builders cannot unpersist before
 # the caller materializes them; instead every persist() is tracked here
-# and callers that loop (bench.py, the parity harness, foreachBatch
-# users) call release_caches() between materializations so repeated
+# and callers that loop (bench.py and the parity harness, through
+# session.release_session_state; foreachBatch users) call
+# release_caches() between materializations so repeated
 # invocations in one long-lived session don't accumulate cached
 # partitions until storage-memory eviction churn.
 _LIVE_CACHES: list[DataFrame] = []

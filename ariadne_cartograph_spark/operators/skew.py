@@ -7,9 +7,8 @@ skew-join splitting does not cover —
   that key through a single reducer. Two-phase salted aggregation
   spreads phase 1 over ``n_salts`` reducers; phase 2 combines the tiny
   per-salt partials.
-- **joins against a replicable small side** where a hot key dominates:
-  salt the big side, explode the small side across the salt range —
-  each (key, salt) bucket lands on a different reducer.
+- **per-key top-k** on a skewed key, the same two-phase shape over a
+  window.
 
 Both are pure DataFrame rewrites — no RDDs, no custom partitioners —
 so Catalyst/AQE still optimize around them.
@@ -57,27 +56,6 @@ def salted_agg(
             for out, (col, op) in aggs.items()
         ]
     )
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: list[str],
-    how: str = "inner",
-    n_salts: int = 16,
-) -> DataFrame:
-    """Equi-join with the big side salted and the small side replicated
-    n_salts×. Use when one join key is hot enough that even AQE's
-    partition splitting leaves a straggler; costs n_salts× the small
-    side's shuffle volume, so keep the small side small (or broadcast
-    it instead and skip salting entirely)."""
-    b = big.withColumn(
-        _SALT, F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(n_salts))
-    )
-    s = small.withColumn(
-        _SALT, F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<bigint>"))
-    )
-    return b.join(s, [*on, _SALT], how).drop(_SALT)
 
 
 def salted_topk_per_key(

@@ -487,35 +487,26 @@ def events_median_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-# Staged source dirs, keyed by (sf_dir, copies). Staging is a pure
-# deterministic function of the input table, so one materialization per
-# process serves every parity/test call; the dirs are process-private
-# tempdirs (no cross-run reuse, no stale-data risk).
-_STAGE_CACHE: dict[tuple[str, int], str] = {}
-
-
 def _staged_stream(spark: SparkSession, sf_dir: str, copies: int = 1):
     """Stage the events table as a replayable parquet file-stream
     source (native µs timestamps); ``copies`` > 1 appends duplicate
-    files to exercise dedup."""
+    files to exercise dedup. Staging is a pure function of the input,
+    so one keyed work directory per (sf_dir, copies) serves every call
+    in the process."""
     import os
-    import tempfile
 
+    from ..session import work_dir
     from ..streaming.events import read_events_stream, stage_events_as_stream_source
 
-    key = (os.path.abspath(sf_dir), copies)
-    stage = _STAGE_CACHE.get(key)
-    if stage is None or not os.path.exists(os.path.join(stage, "_SUCCESS")):
-        stage = tempfile.mkdtemp(prefix="acs_stream_stage_")
+    def build(stage: str) -> None:
         stage_events_as_stream_source(spark, sf_dir, stage)
         if copies > 1:
-            from ..sources.tables import load_table
-
             ev = load_table(spark, sf_dir, "events")
             for _ in range(copies - 1):
                 ev.write.mode("append").parquet(stage)
-        _STAGE_CACHE[key] = stage
-    return read_events_stream(spark, stage)
+
+    key = ("events_stage", os.path.abspath(sf_dir), copies)
+    return read_events_stream(spark, work_dir(key, build))
 
 
 @register(

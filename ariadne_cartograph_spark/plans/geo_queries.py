@@ -469,10 +469,7 @@ def scan_tag_index_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed filters with row-group stats (pinned in
     tests/test_layout_config.py), the map lookup runs only on
     surviving groups, answers hash-equal to raw map filters."""
-    import hashlib
-    import os
-    import tempfile
-
+    from ..session import work_dir
     from ..sources.layout import (
         TAG_INDEX_LAYOUT_VERSION,
         indexed_tag_predicate,
@@ -480,54 +477,16 @@ def scan_tag_index_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..sources.osm import read_osm_elements, split_elements
 
-    # Content-keyed fixture path (like ensure_osc_fixture, but the
-    # content is a parquet layout, so the key is a digest of the
-    # source file + index config rather than a byte compare): repeated
-    # bench/rehearsal/driver runs reuse one directory instead of
-    # leaking a fresh mkdtemp per invocation; a regenerated fixture,
-    # changed key list, or bumped on-disk layout version gets a NEW
-    # directory, never a stale read. The cache roots under a per-user
-    # 0700 subdirectory (the default tempdir is world-readable and
-    # shared across users). The write goes to a scratch dir and
-    # publishes with an atomic rename, so concurrent drivers race to
-    # an identical result, not a half-written directory.
+    # The index is a pure function of the fixture, the key list and the
+    # on-disk layout version, so it is built once per process.
     keys = ["highway", "amenity", "building"]
     osm_path = _osm_path()
-    st = os.stat(osm_path)
-    digest = hashlib.md5(
-        f"{osm_path}:{st.st_size}:{st.st_mtime_ns}:{keys}"
-        f":layout_v{TAG_INDEX_LAYOUT_VERSION}".encode()
-    ).hexdigest()[:12]
-    cache_root = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_cache_{os.getuid()}"
-    )
-    os.makedirs(cache_root, mode=0o700, exist_ok=True)
-    # makedirs applies mode only on CREATE: the parent is world-writable
-    # /tmp and the name is predictable, so verify we own the directory
-    # and re-tighten the bits — failing loudly beats silently using a
-    # cache root another local user pre-created (and could poison).
-    root_st = os.stat(cache_root)
-    if root_st.st_uid != os.getuid():
-        raise RuntimeError(
-            f"cache root {cache_root} is owned by uid {root_st.st_uid}, "
-            f"not the current user (uid {os.getuid()}); refusing to use "
-            "a cache directory another user controls"
-        )
-    if (root_st.st_mode & 0o777) != 0o700:
-        os.chmod(cache_root, 0o700)
-    path = os.path.join(cache_root, f"tag_index_{digest}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ways = split_elements(read_osm_elements(spark, osm_path))["ways"]
-        # scratch under the same per-user root: keeps the publish
-        # rename same-filesystem and the partial write private
-        scratch = tempfile.mkdtemp(prefix="tag_index_w_", dir=cache_root)
-        write_tag_indexed(ways, scratch, keys=keys)
-        try:
-            os.rename(scratch, path)
-        except OSError:  # lost the publish race: identical content exists
-            import shutil
 
-            shutil.rmtree(scratch, ignore_errors=True)
+    def build(d: str) -> None:
+        ways = split_elements(read_osm_elements(spark, osm_path))["ways"]
+        write_tag_indexed(ways, d, keys=keys)
+
+    path = work_dir(("tag_index", osm_path, keys, TAG_INDEX_LAYOUT_VERSION), build)
     back = spark.read.parquet(path)
     res = back.filter(indexed_tag_predicate(back, "highway", "residential"))
     return spark.range(1).select(
@@ -687,16 +646,17 @@ EXAMPLE_OSC_XML = f"""<?xml version="1.0" encoding="UTF-8"?>
 
 
 def ensure_osc_fixture() -> str:
-    """Materialize the changeset once under /tmp (content-stable), like
-    ensure_pbf_fixture does for the PBF parity entry."""
+    """Write the changeset once per process (a keyed work directory, like
+    ensure_pbf_fixture's transcode) and return its path."""
     import os
-    import tempfile
 
-    path = os.path.join(tempfile.gettempdir(), "spark_graft_example.osc")
-    if not os.path.exists(path) or open(path).read() != EXAMPLE_OSC_XML:
-        with open(path, "w") as f:
+    from ..session import work_dir
+
+    def build(d: str) -> None:
+        with open(os.path.join(d, "example.osc"), "w") as f:
             f.write(EXAMPLE_OSC_XML)
-    return path
+
+    return os.path.join(work_dir("example.osc", build), "example.osc")
 
 
 _OSM_DIFF_ORACLE = """
@@ -1565,15 +1525,15 @@ def _replication_census(spark: SparkSession) -> dict:
     """Run the FULL replication pipeline (bootstrap + one combined
     changeset through apply_changeset: way retag, WAY DELETE with
     metadata cascade, relation delete, relation member-shrink,
-    relation create) in a fresh scratch root and census the resulting
-    maintained tables plus maintained-vs-from-scratch mismatch counts
+    relation create) in a fresh unkeyed work directory and census the
+    resulting maintained tables plus maintained-vs-from-scratch mismatch counts
     for BOTH reverse indexes and both derived tables, plus the
     ways_metadata FK invariant (ways_metadata.ddl:6 ON DELETE CASCADE:
     orphan count must be 0 and the deleted way's row must be gone)."""
-    import shutil
-    import tempfile
+    import os
 
     from ..operators.merge import ParquetMergeTable
+    from ..session import work_dir
     from ..sources.osm import read_osm_elements, split_elements
     from ..sources.osm_diff import node_way_index, read_osc_elements
     from ..streaming.osm_replication import OsmReplicationPipeline
@@ -1584,120 +1544,115 @@ def _replication_census(spark: SparkSession) -> dict:
     def derive_rels(rels):
         return rels.select("id", F.size("members").alias("n_members"))
 
-    root = tempfile.mkdtemp(prefix="acs_repl_parity_")
-    try:
-        meta = ParquetMergeTable(
-            spark, f"{root}/ways_metadata", key="gid", n_buckets=4
+    root = work_dir()
+    meta = ParquetMergeTable(
+        spark, f"{root}/ways_metadata", key="gid", n_buckets=4
+    )
+    pipe = OsmReplicationPipeline(
+        spark,
+        root,
+        derive,
+        n_buckets=4,
+        derive_relations=derive_rels,
+        way_children=[meta],
+    )
+    p0 = split_elements(read_osm_elements(spark, _osm_path()))
+    pipe.bootstrap(p0["nodes"], p0["ways"], relations=p0["relations"])
+    # the enrichment CLI's metadata table: one deterministic row
+    # per bootstrapped way, FK-child of the ways store
+    meta.upsert(
+        p0["ways"].select(
+            F.col("id").alias("gid"),
+            (F.pmod(F.col("id"), F.lit(97)) / 97.0)
+            .cast("float")
+            .alias("popularity"),
         )
-        pipe = OsmReplicationPipeline(
-            spark,
-            root,
-            derive,
-            n_buckets=4,
-            derive_relations=derive_rels,
-            way_children=[meta],
-        )
-        p0 = split_elements(read_osm_elements(spark, _osm_path()))
-        pipe.bootstrap(p0["nodes"], p0["ways"], relations=p0["relations"])
-        # the enrichment CLI's metadata table: one deterministic row
-        # per bootstrapped way, FK-child of the ways store
-        meta.upsert(
-            p0["ways"].select(
-                F.col("id").alias("gid"),
-                (F.pmod(F.col("id"), F.lit(97)) / 97.0)
-                .cast("float")
-                .alias("popularity"),
-            )
-        )
-        osc = f"""<osmChange version="0.6">
-          <modify>
-            <way id="{OSC_RETAGGED_WAY}" version="2">
-              <nd ref="{OSC_RETAGGED_WAY_REFS[0]}"/><nd ref="{OSC_RETAGGED_WAY_REFS[1]}"/>
-              <tag k="highway" v="tertiary"/>
-            </way>
-            <relation id="{OSC_RESTRICTION}" version="2">
-              <member type="way" ref="{OSC_RETAGGED_WAY}" role="to"/>
-              <tag k="type" v="restriction"/>
-            </relation>
-          </modify>
-          <delete>
-            <way id="{OSC_CASCADED_WAY}" version="2"/>
-            <relation id="{OSC_MULTIPOLYGON}" version="2"/>
-          </delete>
-          <create>
-            <relation id="910000001" version="1">
-              <member type="way" ref="{OSC_RETAGGED_WAY}" role=""/>
-              <tag k="type" v="route"/>
-            </relation>
-          </create>
-        </osmChange>"""
-        import os as _os
+    )
+    osc = f"""<osmChange version="0.6">
+      <modify>
+        <way id="{OSC_RETAGGED_WAY}" version="2">
+          <nd ref="{OSC_RETAGGED_WAY_REFS[0]}"/><nd ref="{OSC_RETAGGED_WAY_REFS[1]}"/>
+          <tag k="highway" v="tertiary"/>
+        </way>
+        <relation id="{OSC_RESTRICTION}" version="2">
+          <member type="way" ref="{OSC_RETAGGED_WAY}" role="to"/>
+          <tag k="type" v="restriction"/>
+        </relation>
+      </modify>
+      <delete>
+        <way id="{OSC_CASCADED_WAY}" version="2"/>
+        <relation id="{OSC_MULTIPOLYGON}" version="2"/>
+      </delete>
+      <create>
+        <relation id="910000001" version="1">
+          <member type="way" ref="{OSC_RETAGGED_WAY}" role=""/>
+          <tag k="type" v="route"/>
+        </relation>
+      </create>
+    </osmChange>"""
+    p = os.path.join(root, "change.osc")
+    with open(p, "w") as f:
+        f.write(osc)
+    diff = read_osc_elements(spark, p).localCheckpoint(eager=True)
+    pipe.apply_changeset(diff, batch_id=1)
 
-        p = _os.path.join(root, "change.osc")
-        with open(p, "w") as f:
-            f.write(osc)
-        diff = read_osc_elements(spark, p).localCheckpoint(eager=True)
-        pipe.apply_changeset(diff, batch_id=1)
+    rels = pipe.relations.read().localCheckpoint(eager=True)
+    ways = pipe.ways.read()
+    # maintained-vs-scratch mismatches, both indexes
+    m_nw = {
+        (r.id, tuple(r.way_ids)) for r in pipe.node_ways.read().collect()
+    }
+    s_nw = {
+        (r.id, tuple(r.way_ids))
+        for r in OsmReplicationPipeline._index_rows(node_way_index(ways)).collect()
+    }
+    m_mr = {
+        (r.id, tuple(r.relation_ids)) for r in pipe.member_rels.read().collect()
+    }
+    s_mr = {
+        (r.id, tuple(r.relation_ids))
+        for r in OsmReplicationPipeline._rel_index_rows(
+            OsmReplicationPipeline._rel_pairs(rels)
+        ).collect()
+    }
+    idx_mismatch = len(m_nw ^ s_nw) + len(m_mr ^ s_mr)
+    # derived-vs-rebuild mismatches, both derived tables
+    from ..sources.osm import assemble_way_geometries
 
-        rels = pipe.relations.read().localCheckpoint(eager=True)
-        ways = pipe.ways.read()
-        # maintained-vs-scratch mismatches, both indexes
-        m_nw = {
-            (r.id, tuple(r.way_ids)) for r in pipe.node_ways.read().collect()
-        }
-        s_nw = {
-            (r.id, tuple(r.way_ids))
-            for r in OsmReplicationPipeline._index_rows(node_way_index(ways)).collect()
-        }
-        m_mr = {
-            (r.id, tuple(r.relation_ids)) for r in pipe.member_rels.read().collect()
-        }
-        s_mr = {
-            (r.id, tuple(r.relation_ids))
-            for r in OsmReplicationPipeline._rel_index_rows(
-                OsmReplicationPipeline._rel_pairs(rels)
-            ).collect()
-        }
-        idx_mismatch = len(m_nw ^ s_nw) + len(m_mr ^ s_mr)
-        # derived-vs-rebuild mismatches, both derived tables
-        from ..sources.osm import assemble_way_geometries
-
-        d_w = {(r.id, r.n_pts) for r in pipe.derived.read().collect()}
-        want_w = {
-            (r.id, r.n_pts)
-            for r in derive(
-                assemble_way_geometries(pipe.nodes.read(), ways)
-            ).collect()
-        }
-        d_r = {(r.id, r.n_members) for r in pipe.derived_rels.read().collect()}
-        want_r = {(r.id, r.n_members) for r in derive_rels(rels).collect()}
-        derived_mismatch = len(d_w ^ want_w) + len(d_r ^ want_r)
-        rel_stats = rels.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("id").alias("s")
-        ).collect()[0]
-        # FK invariant after the cascade: the deleted way's metadata
-        # row is gone and no metadata gid references an absent way
-        meta_rows = meta.read()
-        orphans = (
-            meta_rows.join(ways.select(F.col("id").alias("gid")), "gid", "left_anti")
-            .count()
-        )
-        orphans += meta_rows.filter(F.col("gid") == OSC_CASCADED_WAY).count()
-        return {
-            "n_relations": rel_stats["n"],
-            "sum_relation_ids": int(rel_stats["s"]),
-            "n_index_entries": len(m_nw) + len(m_mr),
-            "idx_mismatch": idx_mismatch,
-            "derived_mismatch": derived_mismatch,
-            "n_derived_ways": len(d_w),
-            "sum_derived_pts": sum(p for _, p in d_w),
-            "n_derived_rels": len(d_r),
-            "sum_derived_members": sum(m for _, m in d_r),
-            "n_metadata": meta_rows.count(),
-            "metadata_orphans": orphans,
-        }
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    d_w = {(r.id, r.n_pts) for r in pipe.derived.read().collect()}
+    want_w = {
+        (r.id, r.n_pts)
+        for r in derive(
+            assemble_way_geometries(pipe.nodes.read(), ways)
+        ).collect()
+    }
+    d_r = {(r.id, r.n_members) for r in pipe.derived_rels.read().collect()}
+    want_r = {(r.id, r.n_members) for r in derive_rels(rels).collect()}
+    derived_mismatch = len(d_w ^ want_w) + len(d_r ^ want_r)
+    rel_stats = rels.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("id").alias("s")
+    ).collect()[0]
+    # FK invariant after the cascade: the deleted way's metadata
+    # row is gone and no metadata gid references an absent way
+    meta_rows = meta.read()
+    orphans = (
+        meta_rows.join(ways.select(F.col("id").alias("gid")), "gid", "left_anti")
+        .count()
+    )
+    orphans += meta_rows.filter(F.col("gid") == OSC_CASCADED_WAY).count()
+    return {
+        "n_relations": rel_stats["n"],
+        "sum_relation_ids": int(rel_stats["s"]),
+        "n_index_entries": len(m_nw) + len(m_mr),
+        "idx_mismatch": idx_mismatch,
+        "derived_mismatch": derived_mismatch,
+        "n_derived_ways": len(d_w),
+        "sum_derived_pts": sum(p for _, p in d_w),
+        "n_derived_rels": len(d_r),
+        "sum_derived_members": sum(m for _, m in d_r),
+        "n_metadata": meta_rows.count(),
+        "metadata_orphans": orphans,
+    }
 
 
 # Golden census for the full replication pipeline run (fixture

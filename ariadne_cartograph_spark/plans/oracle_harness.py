@@ -160,7 +160,6 @@ def run_catalog_parity(
 ) -> list[ParityReport]:
     from .catalog import REGISTRY, get_queries
 
-    from ..operators.dedup import release_caches
     from ..session import release_session_state
 
     get_queries()  # force module load
@@ -180,9 +179,8 @@ def run_catalog_parity(
                 ))
             else:
                 reports.append(compare(name, df, entry.oracle, sf_dir, con=con))
-            # near-dup builders persist shingle frames; release between
-            # queries so a 78-entry sweep doesn't accumulate caches
-            release_caches()
+            # release per-entry state (shingle caches, temp views,
+            # unkeyed work directories) so a sweep doesn't accumulate it
             release_session_state(spark)
     finally:
         con.close()

@@ -43,7 +43,7 @@ def _node_names(plan: str) -> list[str]:
 
 
 def audit(sf_dir: str) -> list[dict]:
-    from ..session import get_spark
+    from ..session import get_spark, release_session_state
     from .catalog import get_queries
 
     spark = get_spark("plan-audit")
@@ -76,9 +76,7 @@ def audit(sf_dir: str) -> list[dict]:
         except Exception as exc:  # noqa: BLE001 - audit must finish
             rows.append({"name": name, "err": f"{type(exc).__name__}: {exc}"[:200]})
         finally:
-            from ..operators.dedup import release_caches
-
-            release_caches()
+            release_session_state(spark)
     return rows
 
 

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.money import money, money_sum
+from ..session import work_dir
 from ..sources.tables import load_table
 from .catalog import register
 
@@ -1417,8 +1418,6 @@ def merge_upsert_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest. Hash-identical to the layout-free oracle — the bucketing
     is purely physical (the 100 TB MERGE posture: O(touched buckets)
     per batch, not O(table))."""
-    import tempfile
-
     from ..operators.merge import ParquetMergeTable
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1433,7 +1432,7 @@ def merge_upsert_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = ParquetMergeTable(
         spark,
-        tempfile.mkdtemp(prefix="acs_merge_bucketed_"),
+        work_dir(),
         key="gid",
         n_buckets=16,
     )
@@ -1470,8 +1469,6 @@ def merge_optimize_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned here). Clustering keys are integers on purpose: manifest
     stats persist JSON scalars, so a timestamp clusters via its epoch-
     day derivation — the standard lakehouse date-partition-key move."""
-    import tempfile
-
     from ..operators.merge import ParquetMergeTable
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1484,7 +1481,7 @@ def merge_optimize_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = ParquetMergeTable(
         spark,
-        tempfile.mkdtemp(prefix="acs_merge_optimize_"),
+        work_dir(),
         key="gid",
         stats_cols=["o_day"],
     )
@@ -1529,8 +1526,6 @@ def merge_stats_metadata_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computing the same statistics relationally from the
     derivation. The 100 TB story: "how many rows, what date range" is
     a catalog lookup, not a cluster job."""
-    import tempfile
-
     from ..operators.merge import ParquetMergeTable
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1545,7 +1540,7 @@ def merge_stats_metadata_only(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = ParquetMergeTable(
         spark,
-        tempfile.mkdtemp(prefix="acs_merge_statsonly_"),
+        work_dir(),
         key="gid",
         n_buckets=8,
         stats_cols=["o_day"],
@@ -1609,14 +1604,12 @@ def merge_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot_change_feed precedent): multiplicative rounding lands on
     half-cent double boundaries where engines disagree. Summary keyed
     by change type with an exact key checksum pinning membership."""
-    import tempfile
-
     from ..operators.merge import ParquetMergeTable
 
     orders = load_table(spark, sf_dir, "orders")
     t = ParquetMergeTable(
         spark,
-        tempfile.mkdtemp(prefix="acs_merge_cdf_"),
+        work_dir(),
         key="gid",
         retain_versions=5,
     )
@@ -1715,8 +1708,6 @@ def merge_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays all four snapshot derivations relationally and
     runs the same reconstruction. Summary keyed by (v_from, v_to) with
     an exact key checksum pinning interval membership."""
-    import tempfile
-
     from ..operators.merge import ParquetMergeTable
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1729,7 +1720,7 @@ def merge_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = ParquetMergeTable(
         spark,
-        tempfile.mkdtemp(prefix="acs_merge_scd2_"),
+        work_dir(),
         key="gid",
         retain_versions=8,
     )

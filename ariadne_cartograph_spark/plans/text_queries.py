@@ -1577,9 +1577,10 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SAME oracle as the batch entry. The production shape for model-state
 # maintenance over an append-only embedding store: d² driver state,
 # retrain without replaying history. Two staged files give two
-# micro-batches, the fewest that still exercise the accumulation; the
-# stage, checkpoint and partial store are removed before returning (the
-# returned plan reads the table, not the stage).
+# micro-batches, the fewest that still exercise the accumulation. The
+# stage is a keyed work directory, built once per input; the checkpoint
+# and partial store get a fresh unkeyed one per call, since a reused
+# checkpoint would see no new files and fold an empty Gram.
 # --------------------------------------------------------------------------
 
 
@@ -1590,19 +1591,16 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_stream_pca_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from ..operators.pca import power_iteration, project_direction
+    from ..session import work_dir
     from ..streaming.pca import stage_embeddings_as_stream_source, streaming_gram
 
-    work = tempfile.mkdtemp(prefix="acs_stream_pca_")
-    try:
-        stage = os.path.join(work, "stage")
-        stage_embeddings_as_stream_source(spark, sf_dir, stage, n_files=2)
-        G = streaming_gram(spark, stage, os.path.join(work, "stream"))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    stage = work_dir(
+        ("pca_stage", os.path.abspath(sf_dir)),
+        lambda d: stage_embeddings_as_stream_source(spark, sf_dir, d, n_files=2),
+    )
+    G = streaming_gram(spark, stage, work_dir())
     p = power_iteration(G)
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     return project_direction(emb, ["vec_id", "label"], "embedding", p).orderBy(
@@ -2109,8 +2107,7 @@ def docs_incremental_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     computes directly from the exhaustive pair join. Hash-equality here
     covers both the incremental state machinery AND perfect LSH recall
     at b=8/r=4 on this corpus."""
-    import tempfile
-
+    from ..session import work_dir
     from ..streaming.docs import incremental_near_dup_filter
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2137,7 +2134,7 @@ def docs_incremental_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame
         (F.col("doc_id") > b2) & (F.col("doc_id") <= b3),
         F.col("doc_id") > b3,
     ]
-    store = tempfile.mkdtemp(prefix="acs_inc_dedup_")
+    store = work_dir()
     kept_frames = []
     for pred in ranges:
         batch = docs.filter(pred)
@@ -2594,9 +2591,10 @@ ORDER BY n_occurrences DESC, tok LIMIT {_HH_K}
 """,
 )
 def docs_stream_topk_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
+    import os
     import uuid
 
+    from ..session import work_dir
     from ..streaming.events import run_to_memory
     from ..streaming.sketch import (
         read_docs_stream,
@@ -2604,8 +2602,10 @@ def docs_stream_topk_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage_docs_as_stream_source,
     )
 
-    stage = tempfile.mkdtemp(prefix="acs_stream_topk_")
-    stage_docs_as_stream_source(spark, sf_dir, stage, n_files=4)
+    stage = work_dir(
+        ("docs_stage", os.path.abspath(sf_dir)),
+        lambda d: stage_docs_as_stream_source(spark, sf_dir, d, n_files=4),
+    )
     name = f"stream_topk_{uuid.uuid4().hex[:8]}"
     run_to_memory(
         running_token_sketch(read_docs_stream(spark, stage)),

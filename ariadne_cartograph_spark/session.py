@@ -15,7 +15,13 @@ and for the 100 TB design posture described in SURVEY.md §4:
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import itertools
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -56,21 +62,82 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def release_session_state(spark: SparkSession) -> None:
-    """Drop this session's temporary views — between sweep entries.
+# The one place the package writes files (apart from the cross-process
+# OSM fixture): a private per-process root, made on first use and
+# removed at exit by the process that made it. Keyed directories sit
+# directly under it; unkeyed ones sit under ``run/``, which
+# release_session_state removes.
+_ROOT: str | None = None
+_SEQ = itertools.count()
 
-    Streaming parity entries drain availableNow memory sinks into
-    uuid-named temp views that stay registered (rows pinned in driver
-    memory) after the entry collects them; across a 162-entry sweep or
-    a min-of-N bench loop that is real heap pressure. Harness-only:
-    every caller (scale_rehearsal, run_catalog_parity, ab_entry, bench)
-    owns its session and recreates any view it needs per entry."""
+
+def _root() -> str:
+    global _ROOT
+    if _ROOT is None:
+        root = _ROOT = tempfile.mkdtemp(prefix="acs_work_")
+        pid = os.getpid()
+
+        def _remove() -> None:
+            if os.getpid() == pid:  # not in a forked child
+                shutil.rmtree(root, ignore_errors=True)
+
+        atexit.register(_remove)
+    return _ROOT
+
+
+def work_dir(key: object = None, build: Callable[[str], None] | None = None) -> str:
+    """A directory under this process's private work root.
+
+    With ``key`` (any value with a stable ``repr``) the directory is a
+    pure function of that key: the first call in the process runs
+    ``build(scratch)`` on an empty scratch directory and renames it into
+    place, so it is published only when complete and a ``build`` that
+    raises leaves nothing behind. Later calls return it without
+    building. It lasts as long as the process.
+
+    Without ``key`` each call returns a fresh empty directory, for
+    callers that write to it; release_session_state removes it."""
+    root = _root()
+    if key is None:
+        path = os.path.join(root, "run", str(next(_SEQ)))
+        os.makedirs(path)
+        return path
+    path = os.path.join(root, hashlib.sha256(repr(key).encode()).hexdigest()[:16])
+    if not os.path.isdir(path):
+        scratch = os.path.join(root, f"build_{next(_SEQ)}")
+        os.makedirs(scratch)
+        try:
+            build(scratch)
+        except BaseException:
+            shutil.rmtree(scratch, ignore_errors=True)
+            raise
+        os.rename(scratch, path)
+    return path
+
+
+def release_session_state(spark: SparkSession) -> None:
+    """Free what one catalog entry leaves behind — between sweep entries
+    or bench repeats.
+
+    Three kinds of per-run state: the shingle frames the near-dup
+    builders persist (``dedup.release_caches``); the uuid-named temp
+    views that streaming parity entries drain their memory sinks into,
+    whose rows stay pinned in driver memory; and every unkeyed
+    :func:`work_dir` (merge tables, band stores, replication roots,
+    stream checkpoints). Keyed work directories (staged inputs) stay
+    for the rest of the process. Call it only after the entry's result
+    has been consumed: a returned plan may still read those files."""
+    from .operators.dedup import release_caches
+
+    release_caches()
     try:
         for t in spark.catalog.listTables():
             if t.isTemporary:
                 spark.catalog.dropTempView(t.name)
     except Exception:
         pass
+    if _ROOT is not None:
+        shutil.rmtree(os.path.join(_ROOT, "run"), ignore_errors=True)
 
 
 def get_spark(

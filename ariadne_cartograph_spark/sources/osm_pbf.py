@@ -513,29 +513,27 @@ def write_pbf_sharded(
     return src.mapInPandas(enc, "path string, n_elements long")
 
 
-def ensure_pbf_fixture(xml_path: str, cache_dir: str = "/tmp/acs_pbf_cache") -> str:
-    """Deterministically transcode an OSM XML file to PBF once, cached
-    by (name, mtime, size) — used by the PBF parity entry and tests so
-    the read path exercises a real multi-block file without shipping a
-    second fixture."""
+def ensure_pbf_fixture(xml_path: str) -> str:
+    """Deterministically transcode an OSM XML file to PBF once per
+    process and content (a work directory keyed by the bytes' sha256) —
+    used by the PBF parity entry and tests so the read path exercises a
+    real multi-block file without shipping a second fixture."""
+    import hashlib
+    import io
     import os
 
+    from ..session import work_dir
     from .osm import _iter_osm_rows
 
-    st = os.stat(xml_path)
-    name = os.path.basename(xml_path)
-    out = os.path.join(
-        cache_dir, f"{name}-{int(st.st_mtime)}-{st.st_size}.osm.pbf"
-    )
-    if os.path.exists(out):
-        return out
-    os.makedirs(cache_dir, exist_ok=True)
-    tmp = out + f".tmp{os.getpid()}"
     with open(xml_path, "rb") as f:
-        rows = list(_iter_osm_rows(f))
-    write_pbf(rows, tmp, block_elements=1000)
-    os.replace(tmp, out)  # atomic under concurrent creators
-    return out
+        data = f.read()
+
+    def build(d: str) -> None:
+        rows = list(_iter_osm_rows(io.BytesIO(data)))
+        write_pbf(rows, os.path.join(d, "fixture.osm.pbf"), block_elements=1000)
+
+    key = ("pbf", hashlib.sha256(data).hexdigest())
+    return os.path.join(work_dir(key, build), "fixture.osm.pbf")
 
 
 # ---------------------------------------------------------------------------

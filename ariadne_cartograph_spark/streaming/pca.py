@@ -29,8 +29,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -55,7 +53,7 @@ def stage_embeddings_as_stream_source(
 def streaming_gram(
     spark: SparkSession,
     stage_dir: str,
-    work_dir: str | None = None,
+    work_dir: str,
     q_scale: int = Q_SCALE,
     fail_at_batch: int | None = None,
 ) -> list[list[int]]:
@@ -64,16 +62,11 @@ def streaming_gram(
     micro-batch). The checkpoint and the per-batch partial store live
     under ``work_dir``; calling again with the same ``work_dir`` after a
     crash resumes the stream and returns the same Gram as a clean run.
-    With ``work_dir=None`` a temporary directory is used and removed on
-    return.
 
     ``fail_at_batch``: test hook — raise AFTER writing that batch's
     partial (the hard case: state persisted, commit lost)."""
     from pyspark.sql import functions as F
 
-    own = work_dir is None
-    if own:
-        work_dir = tempfile.mkdtemp(prefix="acs_pca_stream_")
     store = os.path.join(work_dir, "gram")
     os.makedirs(store, exist_ok=True)
 
@@ -88,21 +81,17 @@ def streaming_gram(
         if fail_at_batch is not None and batch_id == fail_at_batch:
             raise RuntimeError(f"injected crash after batch {batch_id}")
 
-    try:
-        q = (
-            spark.readStream.schema(_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage_dir)
-            .writeStream.foreachBatch(_process)
-            .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return _fold_store(store)
-    finally:
-        if own:
-            shutil.rmtree(work_dir, ignore_errors=True)
+    q = (
+        spark.readStream.schema(_STREAM_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage_dir)
+        .writeStream.foreachBatch(_process)
+        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return _fold_store(store)
 
 
 def _fold_store(store: str) -> list[list[int]]:

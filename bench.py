@@ -88,8 +88,6 @@ def main() -> int:
             except Exception:
                 pass
 
-    from ariadne_cartograph_spark.operators.dedup import release_caches
-
     # Load-aware repeats (r8 verdict: a +3.9% drift on a ZERO-line diff
     # could only be diagnosed by hand). Each query runs `repeats` times
     # and records the MIN — the machine-load-independent number — plus
@@ -115,15 +113,13 @@ def main() -> int:
             except Exception as exc:
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                 print(f"# ERROR {name}: {errors[name]}", file=sys.stderr)
-                release_caches()
                 release_session_state(spark)
                 runs = []
                 break
             runs.append(round(time.time() - t0, 3))
-            # Near-dup builders persist their shingle frames; release
-            # them between runs so each run measures the query cold
-            # rather than accumulating cached partitions.
-            release_caches()
+            # Release per-run state (persisted shingle frames, temp
+            # views, unkeyed work directories) between runs, so each run
+            # measures the query cold rather than accumulating caches.
             release_session_state(spark)
         if not runs:
             continue

@@ -149,7 +149,7 @@ def test_deleted_way_flows_through(base, spark, tmp_path):
     assert inc["rebuilt"].filter(F.col("id") == RETAGGED_WAY).count() == 0
 
 
-def test_affected_relation_ids(base, diff, spark):
+def test_affected_relation_ids(base, diff, spark, tmp_path):
     """Relation blast radius: the fixture's turn restriction RESTRICTION
     has the retagged way as its to-member; multipolygon MULTIPOLYGON is
     flagged iff its member way MULTIPOLYGON_WAY is touched."""
@@ -165,8 +165,7 @@ def test_affected_relation_ids(base, diff, spark):
         <tag k="building" v="yes"/></way></modify>
       <delete><relation id="{DELETED_ROUTE}" version="2"/></delete>
     </osmChange>"""
-    import tempfile, os
-    p = os.path.join(tempfile.mkdtemp(), "mp.osc")
+    p = str(tmp_path / "mp.osc")
     open(p, "w").write(osc)
     d2 = read_osc_elements(spark, p)
     aff2 = {r.relation_id for r in affected_relation_ids(d2, relations).collect()}

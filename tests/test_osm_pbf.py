@@ -130,12 +130,12 @@ def test_sharded_export_roundtrip(spark, tmp_path, osm_fixture, osm_doc):
     b.unpersist()
 
 
-def test_ensure_pbf_fixture_caches(tmp_path, osm_fixture):
-    p1 = P.ensure_pbf_fixture(osm_fixture, cache_dir=str(tmp_path))
+def test_ensure_pbf_fixture_caches(osm_fixture):
     import os
 
+    p1 = P.ensure_pbf_fixture(osm_fixture)
     mtime = os.path.getmtime(p1)
-    p2 = P.ensure_pbf_fixture(osm_fixture, cache_dir=str(tmp_path))
+    p2 = P.ensure_pbf_fixture(osm_fixture)
     assert p1 == p2 and os.path.getmtime(p2) == mtime  # no re-encode
 
 

@@ -38,7 +38,6 @@ def main() -> int:
     repeats = int(sys.argv[3]) if len(sys.argv) > 3 else 5
     mode = sys.argv[4] if len(sys.argv) > 4 else "count"
 
-    from ariadne_cartograph_spark.operators.dedup import release_caches
     from ariadne_cartograph_spark.session import release_session_state
     from ariadne_cartograph_spark.plans.catalog import REGISTRY, get_queries
     from ariadne_cartograph_spark.session import get_spark
@@ -62,7 +61,6 @@ def main() -> int:
         df = fn(spark, sf_dir)
         n = len(df.collect()) if mode == "collect" else df.count()
         runs.append(round(time.time() - t0, 3))
-        release_caches()
         release_session_state(spark)
         print(f"# run{i}: {runs[-1]}s ({n} rows)", file=sys.stderr)
     print(

