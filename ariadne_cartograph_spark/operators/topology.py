@@ -4,10 +4,11 @@ engine's analog of osm2pgrouting's `--addnodes` import
 vertices so every edge runs intersection→intersection, emit `ways`
 edges + vertices.
 
-Pure windows + aggregation (SURVEY.md's plan): count node occurrences
-across ways → intersection nodes → per-way running segment id →
-re-collect per (way, segment). No graph library, three shuffles total,
-each keyed (node_id / way_id) — scales like any wide agg.
+Pure windows + aggregation (SURVEY.md's plan), one shuffle per key: a
+window on node_id counts each node's occurrences and fetches its
+coordinates → intersection nodes → a window on way_id gives the running
+segment id → re-collect per (way, segment) on that same partitioning.
+No graph library, no join — scales like any wide agg.
 """
 
 from __future__ import annotations
@@ -188,54 +189,50 @@ def build_topology(nodes: DataFrame, ways: DataFrame) -> dict[str, DataFrame]:
     every edge. The attribute join keys on way_id — the same key the
     segment aggregation just shuffled on, so it co-locates.
     A node is a split point if it appears in >1 way or >1 time in one
-    way (self-intersection), or is a way endpoint.
+    way (self-intersection), or is a way endpoint. The split takes two
+    shuffles: a node_id window over refs ∪ node rows gives each ref its
+    occurrence count and its node's points (as an inner join would:
+    none if the node is absent, one per row if it is repeated); a
+    way_id window gives the running segment id, and the segment collect
+    rides it.
     """
-    rw = ways
-    refs = rw.select(
+    refs = ways.select(
         F.col("id").alias("way_id"),
         F.size("node_refs").alias("n_refs"),
         F.posexplode("node_refs").alias("pos", "node_id"),
     )
-    # occurrence count across all ways
-    occ = refs.groupBy("node_id").agg(F.count(F.lit(1)).alias("n_occ"))
+    node_pts = nodes.select(
+        F.col("id").alias("node_id"),
+        F.struct(F.col("lon").alias("lng"), F.col("lat").alias("lat")).alias("pt"),
+    )
+    by_node = W.partitionBy("node_id")
     marked = (
-        refs.join(occ, "node_id")
-        .withColumn(
-            "is_split",
-            (F.col("n_occ") > 1)
-            | (F.col("pos") == 0)
-            | (F.col("pos") == F.col("n_refs") - 1),
+        refs.unionByName(node_pts, allowMissingColumns=True)
+        .filter(F.col("node_id").isNotNull())
+        .select(
+            "way_id", "n_refs", "pos", "node_id",
+            F.count("pos").over(by_node).alias("n_occ"),
+            F.collect_list("pt").over(by_node).alias("pts"),
         )
+        .filter(F.col("pos").isNotNull())
     )
     # running segment id per way: a split vertex closes one segment and
-    # opens the next, so it belongs to both — emit it twice (as segment
-    # end and segment start) via the classic duplicate-on-boundary trick.
+    # opens the next, so it is exploded into both (seg_id - 1, seg_id).
+    # A ref to an absent node still splits; its row drops out only at
+    # the explode of its (empty) points, after the segment ids are set.
+    closes = ((F.col("n_occ") > 1) | (F.col("pos") == F.col("n_refs") - 1)) & (F.col("pos") > 0)
     w_ord = W.partitionBy("way_id").orderBy("pos").rowsBetween(W.unboundedPreceding, W.currentRow)
-    seg = marked.withColumn(
-        "seg_id", F.sum(F.when(F.col("is_split") & (F.col("pos") > 0), 1).otherwise(0)).over(w_ord)
-    )
-    as_end = seg.filter(F.col("is_split") & (F.col("pos") > 0)).withColumn(
-        "seg_id", F.col("seg_id") - 1
-    )
-    both = seg.unionByName(as_end)
-    pts = both.join(
-        nodes.select(F.col("id").alias("node_id"), "lon", "lat"), "node_id"
+    seg = F.col("seg_id")
+    pts = (
+        marked.withColumn("seg_id", F.sum(F.when(closes, 1).otherwise(0)).over(w_ord))
+        .withColumn("seg_id", F.explode(F.when(closes, F.array(seg - 1, seg)).otherwise(F.array(seg))))
+        .select("way_id", "seg_id", "pos", "node_id", F.explode("pts").alias("pt"))
     )
     edges = (
         pts.groupBy("way_id", "seg_id")
         .agg(
             F.transform(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(
-                            "pos",
-                            F.struct(
-                                F.col("lon").alias("lng"), F.col("lat").alias("lat")
-                            ).alias("pt"),
-                            F.col("node_id"),
-                        )
-                    )
-                ),
+                F.sort_array(F.collect_list(F.struct("pos", "pt", "node_id"))),
                 lambda s: F.struct(s["pt"].alias("pt"), s["node_id"].alias("node_id")),
             ).alias("seq")
         )

@@ -44,6 +44,7 @@ import functools
 import hashlib
 import os
 import random
+import stat
 import tempfile
 from dataclasses import dataclass
 
@@ -434,13 +435,28 @@ def ensure_osm_fixture() -> str:
     """Write the fixture once and return its path. The file name
     carries the first 16 hex digits of the bytes' sha256; the write
     goes to a private temporary name and publishes with ``os.replace``
-    (atomic under concurrent callers)."""
+    (atomic under concurrent callers).
+
+    The root's name is fixed, so it must be this user's and writable by
+    no one else (made with mode 0700), or this raises; a file already
+    there is returned only when its bytes are the fixture's, and is
+    rewritten otherwise."""
     data = _fixture().data
     root = os.path.join(tempfile.gettempdir(), "acs_osm_fixture")
+    os.makedirs(root, mode=0o700, exist_ok=True)
+    st = os.lstat(root)
+    if not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid() or st.st_mode & 0o022:
+        raise PermissionError(
+            f"{root}: the OSM fixture root must be a directory owned by uid "
+            f"{os.getuid()} and not writable by group or others"
+        )
     path = os.path.join(root, f"fixture-{hashlib.sha256(data).hexdigest()[:16]}.osm")
-    if os.path.exists(path):
-        return path
-    os.makedirs(root, exist_ok=True)
+    try:
+        with open(path, "rb") as f:
+            if f.read() == data:
+                return path
+    except FileNotFoundError:
+        pass
     tmp = f"{path}.tmp{os.getpid()}"
     with open(tmp, "wb") as f:
         f.write(data)

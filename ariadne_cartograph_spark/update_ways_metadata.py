@@ -68,8 +68,10 @@ def load_ways(spark: SparkSession, src: str) -> DataFrame:
         from .sources.osm import read_osm_elements, split_elements
 
         t = split_elements(read_osm_elements(spark, src[len("osm:"):]))
-        edges = build_topology(t["nodes"], routable_ways(t["ways"]))["edges"]
-        return edges.select("gid", "geom")
+        # only id and refs: the edges' attribute join would parse the
+        # XML once more for columns this table drops
+        rw = routable_ways(t["ways"]).select("id", "node_refs")
+        return build_topology(t["nodes"], rw)["edges"].select("gid", "geom")
     return spark.read.parquet(src).select("gid", "geom")
 
 
@@ -90,9 +92,14 @@ def run(
     reference's authed high-res path (update_ways_metadata.py:88-89).
     Returns {column: row count} per provider."""
     names = list(dict.fromkeys(provider_names))
+    url_templates = url_templates or {}
+    stray = sorted(set(url_templates) - set(names))
+    if stray:
+        raise ValueError(
+            f"url template for {stray[0]!r}, which is not a provider of this run {names}"
+        )
     if not names:
         return {}
-    url_templates = url_templates or {}
     columns, providers = [], []
     for name in names:
         if name not in PROVIDERS:
@@ -115,18 +122,19 @@ def run(
     coords = None
     if len(names) > 1:
         coords = explode_way_coords(ways).localCheckpoint(eager=True)
-    # Materialize the enrichment ONCE: upsert references the frame
-    # twice (bucket census + merged write) and the row count a third
-    # time — without the checkpoint each reference would re-execute
-    # the whole sampling lineage, tile fetches included.
+    # Materialize the enrichment ONCE, in the row count's own job (a
+    # lazy checkpoint fills on its first action): upsert then reads
+    # the frame twice (bucket census + merged write) — without the
+    # checkpoint each read would re-execute the whole sampling
+    # lineage, tile fetches included.
     vals = enrich_ways(spark, ways, providers, coords=coords).toDF("gid", *columns)
-    vals = vals.localCheckpoint(eager=True)
+    vals = vals.localCheckpoint(eager=False)
+    n = vals.count()
     # the reference's ON CONFLICT DO UPDATE SET {columns}: columns of
     # providers not in this run are untouched
     ParquetMergeTable(spark, out_path, key="gid", n_buckets=n_buckets).upsert(
         vals, update_cols=columns
     )
-    n = vals.count()
     return {column: n for column in columns}
 
 

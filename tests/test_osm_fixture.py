@@ -6,6 +6,10 @@ or replay of the XML (tests/osm_census.py — no engine code)."""
 
 from __future__ import annotations
 
+import os
+import re
+import stat
+import tempfile
 import xml.etree.ElementTree as ET
 from collections import Counter
 
@@ -27,6 +31,30 @@ def test_generator_is_deterministic_and_counts_what_it_writes(osm_fixture):
     assert dict(got) == a.counts
     # several 1,000-element PBF blocks, within the real extract's size
     assert 3000 < sum(a.counts.values()) <= 7346
+
+
+def test_fixture_file_is_checked_before_reuse(tmp_path, monkeypatch):
+    """The fixture root has a fixed name under the temp directory, so a
+    file planted under the expected name is rewritten with the true
+    bytes, and a root others can write to is refused."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    root = tmp_path / "acs_osm_fixture"
+    path = ensure_osm_fixture()
+    assert os.path.dirname(path) == str(root)
+    assert stat.S_IMODE(os.stat(root).st_mode) & 0o077 == 0
+    with open(path, "wb") as f:
+        f.write(b"<osm/>")
+    assert ensure_osm_fixture() == path
+    with open(path, "rb") as f:
+        assert f.read() == generate().data
+    os.chmod(root, 0o777)
+    with pytest.raises(PermissionError, match=re.escape(str(root))):
+        ensure_osm_fixture()
+    os.chmod(root, 0o700)
+    uid = os.getuid()
+    monkeypatch.setattr(os, "getuid", lambda: uid + 1)  # another user's root
+    with pytest.raises(PermissionError, match=re.escape(str(root))):
+        ensure_osm_fixture()
 
 
 def test_fixture_element_mix(osm_doc):

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from ariadne_cartograph_spark.operators.spatial import assign_pois_to_edges
 from ariadne_cartograph_spark.operators.topology import build_topology, routable_ways
 from ariadne_cartograph_spark.sources.osm import read_osm_elements, split_elements
-from tests.osm_census import mercator, ring_area_m2
+from tests.osm_census import mercator, ring_area_m2, topology as census_topology
 
 
 @pytest.fixture(scope="module")
@@ -128,6 +128,69 @@ def test_topology_micro_fixture(spark):
     edges = build_topology(nodes, ways)["edges"].collect()
     segs = {(e.osm_way_id, e.source, e.target) for e in edges}
     assert segs == {(100, 1, 3), (100, 3, 4), (200, 5, 3), (200, 3, 6)}
+
+
+def test_topology_matches_census_edge_for_edge(topo, osm_doc):
+    """Every edge of the fixture's import equals the plain-Python split
+    of the XML (tests/osm_census.topology): same gid, endpoints and
+    vertex count, coordinates within the readers' 1e-7° grid."""
+    want = {e.gid: e for e in census_topology(osm_doc)}
+    got = {r.gid: r for r in topo["edges"].collect()}
+    assert len(got) == len(want) == 785
+    assert set(got) == set(want)
+    for gid, e in want.items():
+        r = got[gid]
+        assert (r.osm_way_id, r.seg_id, r.source, r.target) == (
+            e.way_id, e.seg, e.source, e.target
+        )
+        assert len(r.geom) == len(e.geom)
+        for p, (lng, lat) in zip(r.geom, e.geom):
+            assert abs(p.lng - lng) <= 1e-7 and abs(p.lat - lat) <= 1e-7
+
+
+def test_topology_edge_cases(spark):
+    """Hand-derived edges for the inputs a real extract throws at the
+    split: a closed ring, a self-intersection, a repeated consecutive
+    ref, refs to nodes absent from the file (at an end and inside),
+    and single-ref and empty ways. Node k sits at (k/1000, k/2000)."""
+    nodes = spark.createDataFrame(
+        [(k, k / 1000, k / 2000) for k in range(1, 15)],
+        "id long, lon double, lat double",
+    )
+    ways = spark.createDataFrame(
+        [
+            (1, [1, 2, 3, 4, 1]),       # closed ring; 2 and 3 are shared
+            (2, [5, 3, 6, 3, 7]),       # crosses itself at 3
+            (3, [7, 8, 8, 9]),          # 8 twice in a row
+            (4, [50, 2, 51, 10, 60]),   # 50, 51, 60 are not in the file
+            (5, [11]),                  # one ref
+            (6, []),                    # no refs
+            (7, [12, 52, 13]),          # 52 is absent and shared with 8
+            (8, [14, 52]),
+        ],
+        "id long, node_refs array<long>",
+    )
+    # way → [(seg, [node ids])]; a split node closes one segment and
+    # opens the next, absent nodes split but carry no vertex
+    want = {
+        1: [(0, [1, 2]), (1, [2, 3]), (2, [3, 4, 1])],
+        2: [(0, [5, 3]), (1, [3, 6, 3]), (2, [3, 7])],
+        3: [(0, [7, 8]), (1, [8, 8]), (2, [8, 9])],
+        # segments 50–2 and 10–60 keep one vertex each and drop out
+        4: [(1, [2, 10])],
+        # 52 splits way 7 into 12–52 and 52–13: no edge joins 12 to 13
+    }
+    got = {
+        (r.osm_way_id, r.seg_id): r
+        for r in build_topology(nodes, ways)["edges"].collect()
+    }
+    assert set(got) == {(w, s) for w, segs in want.items() for s, _ in segs}
+    for w, segs in want.items():
+        for s, nids in segs:
+            r = got[(w, s)]
+            assert r.gid == w * 65536 + s
+            assert (r.source, r.target) == (nids[0], nids[-1])
+            assert [(p.lng, p.lat) for p in r.geom] == [(k / 1000, k / 2000) for k in nids]
 
 
 def test_poi_assignment_micro(spark):

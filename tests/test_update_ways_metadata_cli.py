@@ -28,6 +28,21 @@ def test_load_ways_is_the_routable_import(spark, osm_fixture):
     assert set(ways.columns) == {"gid", "geom"}
 
 
+def test_load_ways_parses_the_xml_twice(spark, osm_fixture, spark_jobs):
+    """The import scans the parsed XML once for the ways' refs and once
+    for the nodes, and nothing else: the edge table it returns needs
+    no way attributes. It shuffles once per key (node_id, way_id), so
+    one collect runs two shuffle-map jobs and the result job."""
+    ways = load_ways(spark, f"osm:{osm_fixture}")
+    with spark_jobs() as probe:
+        ways.collect()  # also finalizes the adaptive plan
+    assert len(probe.jobs) == 3
+    plan = spark._jvm.PythonSQLUtils.explainString(ways._jdf.queryExecution(), "simple")
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("MapInPandas") == 2
+
+
 def test_run_mirrors_reference_main(spark, ways, street_grid, tmp_path):
     """reference main(): strava → popularity, gmaps → greenery, upserted
     ON CONFLICT; values normalized to [0,1] by the global max median
@@ -73,6 +88,35 @@ def test_unknown_provider_rejected(spark, ways, tmp_path):
     # validated before any work: the known provider was not committed
     assert ParquetMergeTable(spark, out, key="gid").history() == []
     assert set(PROVIDERS) == {"strava", "strava_highres", "gmaps"}
+
+
+def test_url_for_a_provider_not_in_the_run_rejected(spark, ways, tmp_path):
+    """A misspelt ``--url`` key must not quietly run offline."""
+    out = str(tmp_path / "wm_url")
+    with pytest.raises(ValueError, match="'stava'"):
+        run(spark, ways, out, ["strava"], url_templates={"stava": "http://x/${z}/${x}/${y}"})
+    assert ParquetMergeTable(spark, out, key="gid").history() == []
+
+
+def test_two_provider_run_jobs(spark, ways, tmp_path, spark_jobs, monkeypatch):
+    """One two-provider insert: the coords checkpoint, the enrichment
+    whose row count fills its lazy checkpoint, then the upsert, and no
+    job after the commit. An eager checkpoint adds a job."""
+    sc = spark.sparkContext
+    upsert, committed = ParquetMergeTable.upsert, []
+
+    def recording(self, *args, **kwargs):
+        out = upsert(self, *args, **kwargs)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        committed.extend(sc.statusTracker().getJobIdsForGroup(group))
+        return out
+
+    monkeypatch.setattr(ParquetMergeTable, "upsert", recording)
+    with spark_jobs() as probe:
+        run(spark, ways, str(tmp_path / "wm_jobs"), ["strava", "gmaps"])
+    assert len(probe.jobs) == 10
+    assert sorted(committed) == probe.jobs
 
 
 def test_duplicate_provider_names_enrich_once(spark, ways, street_grid, tmp_path):
