@@ -55,12 +55,6 @@ def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Co
     return n_stop.cast("double") / F.size(toks)
 
 
-def punct_ratio(text: Column | str) -> Column:
-    t = F.col(text) if isinstance(text, str) else text
-    n_punct = F.length(F.regexp_replace(t, r"[^\.,;:!\?'\"()\[\]{}-]", ""))
-    return n_punct.cast("double") / F.greatest(F.length(t), F.lit(1)).cast("double")
-
-
 def _bind(value: Column, body) -> Column:
     """Evaluate ``value`` ONCE per row and pass it to ``body`` as a
     bound lambda variable: transform(array(v), x -> body(x))[1].

@@ -17,8 +17,8 @@ Scale design (100 TB):
 - the dist/frontier frames are `localCheckpoint`-ed per round:
   iterative lineage otherwise grows O(rounds) and re-executes the
   whole prefix at every action (the classic iterative-Spark trap);
-- termination is frontier-emptiness — a driver-side `count()` on the
-  (shrinking) frontier, not on the full dist table;
+- termination is frontier-emptiness — a driver-side emptiness test
+  on the (shrinking) frontier, not a count of the full dist table;
 - `max_iter` bounds the sync rounds (graph diameter): street graphs
   are high-diameter, so production routing engines partition by region
   (contraction hierarchies etc. are out of scope — this is the exact
@@ -26,6 +26,9 @@ Scale design (100 TB):
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -56,22 +59,72 @@ def edge_adjacency(
     return fwd.unionByName(rev)
 
 
-def cost_adjacency(edges: DataFrame) -> DataFrame:
-    """Directed (u, v, w) adjacency from :func:`topology.edge_costs`
-    output: forward arcs at ``cost_s``; backward arcs only where
-    ``reverse_cost_s >= 0`` (pgRouting's ``-1`` marks oneway edges as
-    non-traversable backwards). This is the real cost model the
-    reference's enrichment exists to feed — per-class travel time, not
-    unit hops."""
-    fwd = edges.select(
-        F.col("source").alias("u"), F.col("target").alias("v"),
-        F.col("cost_s").alias("w"),
+def _merge(states: DataFrame, key: list[str]) -> DataFrame:
+    """One row per ``key``: the lexicographic minimum of (dist, *the
+    remaining columns in frame order), so equal-``dist`` states resolve
+    to the same row on every engine and partition order."""
+    rest = [c for c in states.columns if c not in key and c != "dist"]
+    return (
+        states.groupBy(*key)
+        .agg(F.min(F.struct("dist", *rest)).alias("s"))
+        .select(*key, "s.*")
     )
-    rev = edges.filter(F.col("reverse_cost_s") >= 0).select(
-        F.col("target").alias("u"), F.col("source").alias("v"),
-        F.col("reverse_cost_s").alias("w"),
+
+
+def _relax(
+    seed: DataFrame,
+    expand: Callable[[DataFrame], DataFrame],
+    key: list[str],
+    max_iter: int,
+) -> DataFrame:
+    """The frontier loop every search here runs. ``seed`` holds the
+    starting states: the ``key`` columns, then ``dist``, then any
+    payload in the order :func:`_merge` compares it.
+    ``expand(frontier)`` turns the last round's improved states into
+    candidate states of the same columns. Each round merges the
+    candidates per ``key``, keeps those strictly below every settled
+    ``dist`` and stops when none is left or after ``max_iter`` rounds.
+    Returns the merged state table, in the seed's columns.
+
+    ``rounds`` holds one ALREADY-MATERIALIZED improvement frame per
+    round; the running dist view is their lazy union (scanning
+    checkpointed leaves — no recompute, no per-round full-table
+    checkpoint action). The localCheckpoint and the emptiness test are
+    the only jobs of a round.
+    """
+    cols = seed.columns
+    frontier = seed.localCheckpoint(eager=True)
+    rounds = [frontier]
+    for _ in range(max_iter):
+        best = (
+            reduce(DataFrame.unionByName, rounds)
+            .groupBy(*key)
+            .agg(F.min("dist").alias("old"))
+        )
+        improved = (
+            _merge(expand(frontier).select(*cols), key)
+            .join(best, key, "left")
+            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
+            .select(*cols)
+            .localCheckpoint(eager=True)
+        )
+        if improved.isEmpty():
+            break
+        rounds.append(improved)
+        frontier = improved
+    return _merge(reduce(DataFrame.unionByName, rounds), key)
+
+
+def _step(adj: DataFrame, frontier: DataFrame, *carry: Column) -> DataFrame:
+    """One hop of vertex states (node_id, dist, hops) along every arc
+    (u, v, w) of ``adj`` leaving their vertex; ``carry`` columns of the
+    joined row ride along."""
+    return frontier.join(adj, frontier["node_id"] == adj["u"]).select(
+        *carry,
+        F.col("v").alias("node_id"),
+        (F.col("dist") + F.col("w")).alias("dist"),
+        (F.col("hops") + 1).alias("hops"),
     )
-    return fwd.unionByName(rev)
 
 
 def shortest_path_matrix(
@@ -96,55 +149,12 @@ def shortest_path_matrix(
     # lineage (ingest → topology → adjacency) per round — measured
     # 23.5 s → 5.0 s on the 12-round fixture BFS.
     adj = adj.localCheckpoint(eager=True)
-    spark = adj.sparkSession
-    seed = spark.createDataFrame(
+    seed = adj.sparkSession.createDataFrame(
         [(int(v), int(v), 0.0, 0) for v in source_vertices],
         "src long, node_id long, dist double, hops int",
-    ).localCheckpoint(eager=True)
-    rounds = [seed]
-    frontier = seed
-
-    def dist_view() -> DataFrame:
-        out = rounds[0]
-        for r in rounds[1:]:
-            out = out.unionByName(r)
-        return out
-
-    for _ in range(max_iter):
-        cand = (
-            frontier.join(adj, frontier["node_id"] == adj["u"])
-            .select(
-                F.col("src"),
-                F.col("v").alias("node_id"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-                (F.col("hops") + 1).alias("hops"),
-            )
-            .groupBy("src", "node_id")
-            .agg(F.min(F.struct("dist", "hops")).alias("s"))
-            .select(
-                "src", "node_id",
-                F.col("s.dist").alias("dist"), F.col("s.hops").alias("hops"),
-            )
-        )
-        best = dist_view().groupBy("src", "node_id").agg(F.min("dist").alias("old"))
-        improved = (
-            cand.join(best, ["src", "node_id"], "left")
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("src", "node_id", "dist", "hops")
-            .localCheckpoint(eager=True)
-        )
-        if improved.isEmpty():
-            break
-        rounds.append(improved)
-        frontier = improved
-    return (
-        dist_view()
-        .groupBy("src", "node_id")
-        .agg(F.min(F.struct("dist", "hops")).alias("s"))
-        .select(
-            "src", "node_id",
-            F.col("s.dist").alias("dist"), F.col("s.hops").alias("hops"),
-        )
+    )
+    return _relax(
+        seed, lambda f: _step(adj, f, F.col("src")), ["src", "node_id"], max_iter
     )
 
 
@@ -167,68 +177,18 @@ def shortest_paths_tracked(
     NULL predecessors and dist 0.
     """
     adj = adj.localCheckpoint(eager=True)  # persist the graph once
-    spark = adj.sparkSession
-    seed = spark.createDataFrame(
+    seed = adj.sparkSession.createDataFrame(
         [(int(v), 0.0, 0, None, None) for v in source_vertices],
         "node_id long, dist double, hops int, pred_node long, pred_edge long",
-    ).localCheckpoint(eager=True)
-    rounds = [seed]
-    frontier = seed
-
-    def dist_view() -> DataFrame:
-        out = rounds[0]
-        for r in rounds[1:]:
-            out = out.unionByName(r)
-        return out
-
-    for _ in range(max_iter):
-        cand = (
-            frontier.select(
-                F.col("node_id").alias("p_node"),
-                F.col("dist").alias("p_dist"),
-                F.col("hops").alias("p_hops"),
-            )
-            .join(adj, F.col("p_node") == adj["u"])
-            .select(
-                F.col("v").alias("node_id"),
-                (F.col("p_dist") + F.col("w")).alias("dist"),
-                (F.col("p_hops") + 1).alias("hops"),
-                F.col("p_node").alias("pred_node"),
-                F.col("edge_id").alias("pred_edge"),
-            )
-            .groupBy("node_id")
-            .agg(F.min(F.struct("dist", "hops", "pred_node", "pred_edge")).alias("s"))
-            .select(
-                "node_id",
-                F.col("s.dist").alias("dist"),
-                F.col("s.hops").alias("hops"),
-                F.col("s.pred_node").alias("pred_node"),
-                F.col("s.pred_edge").alias("pred_edge"),
-            )
-        )
-        best = dist_view().groupBy("node_id").agg(F.min("dist").alias("old"))
-        improved = (
-            cand.join(best, "node_id", "left")
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("node_id", "dist", "hops", "pred_node", "pred_edge")
-            .localCheckpoint(eager=True)
-        )
-        if improved.isEmpty():
-            break
-        rounds.append(improved)
-        frontier = improved
-    return (
-        dist_view()
-        .groupBy("node_id")
-        .agg(F.min(F.struct("dist", "hops", "pred_node", "pred_edge")).alias("s"))
-        .select(
-            "node_id",
-            F.col("s.dist").alias("dist"),
-            F.col("s.hops").alias("hops"),
-            F.col("s.pred_node").alias("pred_node"),
-            F.col("s.pred_edge").alias("pred_edge"),
-        )
     )
+
+    def expand(f: DataFrame) -> DataFrame:
+        return _step(
+            adj, f, F.col("node_id").alias("pred_node"),
+            F.col("edge_id").alias("pred_edge"),
+        )
+
+    return _relax(seed, expand, ["node_id"], max_iter)
 
 
 def reconstruct_paths(
@@ -246,6 +206,9 @@ def reconstruct_paths(
     Σ path lengths, and targets is the parallel batch dimension (the
     Spark-shaped form of a point query; a single OD lookup belongs in a
     serving engine, a million of them belong here).
+
+    Raises RuntimeError if a route has more than ``max_iter`` rows, so
+    a route is never returned without its source-side rows.
     """
     t = tracked.localCheckpoint(eager=True)
     spark = t.sparkSession
@@ -258,9 +221,12 @@ def reconstruct_paths(
         .localCheckpoint(eager=True)
     )
     emitted = []
-    for _ in range(max_iter):
-        if cursor.isEmpty():
-            break
+    while not cursor.isEmpty():
+        if len(emitted) == max_iter:
+            raise RuntimeError(
+                f"reconstruct_paths: a route is longer than max_iter={max_iter} "
+                "rows (raise max_iter)"
+            )
         emitted.append(
             cursor.select(
                 "target",
@@ -282,10 +248,7 @@ def reconstruct_paths(
         return spark.createDataFrame(
             [], "target long, seq long, node_id long, arrived_by_edge long, agg_cost double"
         )
-    out = emitted[0]
-    for e in emitted[1:]:
-        out = out.unionByName(e)
-    return out
+    return reduce(DataFrame.unionByName, emitted)
 
 
 def arc_table(edges_with_costs: DataFrame) -> DataFrame:
@@ -384,16 +347,10 @@ def restricted_shortest_paths(
     )
     # Seed arc states: every arc leaving a source (no previous arc →
     # no restriction can apply to the first hop).
-    seed = (
-        arcs.join(F.broadcast(src), arcs["u"] == src["node_id"])
-        .select(
-            "arc_id", "gid", "way_id", "v",
-            F.col("w").alias("dist"), F.lit(1).alias("hops"),
-        )
-        .localCheckpoint(eager=True)
+    seed = arcs.join(F.broadcast(src), arcs["u"] == src["node_id"]).select(
+        "arc_id", F.col("w").alias("dist"), F.lit(1).alias("hops"),
+        "gid", "way_id", "v",
     )
-    rounds = [seed]
-    frontier = seed
     # Pre-renamed "next arc" side: the frontier descends from `arcs`,
     # so joining back against it with shared column names would be an
     # ambiguous self-join.
@@ -406,15 +363,8 @@ def restricted_shortest_paths(
         F.col("w").alias("n_w"),
     )
 
-    def dist_view() -> DataFrame:
-        out = rounds[0]
-        for x in rounds[1:]:
-            out = out.unionByName(x)
-        return out
-
-    for _ in range(max_iter - 1):
+    def expand(frontier: DataFrame) -> DataFrame:
         f = frontier.select(
-            F.col("arc_id").alias("p_arc"),
             F.col("gid").alias("p_gid"),
             F.col("way_id").alias("p_way"),
             F.col("v").alias("at"),
@@ -440,62 +390,28 @@ def restricted_shortest_paths(
         )
         # only_<turn>: arriving on from_way at the via, the sole legal
         # departure way is o_to
-        step = (
-            step.join(
-                F.broadcast(only_r),
-                (F.col("p_way") == only_r["o_from"])
-                & (F.col("at") == only_r["o_via"]),
-                "left",
-            )
-            .filter(F.col("o_to").isNull() | (F.col("n_way") == F.col("o_to")))
-            .drop("o_from", "o_via", "o_to")
+        step = step.join(
+            F.broadcast(only_r),
+            (F.col("p_way") == only_r["o_from"])
+            & (F.col("at") == only_r["o_via"]),
+            "left",
+        ).filter(F.col("o_to").isNull() | (F.col("n_way") == F.col("o_to")))
+        return step.select(
+            F.col("n_arc").alias("arc_id"),
+            (F.col("p_dist") + F.col("n_w")).alias("dist"),
+            (F.col("p_hops") + 1).alias("hops"),
+            F.col("n_gid").alias("gid"),
+            F.col("n_way").alias("way_id"),
+            F.col("n_v").alias("v"),
         )
-        cand = (
-            step.select(
-                F.col("n_arc").alias("arc_id"),
-                F.col("n_gid").alias("gid"),
-                F.col("n_way").alias("way_id"),
-                F.col("n_v").alias("v"),
-                (F.col("p_dist") + F.col("n_w")).alias("dist"),
-                (F.col("p_hops") + 1).alias("hops"),
-            )
-            .groupBy("arc_id")
-            .agg(
-                F.first("gid").alias("gid"),
-                F.first("way_id").alias("way_id"),
-                F.first("v").alias("v"),
-                F.min_by(F.struct("dist", "hops"), "dist").alias("s"),
-            )
-            .select(
-                "arc_id", "gid", "way_id", "v",
-                F.col("s.dist").alias("dist"), F.col("s.hops").alias("hops"),
-            )
-        )
-        best = dist_view().groupBy("arc_id").agg(F.min("dist").alias("old"))
-        improved = (
-            cand.join(best, "arc_id", "left")
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("arc_id", "gid", "way_id", "v", "dist", "hops")
-            .localCheckpoint(eager=True)
-        )
-        if improved.isEmpty():
-            break
-        rounds.append(improved)
-        frontier = improved
-    node_best = (
-        dist_view()
-        .groupBy(F.col("v").alias("node_id"))
-        .agg(F.min_by(F.struct("dist", "hops"), "dist").alias("s"))
-        .select("node_id", F.col("s.dist").alias("dist"), F.col("s.hops").alias("hops"))
-    )
-    zero = src.select(
-        "node_id", F.lit(0.0).alias("dist"), F.lit(0).alias("hops")
-    )
-    return (
-        node_best.unionByName(zero)
-        .groupBy("node_id")
-        .agg(F.min_by(F.struct("dist", "hops"), "dist").alias("s"))
-        .select("node_id", F.col("s.dist").alias("dist"), F.col("s.hops").alias("hops"))
+
+    # the seed is the first round; gid, way_id and v are functions of
+    # arc_id, so the arc merge compares (dist, hops)
+    states = _relax(seed, expand, ["arc_id"], max_iter - 1)
+    zero = src.select("node_id", F.lit(0.0).alias("dist"), F.lit(0).alias("hops"))
+    return _merge(
+        states.select(F.col("v").alias("node_id"), "dist", "hops").unionByName(zero),
+        ["node_id"],
     )
 
 
@@ -509,57 +425,15 @@ def shortest_paths(
     Returns (node_id, dist, hops) for every vertex reached within
     ``max_iter`` rounds. With unit weights this is BFS and `hops` ==
     `dist`; with real weights it is Bellman-Ford (non-negative weights
-    assumed, as in road networks).
+    assumed, as in road networks). Equal-``dist`` routes report the
+    fewest hops.
     """
     # Persist the graph once (the GraphX pattern): every round joins
     # `adj`, and a lazy adjacency re-runs its ENTIRE upstream lineage
     # (ingest → topology → adjacency) per round — measured 23.5 s →
     # 5.0 s on the 12-round fixture BFS.
     adj = adj.localCheckpoint(eager=True)
-    spark = adj.sparkSession
-    seed = spark.createDataFrame(
+    seed = adj.sparkSession.createDataFrame(
         [(int(v), 0.0, 0) for v in source_vertices], "node_id long, dist double, hops int"
-    ).localCheckpoint(eager=True)
-    # `rounds` holds one ALREADY-MATERIALIZED improvement frame per
-    # iteration; the running dist view is their lazy union (scanning
-    # checkpointed leaves — no recompute, no per-round full-table
-    # checkpoint action). One localCheckpoint per round is the only job.
-    rounds = [seed]
-    frontier = seed
-
-    def dist_view() -> DataFrame:
-        out = rounds[0]
-        for r in rounds[1:]:
-            out = out.unionByName(r)
-        return out
-
-    for _ in range(max_iter):
-        cand = (
-            frontier.join(adj, frontier["node_id"] == adj["u"])
-            .select(
-                F.col("v").alias("node_id"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-                (F.col("hops") + 1).alias("hops"),
-            )
-            .groupBy("node_id")
-            .agg(F.min_by(F.struct("dist", "hops"), "dist").alias("s"))
-            .select("node_id", F.col("s.dist").alias("dist"), F.col("s.hops").alias("hops"))
-        )
-        # improved = candidates strictly better than any settled dist
-        best = dist_view().groupBy("node_id").agg(F.min("dist").alias("old"))
-        improved = (
-            cand.join(best, "node_id", "left")
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("node_id", "dist", "hops")
-            .localCheckpoint(eager=True)
-        )
-        if improved.isEmpty():
-            break
-        rounds.append(improved)
-        frontier = improved
-    return (
-        dist_view()
-        .groupBy("node_id")
-        .agg(F.min_by(F.struct("dist", "hops"), "dist").alias("s"))
-        .select("node_id", F.col("s.dist").alias("dist"), F.col("s.hops").alias("hops"))
     )
+    return _relax(seed, lambda f: _step(adj, f), ["node_id"], max_iter)

@@ -1069,6 +1069,20 @@ ORDER BY src
 """
 
 
+def _route_edges(spark: SparkSession, osm_path: str) -> DataFrame:
+    """The routable (source, target) edges of ``osm_path``, built once:
+    the source pick and the searches read this checkpoint instead of
+    each re-running ingest → topology, and the ways keep only their id
+    and refs, so the topology skips the attribute join."""
+    from ..operators.topology import build_topology, routable_ways
+    from ..sources.osm import read_osm_elements, split_elements
+
+    t = split_elements(read_osm_elements(spark, osm_path))
+    rw = routable_ways(t["ways"]).select("id", "node_refs")
+    edges = build_topology(t["nodes"], rw)["edges"]
+    return edges.select("source", "target").localCheckpoint(eager=True)
+
+
 @register("osm_route_cost_matrix", tags=["S8", "A5"], oracle=_ROUTE_MATRIX_ORACLE)
 def osm_route_cost_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Many-to-many reach census (pgr_dijkstraCostMatrix analog): one
@@ -1077,12 +1091,8 @@ def osm_route_cost_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     across sources (operators/routing.shortest_path_matrix). The VRP/
     logistics query shape the pgRouting import serves."""
     from ..operators.routing import edge_adjacency, shortest_path_matrix
-    from ..operators.topology import build_topology, routable_ways
-    from ..sources.osm import read_osm_elements, split_elements
 
-    t = split_elements(read_osm_elements(spark, _osm_path()))
-    edges = build_topology(t["nodes"], routable_ways(t["ways"]))["edges"]
-    adj = edge_adjacency(edges)
+    adj = edge_adjacency(_route_edges(spark, _osm_path()))
     vs = adj.select(F.col("u").alias("v")).distinct()
     srcs = [r.v for r in vs.orderBy("v").limit(3).collect()]
     m = shortest_path_matrix(adj, srcs, max_iter=10)
@@ -1108,15 +1118,10 @@ def osm_route_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     one vertex-keyed equi-join + min-merge per round, localCheckpointed
     improvement frames (no lineage blowup)."""
     from ..operators.routing import edge_adjacency, shortest_paths
-    from ..operators.topology import build_topology, routable_ways
-    from ..sources.osm import read_osm_elements, split_elements
 
-    t = split_elements(read_osm_elements(spark, _osm_path()))
-    edges = build_topology(t["nodes"], routable_ways(t["ways"]))["edges"]
-    src = edges.agg(
-        F.least(F.min("source"), F.min("target")).alias("v")
-    ).first()["v"]
-    reached = shortest_paths(edge_adjacency(edges), [int(src)], max_iter=12)
+    adj = edge_adjacency(_route_edges(spark, _osm_path()))
+    src = adj.agg(F.min("u")).first()[0]
+    reached = shortest_paths(adj, [int(src)], max_iter=12)
     return reached.agg(
         F.count(F.lit(1)).alias("n_reached"),
         F.max("hops").alias("max_hops"),

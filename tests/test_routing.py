@@ -102,7 +102,7 @@ def test_weighted_routing_with_class_costs(spark, topo_edges):
     seconds from the highway class carried onto every edge, oneway →
     reverse_cost -1) vs a pure-Python Dijkstra on the same cost table —
     the osm2pgrouting cost/reverse_cost consumption path."""
-    from ariadne_cartograph_spark.operators.routing import cost_adjacency
+    from ariadne_cartograph_spark.operators.routing import arc_table
     from ariadne_cartograph_spark.operators.topology import edge_costs
 
     ec = edge_costs(topo_edges).localCheckpoint(eager=True)
@@ -134,7 +134,9 @@ def test_weighted_routing_with_class_costs(spark, topo_edges):
 
     got = {
         r.node_id: r.dist
-        for r in shortest_paths(cost_adjacency(ec), [src], max_iter=60).collect()
+        for r in shortest_paths(
+            arc_table(ec).select("u", "v", "w"), [src], max_iter=60
+        ).collect()
     }
     assert set(got) == set(dist)
     for k, v in dist.items():
@@ -235,7 +237,28 @@ def test_straight_through_same_way_not_banned_by_uturn(spark):
     # but reversing at 2 back onto gid1 is not: node 1 only as source
 
 
-@pytest.mark.slow
+def test_equal_dist_ties_keep_the_fewest_hops(spark):
+    """Node 2 is reached at dist 2 both by the direct 1-hop edge 1-2
+    (w 2) and by 1-3-2 (w 1 + 1): every search reports the 1-hop
+    route, the lexicographic minimum of (dist, hops)."""
+    from ariadne_cartograph_spark.operators.routing import shortest_path_matrix
+
+    edges = spark.createDataFrame(
+        [(1, 2, 2.0), (1, 3, 1.0), (3, 2, 1.0)], "source long, target long, w double"
+    )
+    adj = edge_adjacency(edges, weight=F.col("w"))
+    got = {r.node_id: (r.dist, r.hops) for r in shortest_paths(adj, [1]).collect()}
+    assert got[2] == (2.0, 1)
+    m = {
+        (r.src, r.node_id): (r.dist, r.hops)
+        for r in shortest_path_matrix(adj, [1]).collect()
+    }
+    assert m[(1, 2)] == (2.0, 1)
+    arcs = _mini_arcs(spark, [(1, 100, 1, 2), (2, 200, 1, 3), (3, 300, 3, 2)])
+    arcs = arcs.withColumn("w", F.when(F.col("gid") == 1, 2.0).otherwise(F.col("w")))
+    assert _run(arcs, _restr(spark, []), 1)[2] == (2.0, 1)
+
+
 def test_fixture_restricted_matches_python_linegraph_dijkstra(
     spark, topo_edges, osm_fixture
 ):
@@ -337,7 +360,6 @@ def test_fixture_restricted_matches_python_linegraph_dijkstra(
         assert got[k] == pytest.approx(v, abs=1e-6), k
 
 
-@pytest.mark.slow
 def test_cost_matrix_matches_per_source_runs(spark, topo_edges):
     """shortest_path_matrix (pgr_dijkstraCostMatrix analog) must equal
     K independent shortest_paths runs — per-source state, not the
@@ -347,9 +369,6 @@ def test_cost_matrix_matches_per_source_runs(spark, topo_edges):
     )
 
     adj = edge_adjacency(topo_edges).localCheckpoint(eager=True)
-    srcs = sorted(
-        r.u for r in adj.select(F.min("u").alias("u")).collect()
-    )
     vs = sorted({r.u for r in adj.select("u").distinct().limit(200).collect()})
     srcs = [vs[0], vs[50], vs[150]]
     got = {
@@ -433,6 +452,57 @@ def test_tracked_route_reconstruction(spark, topo_edges):
             assert b.seq == a.seq + 1
             w = edge_w[(b.arrived_by_edge, a.node_id, b.node_id)]
             assert b.agg_cost == pytest.approx(a.agg_cost + w, abs=1e-9)
+
+
+def test_reconstruct_paths_refuses_a_truncated_route(spark):
+    """A route with more rows than ``max_iter`` raises instead of
+    coming back without its source-side rows; exactly ``max_iter``
+    rows is enough."""
+    from ariadne_cartograph_spark.operators.routing import (
+        reconstruct_paths,
+        shortest_paths_tracked,
+    )
+
+    # path 1-2-3-4-5: the route to 5 has 4 hops, 5 rows
+    edges = spark.createDataFrame(
+        [(g, g, g + 1) for g in range(1, 5)], "gid long, source long, target long"
+    )
+    tracked = shortest_paths_tracked(edge_adjacency(edges, edge_id="gid"), [1])
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        reconstruct_paths(tracked, [5], max_iter=2)
+    rows = sorted(
+        (r.seq, r.node_id) for r in reconstruct_paths(tracked, [5], max_iter=5).collect()
+    )
+    assert rows == [(i, i + 1) for i in range(5)]
+
+
+@pytest.mark.parametrize(
+    "entry, max_jobs",
+    [("osm_route_bfs_reach", 82), ("osm_route_cost_matrix", 72)],
+)
+def test_route_entry_builds_the_topology_once(spark, spark_jobs, entry, max_jobs):
+    """A routing entry parses the XML once for the ways' refs and once
+    for the nodes, in the one checkpoint of its edges: the source pick
+    and the searches read that checkpoint, and no way attribute is
+    joined. Parse nodes are counted in the final (adaptive) plans of
+    every SQL execution the call and its collect run."""
+    from ariadne_cartograph_spark.plans import geo_queries
+
+    with spark_jobs() as probe:
+        getattr(geo_queries, entry)(spark, "").collect()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    parse_nodes = 0
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if not any(e.jobs().contains(j) for j in probe.jobs):
+            continue
+        nodes = store.planGraph(e.executionId()).allNodes()
+        parse_nodes += sum(
+            nodes.apply(k).name() == "MapInPandas" for k in range(nodes.size())
+        )
+    assert parse_nodes == 2
+    assert len(probe.jobs) <= max_jobs
 
 
 def test_pagerank_directed_sinks_get_rank(spark):
